@@ -16,6 +16,7 @@ batch boundary (SURVEY.md §3.3).
 
 from __future__ import annotations
 
+import hashlib
 import importlib
 import uuid
 from dataclasses import dataclass, field
@@ -306,6 +307,12 @@ class PipelineExecution:
         # key re-ran a full Catalyst analysis per table per version)
         out_schema = self._infer_output_schema(
             table_id, self.pre.pruned_schema(table_id, in_schema))
+        # data idempotence marker, scoped by SOURCE table: under an N:1
+        # route every source table of the batch writes the same sink table,
+        # and each of those writes needs its own marker. Deterministic, so
+        # a real replay still hits it.
+        data_batch_id = "%s-%s" % (self._sink_batch_id(), hashlib.sha1(
+            str(table_id).encode()).hexdigest()[:10])
         for sink_tid in self.router.route(table_id):
             self._evolve_sink_table(sink_tid, out_schema)
             evolved = self.registry.evolved_schema(sink_tid)
@@ -324,7 +331,7 @@ class PipelineExecution:
                 keep_extra=(OP_COL, META_COL, SEQ_COL) + tz_extras)
             write_schema = evolved
             partitioned = pk_repartition(coerced, write_schema, self.parallelism)
-            self.sink.write(sink_tid, partitioned, write_schema, self._sink_batch_id())
+            self.sink.write(sink_tid, partitioned, write_schema, data_batch_id)
 
     # -- driver loop ------------------------------------------------------
     def run(self) -> "PipelineExecution":

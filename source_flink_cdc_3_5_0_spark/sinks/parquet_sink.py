@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..common.events import (DropTableEvent, OP_COL, SchemaChangeEvent,
                              TruncateTableEvent)
@@ -84,6 +84,14 @@ class ParquetUpsertSink(DataSink):
 
     _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
+    @staticmethod
+    def _file_schema(schema: Schema) -> T.StructType:
+        """Read schema of the data files: the evolved table schema plus the
+        bucket partition column. Files written before a widening or an ADD
+        COLUMN read through it (widened, null-filled) — mergeSchema would
+        refuse int and bigint files of one column."""
+        return schema.struct_type().add(_BUCKET_COL, T.LongType())
+
     def _bucket_of(self, df: DataFrame, pks: list[str]):
         # numeric single PK: portable multiplicative hash (oracle-checkable,
         # matches the PrePartition operator); any other key shape: Spark's
@@ -124,7 +132,7 @@ class ParquetUpsertSink(DataSink):
             else:
                 out.write.mode("append").parquet(data_dir)
         else:
-            self._merge(spark, df, data_dir, pks, names, batch_id)
+            self._merge(spark, df, data_dir, pks, names, schema)
         with open(marker, "w") as f:
             f.write("ok")
 
@@ -145,7 +153,7 @@ class ParquetUpsertSink(DataSink):
         w.partitionBy(_BUCKET_COL).parquet(data_dir)
 
     def _merge(self, spark: SparkSession, df: DataFrame, data_dir: str,
-               pks: list[str], names: list[str], batch_id: int) -> None:
+               pks: list[str], names: list[str], schema: Schema) -> None:
         from ..streaming.materialize import latest_image
 
         batch_final = latest_image(
@@ -163,21 +171,15 @@ class ParquetUpsertSink(DataSink):
         batch_final = batch_final.persist()
         try:
             touched = [r[0] for r in batch_final.select(_BUCKET_COL).distinct().collect()]
-            # mergeSchema + null-fill keeps post-evolution batches intact:
-            # existing files may predate an ADD COLUMN, so align BOTH sides
-            # to the evolved column list instead of current.columns (which
-            # would silently drop the new column's data).
-            current = (
-                spark.read.option("basePath", data_dir)
-                .option("mergeSchema", "true").parquet(data_dir)
-                .where(F.col(_BUCKET_COL).isin(touched))
-            )
             out_cols = names + [_BUCKET_COL]
-            have = set(current.columns)
-            aligned_current = current.select(*[
-                F.col(c) if c in have else F.lit(None).alias(c) for c in out_cols])
+            current = (
+                spark.read.schema(self._file_schema(schema))
+                .option("basePath", data_dir).parquet(data_dir)
+                .where(F.col(_BUCKET_COL).isin(touched))
+                .select(*out_cols)
+            )
             merged = (
-                aligned_current.join(batch_final.select(*pks), on=pks, how="left_anti")
+                current.join(batch_final.select(*pks), on=pks, how="left_anti")
                 .unionByName(
                     batch_final.where(F.col(OP_COL) != "-D").select(*out_cols),
                     allowMissingColumns=True)
@@ -245,20 +247,16 @@ class ParquetUpsertSink(DataSink):
         has_data = os.path.exists(data_dir) and any(
             files for _, _, files in os.walk(data_dir)
             for f in [files] if any(x.endswith(".parquet") for x in f))
-        if not has_data:
-            # fully-deleted (or never-written) table: empty frame with the
-            # evolved schema from the registry sidecar
+        # the evolved schema from the registry sidecar (absent when the
+        # sink is written without its metadata applier): older files widen
+        # and null-fill to it, and column order follows the registry
+        schema = None
+        if os.path.exists(self._schema_path(table_id)):
             with open(self._schema_path(table_id)) as f:
                 schema = Schema.from_json(f.read())
+        if not has_data:
+            # fully-deleted (or never-written) table: empty frame
             return spark.createDataFrame([], schema.struct_type())
-        df = spark.read.option("mergeSchema", "true").parquet(data_dir)
-        if _BUCKET_COL in df.columns:
-            df = df.drop(_BUCKET_COL)
-        # coerce to the evolved sidecar schema (older files null-fill
-        # post-evolution columns; column order follows the registry)
-        if os.path.exists(self._schema_path(table_id)):
-            from ..operators.schema_evolution import coercion_select
-
-            with open(self._schema_path(table_id)) as f:
-                df = coercion_select(df, Schema.from_json(f.read()))
-        return df
+        reader = (spark.read.schema(self._file_schema(schema)) if schema
+                  else spark.read)
+        return reader.parquet(data_dir).drop(_BUCKET_COL)

@@ -3,14 +3,16 @@
 Parity target: the reference's streaming pipeline (SURVEY.md §3.1/§3.3) —
 continuous change capture with exactly-once sink application. On Spark:
 
-- the change stream arrives as a ``readStream`` DataFrame of Debezium-JSON
-  records (Kafka in production; file-stream in tests — same code path);
+- the change stream arrives as a ``readStream`` DataFrame of JSON change
+  records in one ``ENVELOPES`` serialization, Debezium-JSON by default
+  (Kafka in production; file-stream in tests — same code path);
 - ``foreachBatch`` is the control loop: the driver decodes each micro-batch
   per table, applies transforms/routes, coerces to the evolved schema and
   hands the result to the sink with the micro-batch id;
 - exactly-once = Structured Streaming checkpoint (source offsets) + the
-  sink's idempotence per (table, batch_id) — on restart the last batch is
-  re-delivered and skipped by the sink's marker (see ParquetUpsertSink);
+  sink's idempotence per (sink table, batch id scoped by source table) —
+  on restart the last batch is re-delivered and skipped by the sink's
+  marker (see ParquetUpsertSink);
 - schema changes happen *between* micro-batches, the natural FlushEvent
   barrier (§3.3): before processing, each batch's decoded frame is checked
   against the registry's original schema and the evolution path runs first.
@@ -21,23 +23,167 @@ all Catalyst plans; the driver does O(tables) bookkeeping only.
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
 
-from ..common.events import CreateTableEvent, OP_COL, META_COL
+from ..common.events import CreateTableEvent
 from ..common.schema import Schema
 from ..common.tableid import TableId
-from ..operators.partitioning import pk_repartition
 from ..operators.route import TableIdRouter
-from ..operators.schema_evolution import SchemaChangeBehavior, coercion_select
+from ..operators.schema_evolution import SchemaChangeBehavior
 from ..operators.schema_registry import SchemaRegistry
 from ..operators.transform import PostTransform, PreTransform
 from ..pipeline.composer import PipelineExecution
 from ..sinks.base import DataSink
-from ..sources.base import SEQ_COL
-from ..sources.debezium import decode_debezium
+from ..sources.base import SEQ_COL, ChangeBatch, attach_envelope
+from ..sources.db2 import decode_db2_cdc
+from ..sources.debezium import decode_canal, decode_debezium
+from ..sources.legacy_offsets import Lsn, LsnOffset, RedoLogOffset
+from ..sources.mongodb import (ChangeStreamOffset, _cluster_time_cols,
+                               decode_mongo_changestream)
+from ..sources.mysql_binlog import BinlogOffset
+from ..sources.pgoutput import PostgresOffset
+from ..sources.sqlserver import decode_sqlserver_cdc
+from ..sources.vitess import (StopOnReshardHalt, VitessStreamState,
+                              decode_vstream, fold_vstream_batch)
+
+_get = F.get_json_object
+
+
+@dataclass(frozen=True)
+class Envelope:
+    """Where one serialization keeps a record's coordinates, and how its
+    rows decode. Paths are JSON paths into the raw value; ``None`` means the
+    format has no such coordinate."""
+
+    db: str
+    schema: str | None
+    table: str
+    image: tuple[str, ...]  # row image: the first of these that is set
+    decode: Callable[[DataFrame, Schema, str], DataFrame]
+    # document whose field names are the primary keys (mid-stream
+    # discovery: without them a discovered table has no PK, key-only
+    # deletes can't upsert-match, and the sink appends forever)
+    key: str | None = None
+    # the stream carries Vitess VGTIDs: the runner folds them into a
+    # resumable vector offset and honours stop-on-reshard
+    vgtid: bool = False
+
+    def probes(self, value_col: str) -> tuple[Column, Column, Column, Column]:
+        """(db, schema, table, image) probes — the ONE place that knows the
+        envelope's layout; both the routing projection (`enrich_batch`)
+        and mid-stream discovery derive from it (a probe mismatch between
+        them silently drops events)."""
+        v = F.col(value_col)
+
+        def at(path):
+            return _get(v, path) if path else F.lit(None).cast("string")
+        return (at(self.db), at(self.schema), at(self.table),
+                F.coalesce(*[at(p) for p in self.image]))
+
+
+_DBZ_IMAGE = ("$.after", "$.before")
+
+#: serialization -> envelope. The debezium decode resolves the module
+#: global at call time, so a wrapper installed on it is honoured.
+ENVELOPES: dict[str, Envelope] = {
+    "debezium-json": Envelope(
+        "$.source.db", "$.source.schema", "$.source.table", _DBZ_IMAGE,
+        lambda raw, s, vc: decode_debezium(raw, s.struct_type(), vc)),
+    "canal-json": Envelope(
+        "$.database", None, "$.table", ("$.data[0]",),
+        lambda raw, s, vc: decode_canal(raw, s.struct_type(), vc)),
+    # change-table capture lines: {"db","schema","table","row"}
+    "sqlserver-cdc-json": Envelope(
+        "$.db", "$.schema", "$.table", ("$.row",),
+        lambda raw, s, vc: decode_sqlserver_cdc(raw, s.struct_type(), vc)),
+    "db2-cdc-json": Envelope(
+        "$.db", "$.schema", "$.table", ("$.row",),
+        lambda raw, s, vc: decode_db2_cdc(raw, s.struct_type(), vc)),
+    # Debezium vitess: source.keyspace stands where others put db
+    "vitess-json": Envelope(
+        "$.source.keyspace", None, "$.source.table", _DBZ_IMAGE,
+        lambda raw, s, vc: decode_vstream(raw, s.struct_type(), vc),
+        vgtid=True),
+    # MongoDBEnvelope: ns.db/ns.coll, fullDocument is the image. Upsert-mode
+    # change streams: key-only -D tombstones and +U without before-images —
+    # what the keyed sink merge consumes; the documentKey fields (shard key
+    # / _id) are the table's primary keys.
+    "mongodb-json": Envelope(
+        "$.ns.db", None, "$.ns.coll", ("$.fullDocument",),
+        lambda raw, s, vc: decode_mongo_changestream(
+            raw, s.struct_type(), key_fields=tuple(s.primary_keys) or ("_id",),
+            value_col=vc),
+        key="$.documentKey"),
+}
+
+
+@dataclass(frozen=True)
+class ConnectorOffset:
+    """How one connector's operator-visible offset is stored and advanced:
+    the batch's newest position is the ``probes`` row with the greatest
+    ``order`` among rows whose ``key`` is set."""
+
+    file: str  # in the checkpoint dir
+    parse: Callable[[str], object]
+    probes: Callable[[Column], dict[str, Column]]
+    key: str
+    # ordering column: a probe name, or "offset" for the transport offset
+    # column; ``fallback`` orders frames without one (file sources)
+    order: str
+    fallback: str
+    build: Callable[[Row], object]
+
+
+#: connector_offset -> offset kind (the reference's BinlogOffset,
+#: PostgresOffset, ChangeStreamOffset, LsnOffset and RedoLogOffset state)
+OFFSETS: dict[str, ConnectorOffset] = {
+    "mysql-binlog": ConnectorOffset(
+        "mysql_binlog_offset.json", BinlogOffset.from_json,
+        lambda v: {"file": _get(v, "$.source.file"),
+                   "pos": _get(v, "$.source.pos").cast("long"),
+                   "gtids": _get(v, "$.source.gtids"),
+                   "server_id": _get(v, "$.source.server_id")},
+        "file", "offset", "pos",
+        lambda m: BinlogOffset.of(file=m["file"], pos=m["pos"],
+                                  gtids=m["gtids"], server_id=m["server_id"])),
+    "pgoutput": ConnectorOffset(
+        "postgres_offset.json", PostgresOffset.from_json,
+        lambda v: {"lsn": _get(v, "$.source.lsn").cast("long"),
+                   "tx": _get(v, "$.source.txId").cast("long"),
+                   "ts_ms": _get(v, "$.ts_ms").cast("long")},
+        "lsn", "offset", "lsn",
+        lambda m: PostgresOffset(
+            int(m["lsn"]), int(m["tx"]) if m["tx"] is not None else None,
+            int(m["ts_ms"]) * 1000 if m["ts_ms"] is not None else None)),
+    "mongodb": ConnectorOffset(
+        "mongodb_resume_token.json", ChangeStreamOffset.from_json,
+        lambda v: {"token": _get(v, "$._id._data"),
+                   "ts64": _cluster_time_cols(v)[1]},
+        "token", "ts64", "ts64",
+        lambda m: ChangeStreamOffset(int(m["ts64"]), json.dumps(
+            {"_data": m["token"]}, separators=(",", ":")))),
+    # fixed-width hex LSNs: the lexical max IS the numeric max
+    "sqlserver": ConnectorOffset(
+        "sqlserver_lsn_offset.json", LsnOffset.from_json,
+        lambda v: {"lsn": _get(v, "$.row['__$start_lsn']")},
+        "lsn", "lsn", "lsn",
+        lambda m: LsnOffset(Lsn.valueOf(None), Lsn(bytes.fromhex(m["lsn"])))),
+    "db2": ConnectorOffset(
+        "db2_lsn_offset.json", LsnOffset.from_json,
+        lambda v: {"lsn": _get(v, "$.row.IBMSNAP_COMMITSEQ")},
+        "lsn", "lsn", "lsn",
+        lambda m: LsnOffset(Lsn.valueOf(None), Lsn(bytes.fromhex(m["lsn"])))),
+    "oracle": ConnectorOffset(
+        "oracle_scn_offset.json", RedoLogOffset.from_json,
+        lambda v: {"scn": _get(v, "$.source.scn").cast("long")},
+        "scn", "offset", "scn",
+        lambda m: RedoLogOffset(int(m["scn"]), int(m["scn"]))),
+}
 
 
 @dataclass
@@ -53,7 +199,7 @@ class StreamingPipeline:
     checkpoint_dir: str
     behavior: SchemaChangeBehavior = SchemaChangeBehavior.LENIENT
     parallelism: int | None = None
-    serialization: str = "debezium-json"  # or canal-/mongodb-/vitess-json
+    serialization: str = "debezium-json"  # a key of ENVELOPES
     # Auto-register tables first seen mid-stream (full-database-sync parity:
     # a table created upstream after the pipeline started still syncs).
     # Payload schemas are inferred from the JSON after-images of the first
@@ -64,17 +210,27 @@ class StreamingPipeline:
     # instead of adopting the new serving set (VitessSource stopOnReshard,
     # default false — VitessSource.java:47-59)
     stop_on_reshard: bool = False
-    # wire sources only ("mysql-binlog" | "pgoutput" | None): persist the
-    # max position seen per committed batch as an operator-visible offset
-    # (the reference's BinlogOffset / PostgresOffset checkpoint state;
-    # Structured Streaming's file tracking remains the actual exactly-once
-    # offset store)
+    # wire sources only (a key of OFFSETS, or None): persist the max
+    # position seen per committed batch as an operator-visible offset (the
+    # reference's connector checkpoint state; Structured Streaming's file
+    # tracking remains the actual exactly-once offset store)
     connector_offset: str | None = None
     # sink schema-change filters + session tz — round-9 review: batch
     # compose honored these, streaming silently dropped them
     include_types: set | None = None
     exclude_types: set | None = None
     local_time_zone: str | None = None
+
+    def __post_init__(self) -> None:
+        if self.serialization not in ENVELOPES:
+            raise ValueError(
+                f"unknown serialization {self.serialization!r}; expected "
+                f"one of {sorted(ENVELOPES)}")
+        if self.connector_offset is not None and \
+                self.connector_offset not in OFFSETS:
+            raise ValueError(
+                f"unknown connector_offset {self.connector_offset!r}; "
+                f"expected one of {sorted(OFFSETS)}")
 
     @staticmethod
     def create(spark: SparkSession, sink: DataSink, checkpoint_dir: str,
@@ -112,8 +268,6 @@ class StreamingPipeline:
         return os.path.join(self.checkpoint_dir, "vitess_vgtid.json")
 
     def _load_vitess_state(self):
-        from ..sources.vitess import VitessStreamState
-
         if os.path.exists(self._vitess_state_path()):
             with open(self._vitess_state_path()) as f:
                 return VitessStreamState.from_json(f.read())
@@ -126,44 +280,21 @@ class StreamingPipeline:
             f.write(state.to_json())
         os.replace(tmp, self._vitess_state_path())
 
-    # -- wire-source connector state (BinlogOffset / PostgresOffset) -------
+    # -- wire-source connector state (OFFSETS) ------------------------------
     def _connector_offset_path(self) -> str:
-        name = {"mysql-binlog": "mysql_binlog_offset.json",
-                "pgoutput": "postgres_offset.json",
-                "mongodb": "mongodb_resume_token.json",
-                "sqlserver": "sqlserver_lsn_offset.json",
-                "db2": "db2_lsn_offset.json",
-                "oracle": "oracle_scn_offset.json"}[self.connector_offset]
-        return os.path.join(self.checkpoint_dir, name)
+        return os.path.join(self.checkpoint_dir,
+                            OFFSETS[self.connector_offset].file)
 
     def binlog_offset(self):
-        """The last committed offset (None before the first commit):
-        a BinlogOffset for mysql-binlog streams, a PostgresOffset for
-        pgoutput streams."""
+        """The last committed connector offset (None without a
+        ``connector_offset`` or before the first commit): a BinlogOffset
+        (mysql-binlog), PostgresOffset (pgoutput), ChangeStreamOffset
+        (mongodb), LsnOffset (sqlserver, db2) or RedoLogOffset (oracle)."""
         if not self.connector_offset or \
                 not os.path.exists(self._connector_offset_path()):
             return None
         with open(self._connector_offset_path()) as f:
-            text = f.read()
-        if self.connector_offset == "pgoutput":
-            from ..sources.pgoutput import PostgresOffset
-
-            return PostgresOffset.from_json(text)
-        if self.connector_offset == "mongodb":
-            from ..sources.mongodb import ChangeStreamOffset
-
-            return ChangeStreamOffset.from_json(text)
-        if self.connector_offset in ("sqlserver", "db2"):
-            from ..sources.legacy_offsets import LsnOffset
-
-            return LsnOffset.from_json(text)
-        if self.connector_offset == "oracle":
-            from ..sources.legacy_offsets import RedoLogOffset
-
-            return RedoLogOffset.from_json(text)
-        from ..sources.mysql_binlog import BinlogOffset
-
-        return BinlogOffset.from_json(text)
+            return OFFSETS[self.connector_offset].parse(f.read())
 
     def _fold_connector_offset(self, data_df: DataFrame,
                                value_col: str) -> None:
@@ -171,92 +302,21 @@ class StreamingPipeline:
         partial agg + a 1-row collect, committed AFTER the data lands (the
         at-least-once discipline the snapshot watermarks use). Monotone —
         a replayed batch can never regress the stored position."""
-        v = F.col(value_col)
-        if self.connector_offset == "oracle":
-            fields = ["scn"]
-            probes = [F.get_json_object(v, "$.source.scn")
-                      .cast("long").alias("scn")]
-            key, order = "scn", "offset"
-        elif self.connector_offset in ("sqlserver", "db2"):
-            # fixed-width hex: lexical max IS the numeric max
-            path = ("$.row['__$start_lsn']"
-                    if self.connector_offset == "sqlserver"
-                    else "$.row.IBMSNAP_COMMITSEQ")
-            fields = ["lsn"]
-            probes = [F.get_json_object(v, path).alias("lsn")]
-            key, order = "lsn", "lsn"
-        elif self.connector_offset == "mongodb":
-            from ..sources.mongodb import _cluster_time_cols
-
-            _, ts64 = _cluster_time_cols(v)
-            fields = ["token", "ts64"]
-            probes = [F.get_json_object(v, "$._id._data").alias("token"),
-                      ts64.alias("ts64")]
-            key, order = "token", "ts64"
-        elif self.connector_offset == "pgoutput":
-            fields = ["lsn", "tx", "ts_ms"]
-            probes = [
-                F.get_json_object(v, "$.source.lsn").cast("long").alias("lsn"),
-                F.get_json_object(v, "$.source.txId").cast("long").alias("tx"),
-                F.get_json_object(v, "$.ts_ms").cast("long").alias("ts_ms"),
-            ]
-            key, order = "lsn", "offset"
-        else:
-            fields = ["file", "pos", "gtids", "server_id"]
-            probes = [
-                F.get_json_object(v, "$.source.file").alias("file"),
-                F.get_json_object(v, "$.source.pos").cast("long").alias("pos"),
-                F.get_json_object(v, "$.source.gtids").alias("gtids"),
-                F.get_json_object(v, "$.source.server_id").alias("server_id"),
-            ]
-            key, order = "file", "offset"
-        if order == "offset" and "offset" not in data_df.columns:
-            # streams without a transport offset column (file sources):
-            # order by the connector's own monotone coordinate instead —
-            # the old guard dropped the column from the select but still
-            # ordered by it, wedging the batch on an unresolved column
-            # (round-9 review)
-            order = {"pgoutput": "lsn", "oracle": "scn"}.get(
-                self.connector_offset, "pos")
-        sel = data_df.select(*probes, *(
-            [F.col("offset")] if order == "offset" else []))
-        row = (sel.where(F.col(key).isNotNull())
-               .agg(F.max_by(F.struct(*[F.col(c) for c in fields]),
-                             F.col(order)).alias("m")).collect())
+        off = OFFSETS[self.connector_offset]
+        probes = off.probes(F.col(value_col))
+        # streams without a transport offset column (file sources) order
+        # by the connector's own monotone coordinate instead
+        order = off.order if "offset" in data_df.columns else off.fallback
+        sel = data_df.select(
+            *[c.alias(n) for n, c in probes.items()],
+            *([F.col("offset")] if order == "offset" else []))
+        row = (sel.where(F.col(off.key).isNotNull())
+               .agg(F.max_by(F.struct(*probes), F.col(order)).alias("m"))
+               .collect())
         m = row[0]["m"] if row else None
-        if m is None or m[key] is None:
+        if m is None or m[off.key] is None:
             return
-        if self.connector_offset == "oracle":
-            from ..sources.legacy_offsets import RedoLogOffset
-
-            new = RedoLogOffset(int(m["scn"]), int(m["scn"]))
-        elif self.connector_offset in ("sqlserver", "db2"):
-            from ..sources.legacy_offsets import Lsn, LsnOffset
-
-            new = LsnOffset(Lsn.valueOf(None),
-                            Lsn(bytes.fromhex(m["lsn"])))
-        elif self.connector_offset == "mongodb":
-            import json as _j
-
-            from ..sources.mongodb import ChangeStreamOffset
-
-            new = ChangeStreamOffset(
-                int(m["ts64"]),
-                _j.dumps({"_data": m["token"]}, separators=(",", ":")))
-            # falls through to the shared monotone-clamp + atomic persist
-        elif self.connector_offset == "pgoutput":
-            from ..sources.pgoutput import PostgresOffset
-
-            new = PostgresOffset(int(m["lsn"]),
-                                 int(m["tx"]) if m["tx"] is not None else None,
-                                 int(m["ts_ms"]) * 1000
-                                 if m["ts_ms"] is not None else None)
-        else:
-            from ..sources.mysql_binlog import BinlogOffset
-
-            new = BinlogOffset.of(file=m["file"], pos=m["pos"],
-                                  gtids=m["gtids"],
-                                  server_id=m["server_id"])
+        new = off.build(m)
         cur = self.binlog_offset()
         if cur is not None and new.compare(cur) <= 0:
             return
@@ -308,10 +368,6 @@ class StreamingPipeline:
         PK-less/append-only tables need (PK upsert absorbs replays, appends
         cannot). Persisted in the checkpoint dir so restarts keep filtering.
         """
-        import json
-
-        from ..sources.base import ChangeBatch, attach_envelope
-
         exe = self._execution()
         exe.run_id = "initial"
         for tid_str, df in snapshots.items():
@@ -338,8 +394,8 @@ class StreamingPipeline:
         schemas are inferred by Spark's JSON reader over that table's
         after-images only (one driver-side inference per NEW table, not per
         batch)."""
-        db_p, schema_p, tbl_p, payload_p = self._envelope_probes(
-            value_col, self.serialization)
+        env = ENVELOPES[self.serialization]
+        db_p, schema_p, tbl_p, payload_p = env.probes(value_col)
         pairs = (
             data_df.select(db_p.alias("db"), schema_p.alias("schema"),
                            tbl_p.alias("table"))
@@ -380,17 +436,12 @@ class StreamingPipeline:
             schema = Schema.from_struct_type(inferred.schema)
             if not schema.column_names():
                 continue
-            if self.serialization == "mongodb-json":
-                # documentKey names the shard key/_id fields — without
-                # them the discovered table has no PK, key-only deletes
-                # can't upsert-match, and the sink appends forever
-                import json as _json
-
+            if env.key:
                 key_row = mine.select(
-                    F.get_json_object(F.col(value_col), "$.documentKey")
+                    _get(F.col(value_col), env.key)
                     .alias("k")).where(F.col("k").isNotNull()).head(1)
                 try:
-                    parsed = _json.loads(key_row[0]["k"]) if key_row else None
+                    parsed = json.loads(key_row[0]["k"]) if key_row else None
                 except ValueError:
                     parsed = None  # degenerate documentKey -> fallback PK
                 pks = tuple(parsed) if isinstance(parsed, (dict, list)) \
@@ -400,42 +451,6 @@ class StreamingPipeline:
                     or [schema.column_names()[0]])
             self.register_table(tid, schema)
             tables[str(tid)] = schema
-
-    @staticmethod
-    def _envelope_probes(value_col: str, serialization: str):
-        """(db, schema, table, payload) JSON probes per serialization — the
-        ONE place that knows each envelope's field layout; both the routing
-        projection (`enrich_batch`) and mid-stream discovery derive from it
-        (a probe mismatch between them silently drops events)."""
-        v = F.col(value_col)
-        null_s = F.lit(None).cast("string")
-        if serialization == "mongodb-json":
-            # MongoDBEnvelope: ns.db/ns.coll; fullDocument is the image
-            return (F.get_json_object(v, "$.ns.db"), null_s,
-                    F.get_json_object(v, "$.ns.coll"),
-                    F.get_json_object(v, "$.fullDocument"))
-        if serialization == "debezium-json":
-            return (F.get_json_object(v, "$.source.db"),
-                    F.get_json_object(v, "$.source.schema"),
-                    F.get_json_object(v, "$.source.table"),
-                    F.coalesce(F.get_json_object(v, "$.after"),
-                               F.get_json_object(v, "$.before")))
-        if serialization in ("sqlserver-cdc-json", "db2-cdc-json"):
-            # change-table capture lines: {"db","schema","table","row"}
-            return (F.get_json_object(v, "$.db"),
-                    F.get_json_object(v, "$.schema"),
-                    F.get_json_object(v, "$.table"),
-                    F.get_json_object(v, "$.row"))
-        if serialization == "vitess-json":
-            # Debezium vitess: source.keyspace stands where others put db
-            return (F.get_json_object(v, "$.source.keyspace"), null_s,
-                    F.get_json_object(v, "$.source.table"),
-                    F.coalesce(F.get_json_object(v, "$.after"),
-                               F.get_json_object(v, "$.before")))
-        # canal-json
-        return (F.get_json_object(v, "$.database"), null_s,
-                F.get_json_object(v, "$.table"),
-                F.get_json_object(v, "$.data[0]"))
 
     # -- streaming loop ----------------------------------------------------
     @staticmethod
@@ -448,8 +463,7 @@ class StreamingPipeline:
         per-table slice are then column filters over the cached projection
         — a single pass over the raw batch instead of one scan for DDL plus
         re-extraction per registered table."""
-        db_p, schema_p, tbl_p, _ = StreamingPipeline._envelope_probes(
-            value_col, serialization)
+        db_p, schema_p, tbl_p, _ = ENVELOPES[serialization].probes(value_col)
         is_ddl = F.get_json_object(F.col(value_col), "$.ddl").isNotNull()
         # BOTH namespace coordinates ride the projection (round-9 review:
         # collapsing them with coalesce cross-contaminated two schemas
@@ -482,7 +496,9 @@ class StreamingPipeline:
 
     def start(self, raw_stream: DataFrame, tables: dict[str, Schema],
               value_col: str = "value"):
-        """Attach to a stream of Debezium-JSON records and start the query.
+        """Attach to a stream of change records in this pipeline's
+        ``serialization`` (one JSON record per row of ``value_col``) and
+        start the query.
 
         ``tables``: table-id string -> payload Schema (with primary keys).
         """
@@ -501,14 +517,13 @@ class StreamingPipeline:
             tables.setdefault(str(tid), self.registry.original_schema(tid))
         # snapshot high watermarks (initial_load): stream records already
         # reflected in the snapshot are filtered per table
-        import json as _json
-
         watermarks: dict[str, int] = {}
         if os.path.exists(self._watermarks_path()):
             with open(self._watermarks_path()) as f:
-                watermarks = {k: int(v) for k, v in _json.load(f).items()}
+                watermarks = {k: int(v) for k, v in json.load(f).items()}
 
-        if self.serialization == "vitess-json":
+        env = ENVELOPES[self.serialization]
+        if env.vgtid:
             vs = self._load_vitess_state()
             if vs.stopped:
                 # restarting the pipeline IS the operator action after a
@@ -525,12 +540,9 @@ class StreamingPipeline:
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
             from ..common.events_json import schema_events_from_json
-            from ..sources.base import ChangeBatch
 
             vstate = None
-            if self.serialization == "vitess-json":
-                from ..sources.vitess import StopOnReshardHalt
-
+            if env.vgtid:
                 vstate = self._load_vitess_state()
                 if vstate.stopped:
                     # halted at a reshard boundary: nothing may be
@@ -579,7 +591,7 @@ class StreamingPipeline:
 
                 destructive: dict[str, list] = {}
                 for r in ddl_raw:
-                    rec = _json.loads(r[value_col])
+                    rec = json.loads(r[value_col])
                     # destructive-DDL ordering coordinate: it must use
                     # the SAME precedence decode_debezium gives the data
                     # rows' __seq — transport offset first (round-9
@@ -602,36 +614,6 @@ class StreamingPipeline:
                 #    full from_json decode only on each table's own slice —
                 #    the batch is parsed once total, not once per registered
                 #    table (O(batch), not O(tables × batch))
-                from ..sources.debezium import decode_canal
-
-                decode = (decode_debezium
-                          if self.serialization == "debezium-json"
-                          else decode_canal)
-                if self.serialization == "sqlserver-cdc-json":
-                    from ..sources.sqlserver import decode_sqlserver_cdc
-
-                    def decode(raw, struct_type, vc, _s=None):
-                        return decode_sqlserver_cdc(raw, struct_type, vc)
-                if self.serialization == "db2-cdc-json":
-                    from ..sources.db2 import decode_db2_cdc
-
-                    def decode(raw, struct_type, vc, _s=None):
-                        return decode_db2_cdc(raw, struct_type, vc)
-                if self.serialization == "vitess-json":
-                    from ..sources.vitess import decode_vstream as decode
-                if self.serialization == "mongodb-json":
-                    # upsert-mode change streams: key-only -D tombstones and
-                    # +U without before-images — exactly what the keyed sink
-                    # merge consumes; changelog_normalize is available for
-                    # consumers that need retractions. documentKey fields =
-                    # the table's primary keys (MongoDB shard key / _id).
-                    from ..sources.mongodb import decode_mongo_changestream
-
-                    def decode(raw, struct_type, vc, _s=None):
-                        pks = tuple((_s or ()))
-                        return decode_mongo_changestream(
-                            raw, struct_type, key_fields=pks or ("_id",),
-                            value_col=vc)
                 data_df = batch_df.where(~F.col("__is_ddl"))
                 if vstate is not None:
                     # VGTID offset fold + stopOnReshard (VitessSource.java
@@ -644,10 +626,6 @@ class StreamingPipeline:
                     # the uncommitted epoch re-delivers in full after the
                     # operator restarts and adopts the children, so no
                     # boundary event is lost or written twice
-                    from ..sources.vitess import (
-                        StopOnReshardHalt, fold_vstream_batch,
-                    )
-
                     vstate, halt = fold_vstream_batch(
                         data_df, value_col, vstate,
                         stop_on_reshard=self.stop_on_reshard)
@@ -669,12 +647,7 @@ class StreamingPipeline:
                         self._tid_match(tid)
                     ).drop("__src_db", "__src_schema", "__src_tbl",
                            "__is_ddl")
-                    if self.serialization == "mongodb-json":
-                        decoded = decode(mine_raw, schema.struct_type(),
-                                         value_col, _s=schema.primary_keys)
-                    else:
-                        decoded = decode(mine_raw, schema.struct_type(),
-                                         value_col)
+                    decoded = env.decode(mine_raw, schema, value_col)
                     wm = watermarks.get(tid_str)
                     if wm is not None:
                         # high-watermark stitch: drop records the snapshot

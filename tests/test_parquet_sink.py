@@ -85,6 +85,38 @@ def test_merge_only_reads_touched_buckets(spark, tmp_path):
     assert got[7] == "v7-new" and len(got) == 39
 
 
+def test_int_to_bigint_widening_then_upsert(spark, tmp_path):
+    """INT -> BIGINT widening leaves int files beside bigint ones: the merge
+    and the read must go through the evolved schema (mergeSchema refuses to
+    merge int and bigint files of one column)."""
+    from source_flink_cdc_3_5_0_spark.common import AlterColumnTypeEvent
+
+    narrow = Schema.of(Column("id", T.IntegerType(), False),
+                       Column("n", T.IntegerType()), primary_keys=["id"])
+    big = 1 << 40
+    sink = ParquetUpsertSink(str(tmp_path), num_buckets=4)
+    run(spark, sink, [
+        CreateTableEvent(TBL, narrow),
+        *[DataChangeEvent.insert(TBL, (i, i)) for i in range(1, 9)],
+        AlterColumnTypeEvent(TBL, (("n", T.LongType()),)),
+        DataChangeEvent.update(TBL, (1, 1), (1, big)),
+    ])
+    expect = {i: i for i in range(1, 9)} | {1: big}
+    got = sink.read(spark, TBL)
+    assert dict(got.dtypes)["n"] == "bigint"
+    assert {r["id"]: r["n"] for r in got.collect()} == expect
+    # a second run upserts every key: each merge reads int and bigint files
+    wide = Schema.of(Column("id", T.IntegerType(), False),
+                     Column("n", T.LongType()), primary_keys=["id"])
+    run(spark, ParquetUpsertSink(str(tmp_path), num_buckets=4), [
+        CreateTableEvent(TBL, wide),
+        *[DataChangeEvent.update(TBL, (i, expect[i]), (i, big + i))
+          for i in range(1, 9)],
+    ])
+    assert {r["id"]: r["n"] for r in sink.read(spark, TBL).collect()} == {
+        i: big + i for i in range(1, 9)}
+
+
 def test_truncate_and_drop_reach_parquet_sink(spark, tmp_path):
     """Table-level DDL forwarded by the composer: TRUNCATE clears data files
     (later inserts survive), DROP removes the table directory."""

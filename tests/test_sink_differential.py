@@ -2,7 +2,9 @@
 every stateful sink (memory golden, parquet upsert, lake cow, lake mor,
 jdbc/sqlite), asserting the IDENTICAL final state. Complements the fixed
 conformance script with randomized op interleavings, replays and
-truncates — the cheap cross-engine analog of the reference's e2e matrix."""
+truncates — the cheap cross-engine analog of the reference's e2e matrix.
+One more input routes two source tables into one sink table (an N:1
+route) through the pipeline, then replays the run."""
 
 import random
 
@@ -17,6 +19,8 @@ from source_flink_cdc_3_5_0_spark.common import (
     TableId,
 )
 from source_flink_cdc_3_5_0_spark.common.events import TruncateTableEvent
+from source_flink_cdc_3_5_0_spark.pipeline import (PipelineComposer,
+                                                   parse_yaml_pipeline)
 from source_flink_cdc_3_5_0_spark.sinks.jdbc_sink import JdbcUpsertSink
 from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
 from source_flink_cdc_3_5_0_spark.sinks.memory import MemorySink
@@ -87,6 +91,41 @@ def _drive(spark, sink, batches, replay_at):
         bid += 1
 
 
+def _random_input(seed):
+    batches, replay_at, expected = _script(seed)
+    return (lambda spark, sink: _drive(spark, sink, batches, replay_at),
+            expected)
+
+
+def _n_to_1_input():
+    """diff.db.t_1 and diff.db.t_2 both route to TID and change in ONE
+    batch; the whole run is then replayed under the same run id, so every
+    data marker it wrote must skip its write again."""
+    srcs = [TableId.parse("diff.db.t_1"), TableId.parse("diff.db.t_2")]
+    events = [CreateTableEvent(t, SCHEMA) for t in srcs]
+    expected = set()
+    for k in range(8):
+        row = (k, f"s{k % 2}", k * 10)
+        events.append(DataChangeEvent.insert(srcs[k % 2], row))
+        expected.add(row)
+    events.append(DataChangeEvent.update(srcs[1], (3, "s1", 30),
+                                         (3, "s1b", 31)))
+    events.append(DataChangeEvent.delete(srcs[0], (4, "s0", 40)))
+    expected -= {(3, "s1", 30), (4, "s0", 40)}
+    expected.add((3, "s1b", 31))
+    pdef = parse_yaml_pipeline(
+        "source: {type: values}\nsink: {type: values}\nroute:\n"
+        "  - source-table: diff.db.t_\\.*\n    sink-table: diff.db.t\n")
+
+    def drive(spark, sink):
+        exe = PipelineComposer(spark).compose(
+            pdef, source=ValuesSource(events), sink=sink)
+        exe.run()
+        exe.batches_run = 0
+        exe.run()  # replay
+    return drive, expected
+
+
 def _state_memory(sink, spark):
     return {(r["id"], r["v"], r["n"]) for r in sink.state[TID].values()}
 
@@ -101,9 +140,10 @@ def _state_jdbc(sink, spark):
             for r in sink.read(spark, TID, SCHEMA).collect()}
 
 
-@pytest.mark.parametrize("seed", [7, 23, 91])
-def test_all_sinks_agree_on_random_scripts(spark, tmp_path, seed):
-    batches, replay_at, expected = _script(seed)
+@pytest.mark.parametrize("script", [7, 23, 91, "n_to_1"])
+def test_all_sinks_agree_on_random_scripts(spark, tmp_path, script):
+    drive, expected = (_n_to_1_input() if script == "n_to_1"
+                       else _random_input(script))
     sinks = {
         "memory": (MemorySink(), _state_memory),
         "parquet": (ParquetUpsertSink(str(tmp_path / "pq"), num_buckets=3),
@@ -116,7 +156,7 @@ def test_all_sinks_agree_on_random_scripts(spark, tmp_path, seed):
     }
     got = {}
     for name, (sink, reader) in sinks.items():
-        _drive(spark, sink, batches, replay_at)
+        drive(spark, sink)
         got[name] = reader(sink, spark)
     assert got["memory"] == expected, "python-model mismatch"
     for name, st in got.items():

@@ -17,7 +17,8 @@ from source_flink_cdc_3_5_0_spark.sources.debezium import (
     encode_canal,
     encode_debezium,
 )
-from source_flink_cdc_3_5_0_spark.streaming.runner import StreamingPipeline, file_stream_source
+from source_flink_cdc_3_5_0_spark.streaming.runner import (
+    OFFSETS, StreamingPipeline, file_stream_source)
 
 TID = TableId.parse("inventory.db.products")
 SCHEMA = Schema.of(
@@ -224,3 +225,94 @@ def test_two_schemas_same_table_name_do_not_cross_contaminate(
         ["1, one-s1", "3, three-s1"]
     assert sink.snapshot(TableId.parse("inventory.s2.products")) == \
         ["2, two-s2"]
+
+
+def test_n_to_1_route_keeps_every_source_table_across_replay(spark, tmp_path):
+    """app.orders_1 and app.orders_2 route to app.orders in ONE micro-batch:
+    both source tables' rows must land (one shared data marker made the
+    second write look like a replay of the first), and a re-delivered batch
+    must skip both writes."""
+    import glob
+
+    from source_flink_cdc_3_5_0_spark.operators.route import RouteRule
+    from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import (
+        ParquetUpsertSink)
+
+    def rec(k):
+        return json.dumps({
+            "op": "c", "ts_ms": k, "after": {"id": k, "v": f"o{1 + k % 2}"},
+            "source": {"db": "app", "table": f"orders_{1 + k % 2}"}})
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "b0.json").write_text("\n".join(rec(k) for k in range(6)))
+    ckpt = str(tmp_path / "ckpt")
+    root = str(tmp_path / "pq")
+    sink = ParquetUpsertSink(root, num_buckets=2)
+    schema = Schema.of(Column("id", T.IntegerType(), False),
+                       Column("v", T.StringType()), primary_keys=["id"])
+
+    def run():
+        pipe = StreamingPipeline.create(
+            spark, sink, ckpt,
+            routes=[RouteRule("app.orders_\\.*", "app.orders")])
+        pipe.start(file_stream_source(spark, str(src)),
+                   {"app.orders_1": schema, "app.orders_2": schema}
+                   ).awaitTermination(120)
+        return sorted((r["id"], r["v"]) for r in
+                      sink.read(spark, TableId.parse("app.orders")).collect())
+
+    expected = [(k, f"o{1 + k % 2}") for k in range(6)]
+    assert run() == expected
+    files = sorted(glob.glob(os.path.join(root, "**", "*.parquet"),
+                             recursive=True))
+    for name in ("0", ".0.crc"):  # drop batch 0's commit: re-delivered
+        os.remove(os.path.join(ckpt, "stream", "commits", name))
+    assert run() == expected
+    assert sorted(glob.glob(os.path.join(root, "**", "*.parquet"),
+                            recursive=True)) == files  # both writes skipped
+
+
+def test_unknown_formats_refused_by_name(spark, tmp_path):
+    """A typo'd serialization or connector offset must fail at create time
+    naming the known keys, not silently decode as another format."""
+    with pytest.raises(ValueError, match="canal-json.*debezium-json"):
+        StreamingPipeline.create(spark, MemorySink(), str(tmp_path),
+                                 serialization="debezium")
+    with pytest.raises(ValueError, match="mysql-binlog.*pgoutput"):
+        StreamingPipeline.create(spark, MemorySink(), str(tmp_path),
+                                 connector_offset="binlog")
+
+
+#: one raw record at position ``p`` per connector offset kind
+POSITIONED = {
+    "mysql-binlog": lambda p: {"source": {
+        "file": "mysql-bin.000001", "pos": p, "server_id": "1"}},
+    "pgoutput": lambda p: {"source": {"lsn": p, "txId": 7}, "ts_ms": 1},
+    "mongodb": lambda p: {"_id": {"_data": f"tok{p}"}, "clusterTime": p},
+    "sqlserver": lambda p: {"row": {"__$start_lsn": f"{p:020x}"}},
+    "db2": lambda p: {"row": {"IBMSNAP_COMMITSEQ": f"{p:020x}"}},
+    "oracle": lambda p: {"source": {"scn": p}},
+}
+
+
+@pytest.mark.parametrize("kind", sorted(OFFSETS))
+def test_connector_offset_fold_is_monotone(spark, tmp_path, kind):
+    """Folding a batch stores its newest position: a frame without an
+    ``offset`` column orders by the connector's own coordinate, and an
+    older replayed batch never moves the stored offset back."""
+    def frame(*positions):
+        return spark.createDataFrame(
+            [(json.dumps(POSITIONED[kind](p)),) for p in positions],
+            "value string")
+
+    def fold(ckpt, *positions):
+        pipe = StreamingPipeline.create(spark, MemorySink(), ckpt,
+                                        connector_offset=kind)
+        pipe._fold_connector_offset(frame(*positions), "value")
+        return pipe.binlog_offset().to_json()
+
+    ckpt = str(tmp_path / "ckpt")
+    newest = fold(ckpt, 5, 9, 7)
+    assert newest == fold(str(tmp_path / "only9"), 9)
+    assert fold(ckpt, 3) == newest

@@ -21,7 +21,8 @@ from source_flink_cdc_3_5_0_spark.common.events_json import (
 )
 from source_flink_cdc_3_5_0_spark.sinks.memory import MemorySink
 from source_flink_cdc_3_5_0_spark.sources.values import ValuesSource
-from source_flink_cdc_3_5_0_spark.streaming.runner import StreamingPipeline, file_stream_source
+from source_flink_cdc_3_5_0_spark.streaming.runner import (
+    ENVELOPES, StreamingPipeline, file_stream_source)
 
 TID = TableId.parse("inv.s.products")
 SCHEMA = Schema.of(
@@ -172,7 +173,23 @@ def test_inflight_truncate_and_drop(spark, tmp_path):
     assert t2 not in sink.state
 
 
-def test_micro_batch_single_pass_enrichment(spark):
+#: one record routed to (db "inv", table "t") per serialization
+ROUTED = {
+    "debezium-json": {"op": "c", "after": {"id": 1},
+                      "source": {"db": "inv", "table": "t"}},
+    "canal-json": {"type": "INSERT", "database": "inv", "table": "t",
+                   "data": [{"id": 1}]},
+    "sqlserver-cdc-json": {"db": "inv", "table": "t", "row": {"id": 1}},
+    "db2-cdc-json": {"db": "inv", "table": "t", "row": {"id": 1}},
+    "vitess-json": {"op": "c", "after": {"id": 1},
+                    "source": {"keyspace": "inv", "table": "t"}},
+    "mongodb-json": {"operationType": "insert", "fullDocument": {"id": 1},
+                     "ns": {"db": "inv", "coll": "t"}, "documentKey": {"id": 1}},
+}
+
+
+@pytest.mark.parametrize("serialization", sorted(ENVELOPES))
+def test_micro_batch_single_pass_enrichment(spark, serialization):
     """The micro-batch loop must parse each raw JSON row ONCE: enrich_batch
     materializes the __is_ddl flag and (db, table) routing columns into the
     persisted projection, so the DDL collect and every per-table slice are
@@ -181,10 +198,9 @@ def test_micro_batch_single_pass_enrichment(spark):
 
     raw = spark.createDataFrame(
         [('{"ddl": "ALTER TABLE t ADD c INT", "ts_ms": 5}',),
-         ('{"op": "c", "after": {"id": 1}, '
-          '"source": {"db": "inv", "table": "t"}}',)],
+         (json.dumps(ROUTED[serialization]),)],
         "value string")
-    enriched = StreamingPipeline.enrich_batch(raw, "value", "debezium-json")
+    enriched = StreamingPipeline.enrich_batch(raw, "value", serialization)
     # correctness of the single projection
     rows = {r["__is_ddl"]: (r["__src_db"], r["__src_tbl"])
             for r in enriched.collect()}
