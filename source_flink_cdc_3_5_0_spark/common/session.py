@@ -19,6 +19,20 @@ shuffle sizes every partition exceeds any of these values, so the floor
 is inert there — it only matters where small-byte/high-CPU stages meet
 many cores. Override per deployment via ``SPARK_GRAFT_AQE_MIN_PARTITION``
 (any Spark byte string, e.g. ``1m`` to restore the stock default).
+
+Why the listing threshold: a lake read (``sinks/lakehouse.py``) hands
+Spark the data files its snapshot manifest already lists, one root path
+per file. Above ``parallelPartitionDiscovery.threshold`` root paths
+(stock 32) the file index lists them in a Spark job with one task per
+path, before the scan is even planned. On a 4-core, 15 GB host, building
+a frame over local parquet files took 1.7 s for 176 files, 6.0 s for 1000
+and 20.8 s for 4000 that way, and 0.17 s, 0.24 s and 0.56 s with the
+listing serial on the driver (about 0.1 ms per file). With this threshold
+and the lake's declared-schema scan, the median read of the benchmark's
+``upsert_stream`` table fell from 8.4 s to 3.7 s of process CPU. The
+threshold is 10000 paths, which keeps a serial listing of local files
+near a second. It is a constant, not a deployment knob, and a session
+conf because a per-read ``.option(...)`` does not reach the file index.
 """
 
 from __future__ import annotations
@@ -29,11 +43,13 @@ import os
 def engine_session_confs() -> dict[str, str]:
     """Session confs the engine recommends wherever IT builds the session.
     Deliberately tiny: only settings whose rationale is an engine operator
-    profile, parameterised by env for non-local deployments."""
+    profile (see the module docstring); the AQE floor is parameterised by
+    env for non-local deployments."""
     return {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize":
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "10000",
     }
 
 

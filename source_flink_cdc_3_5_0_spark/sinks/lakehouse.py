@@ -50,7 +50,8 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..common.events import (DropTableEvent, OP_COL, SchemaChangeEvent,
                              TruncateTableEvent)
@@ -62,6 +63,7 @@ from .base import DataSink, MetadataApplier
 
 _BUCKET_COL = "__bucket"
 _COMMIT_SEQ = "__commit_seq"
+_EXISTS_DEFAULT = "EXISTS_DEFAULT"  # parquet reader's missing-column value
 _UNSET = object()  # "not passed" sentinel (None is a meaningful value)
 
 
@@ -279,8 +281,10 @@ def _filters_to_column(filters):
 
 class _LakeMetadataApplier(MetadataApplier):
     """Schema changes update the sidecar (schema-on-read — existing files
-    stay valid, readers null-fill); TRUNCATE commits an empty snapshot
-    (old snapshots remain time-travelable); DROP removes the table."""
+    stay valid: reads declare the sidecar schema, so older files widen and
+    a column they lack reads its default, or NULL); TRUNCATE commits an
+    empty snapshot (old snapshots remain time-travelable); DROP removes
+    the table."""
 
     def __init__(self, sink: "SnapshotLakeSink"):
         self.sink = sink
@@ -326,10 +330,7 @@ class _LakeMetadataApplier(MetadataApplier):
             self.sink._commit(table_id, {})
             return
         self.sink._ensure_meta(table_id)
-        path = self.sink._schema_path(table_id)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            f.write(evolved_schema.to_json())
+        self.sink._write_schema(table_id, evolved_schema)
 
 
 class SnapshotLakeSink(DataSink):
@@ -352,6 +353,9 @@ class SnapshotLakeSink(DataSink):
         #: applier objects are created fresh per call, so the counters
         #: live on the sink (see _LakeMetadataApplier's truncate path)
         self._ddl_pass_state: dict[tuple[str, str], int] = {}
+        #: default expression -> whether Spark folds it to a constant
+        #: (see _existence_default)
+        self._default_ok: dict[str, bool] = {}
 
     @classmethod
     def for_table(cls, root: str, table_id: TableId,
@@ -726,10 +730,6 @@ class SnapshotLakeSink(DataSink):
         return {f"{_BUCKET_COL}={bucket}/{f}" for f in os.listdir(d)
                 if f.endswith(".parquet")}
 
-    def _pks(self, tid: TableId) -> list[str]:
-        with open(self._schema_path(tid)) as f:
-            return Schema.from_json(f.read()).primary_keys
-
     # -- write path --------------------------------------------------------
     def _schema_pk_integral(self, schema: Schema) -> bool:
         """Whether the (single) PK is integral PER THE TABLE SCHEMA — the
@@ -737,8 +737,6 @@ class SnapshotLakeSink(DataSink):
         path's point-lookup pruning must share: deciding from a batch's
         incidental dtypes instead would let a mistyped batch place rows
         in buckets a point lookup never scans."""
-        import pyspark.sql.types as T
-
         pks = schema.primary_keys
         if len(pks) != 1:
             return False
@@ -762,8 +760,83 @@ class SnapshotLakeSink(DataSink):
         return portable_bucket_expr(key, self.num_buckets)
 
     def _table_schema(self, tid: TableId) -> Schema:
+        if not os.path.exists(self._schema_path(tid)):
+            raise ValueError(f"{tid}: no table schema at "
+                             f"{self._schema_path(tid)}")
         with open(self._schema_path(tid)) as f:
             return Schema.from_json(f.read())
+
+    def _write_schema(self, tid: TableId, schema: Schema) -> None:
+        path = self._schema_path(tid)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as f:
+            f.write(schema.to_json())
+
+    def _existence_default(self, spark: SparkSession, expr: str,
+                           dtype: T.DataType) -> str | None:
+        """``expr`` cast to ``dtype`` as an ``EXISTS_DEFAULT`` value, or
+        None when Spark cannot fold it to a constant (``uuid()``, MySQL's
+        ``CURRENT_TIMESTAMP(6)``): the reader would fail every scan of the
+        table, so such a column reads NULL in files written before it was
+        added.  Checked once per expression and sink, by the analyzer the
+        reader uses (driver-side, no job)."""
+        sql = f"CAST(({expr}) AS {dtype.simpleString()})"
+        ok = self._default_ok.get(sql)
+        if ok is None:
+            probe = T.StructType([T.StructField("c", dtype, True,
+                                                {_EXISTS_DEFAULT: sql})])
+            try:
+                (spark._jvm.org.apache.spark.sql.catalyst.util
+                 .ResolveDefaultColumns.existenceDefaultValues(
+                     spark._jsparkSession.parseDataType(probe.json())))
+                ok = True
+            except AnalysisException:
+                ok = False
+            self._default_ok[sql] = ok
+        return sql if ok else None
+
+    def _declared(self, spark: SparkSession, schema: Schema,
+                  changelog: bool = False) -> T.StructType:
+        """Read schema of a table's files: its columns, with ``changelog``
+        the row kind (``+I`` where a file has none: base files) and commit
+        sequence (-1 where a file has none: pre-compaction base files sort
+        before every delta), then the ``__bucket`` partition column.
+
+        The manifest lists every file and the sidecar says what their
+        columns are, so no read infers or merges a schema from footers.
+        A file written before a widening reads through the parquet
+        reader's type widening; one written before an ADD COLUMN reads the
+        column's default, because the reader (vectorized and row) fills a
+        column missing from a file with the field's ``EXISTS_DEFAULT``."""
+        fields = []
+        for c in schema.columns:
+            f = c.to_struct_field()
+            d = (self._existence_default(spark, c.default_expr, c.data_type)
+                 if c.default_expr is not None else None)
+            if d is not None:
+                f = T.StructField(f.name, f.dataType, f.nullable,
+                                  {**f.metadata, _EXISTS_DEFAULT: d})
+            fields.append(f)
+        if changelog:
+            fields += [
+                T.StructField(OP_COL, T.StringType(), True,
+                              {_EXISTS_DEFAULT: "'+I'"}),
+                T.StructField(_COMMIT_SEQ, T.LongType(), True,
+                              {_EXISTS_DEFAULT: "CAST(-1 AS BIGINT)"}),
+            ]
+        return T.StructType(fields + [T.StructField(_BUCKET_COL,
+                                                    T.IntegerType())])
+
+    @staticmethod
+    def _scan(spark: SparkSession, root: str, paths: list[str],
+              declared: T.StructType) -> DataFrame:
+        """The one lake scan: the manifest's files under ``root`` read
+        through a declared schema (:meth:`_declared`).  Neither the
+        paths nor the schema need discovery, so building the frame starts
+        no Spark job (the engine session's listing threshold keeps the
+        file index from listing the paths in a job)."""
+        return (spark.read.schema(declared).option("basePath", root)
+                .parquet(*paths))
 
     def _staged_write(self, df: DataFrame,
                       dest_dir: str) -> dict[str, list[str]]:
@@ -805,6 +878,11 @@ class SnapshotLakeSink(DataSink):
 
     def write(self, table_id: TableId, df: DataFrame, schema: Schema,
               batch_id) -> None:
+        """Commit one batch of changelog rows.  Every file is written in
+        the table schema: the batch's columns are cast to ``schema``'s
+        types first, because reads declare that schema instead of
+        inferring one from the files.  A table written before any
+        metadata applier ran gets ``schema`` as its sidecar."""
         from ..streaming.materialize import latest_image
 
         self._ensure_meta(table_id)
@@ -813,12 +891,20 @@ class SnapshotLakeSink(DataSink):
         if os.path.exists(marker):
             return  # replayed batch
         os.makedirs(tdir, exist_ok=True)
+        if not os.path.exists(self._schema_path(table_id)):
+            self._write_schema(table_id, schema)
         spark = df.sparkSession
         pks = [k for k in schema.primary_keys if k in df.columns]
         names = [c.name for c in schema.columns if c.name in df.columns]
         if not pks:
             raise ValueError(
                 f"snapshot lake sink requires primary keys for {table_id}")
+        types = {c.name: c.data_type for c in schema.columns}
+        casts = {f.name: F.col(f.name).cast(types[f.name])
+                 for f in df.schema.fields
+                 if types.get(f.name, f.dataType) != f.dataType}
+        if casts:
+            df = df.withColumns(casts)
         if OP_COL in df.columns:
             final = latest_image(
                 df, pks, seq_col=SEQ_COL if SEQ_COL in df.columns else None,
@@ -854,13 +940,10 @@ class SnapshotLakeSink(DataSink):
                           for b in touched
                           for p in prev_buckets.get(str(b), [])]
             if prev_files:
-                current = (spark.read.option("basePath", self._data_dir(table_id))
-                           .option("mergeSchema", "true").parquet(*prev_files))
-                have = set(current.columns)
-                aligned = current.select(*[
-                    F.col(c) if c in have else F.lit(None).alias(c)
-                    for c in out_cols])
-                merged = (aligned.join(final.select(*pks), on=pks,
+                current = self._scan(
+                    spark, self._data_dir(table_id), prev_files,
+                    self._declared(spark, schema)).select(*out_cols)
+                merged = (current.join(final.select(*pks), on=pks,
                                        how="left_anti")
                           .unionByName(upserts, allowMissingColumns=True))
             else:
@@ -916,23 +999,14 @@ class SnapshotLakeSink(DataSink):
         None when not derivable (no filters, composite/non-integral PK,
         non-int filter values) — pruning then falls back to zone maps
         alone."""
-        import pyspark.sql.types as T
-
         from ..operators.partitioning import portable_bucket_py
 
         if not filters or not os.path.exists(self._schema_path(tid)):
             return None
-        with open(self._schema_path(tid)) as f:
-            schema = Schema.from_json(f.read())
+        schema = self._table_schema(tid)
+        if not self._schema_pk_integral(schema):
+            return None
         pks = schema.primary_keys
-        if len(pks) != 1:
-            return None
-        field = next((fl for fl in schema.struct_type().fields
-                      if fl.name == pks[0]), None)
-        if field is None or not isinstance(
-                field.dataType,
-                (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            return None
         out: set[int] | None = None
         for c, op, val in filters:
             if c != pks[0] or op not in ("=", "==", "in"):
@@ -1004,26 +1078,14 @@ class SnapshotLakeSink(DataSink):
                        for b, files in (manifest.get("deltas") or {}).items()
                        if pk_allowed is None or int(b) in pk_allowed
                        for p in files]
-        schema = None
-        if os.path.exists(self._schema_path(table_id)):
-            with open(self._schema_path(table_id)) as f:
-                schema = Schema.from_json(f.read())
+        schema = self._table_schema(table_id)
         if not paths and not delta_paths:
-            if schema is None:
-                raise ValueError(f"{table_id}: empty table and no schema")
             df = spark.createDataFrame([], schema.struct_type())
-            cond = _filters_to_column(filters) if filters else None
-            return df.where(cond) if cond is not None else df
-        if delta_paths:
+        elif delta_paths:
             df = self._merge_read(spark, table_id, paths, delta_paths)
         else:
-            df = (spark.read.option("basePath", self._data_dir(table_id))
-                  .option("mergeSchema", "true").parquet(*paths)
-                  .drop(_BUCKET_COL, _COMMIT_SEQ))
-        if schema is not None:
-            from ..operators.schema_evolution import coercion_select
-
-            df = coercion_select(df, schema)
+            df = self._scan(spark, self._data_dir(table_id), paths,
+                            self._declared(spark, schema)).drop(_BUCKET_COL)
         cond = _filters_to_column(filters) if filters else None
         return df.where(cond) if cond is not None else df
 
@@ -1031,25 +1093,18 @@ class SnapshotLakeSink(DataSink):
                     base_paths: list[str], delta_paths: list[str]) -> DataFrame:
         """Merge-on-read: latest commit sequence wins per key, delete row
         kinds drop the key. One bucket-aligned window shuffle — the read
-        cost MoR trades for its O(batch) commits (compact() removes it)."""
+        cost MoR trades for its O(batch) commits (compact() removes it).
+        Base and delta files scan through one changelog schema, so base
+        rows read as ``+I`` at sequence -1 unless compaction stamped one."""
         from pyspark.sql import Window
 
-        pks = self._pks(tid)
-        delta = (spark.read.option("basePath", self._delta_dir(tid))
-                 .option("mergeSchema", "true").parquet(*delta_paths))
-        parts = [delta]
+        schema = self._table_schema(tid)
+        declared = self._declared(spark, schema, changelog=True)
+        allr = self._scan(spark, self._delta_dir(tid), delta_paths, declared)
         if base_paths:
-            base = (spark.read.option("basePath", self._data_dir(tid))
-                    .option("mergeSchema", "true").parquet(*base_paths))
-            if OP_COL not in base.columns:
-                base = base.withColumn(OP_COL, F.lit("+I"))
-            if _COMMIT_SEQ not in base.columns:
-                # pre-compact base files sort before every delta commit
-                base = base.withColumn(_COMMIT_SEQ, F.lit(-1).cast("bigint"))
-            parts.append(base)
-        allr = parts[0]
-        for p in parts[1:]:
-            allr = allr.unionByName(p, allowMissingColumns=True)
+            allr = allr.unionByName(
+                self._scan(spark, self._data_dir(tid), base_paths, declared))
+        pks = schema.primary_keys
         w = Window.partitionBy(*[F.col(k) for k in pks]).orderBy(
             F.col(_COMMIT_SEQ).desc())
         return (allr.withColumn("__rn", F.row_number().over(w))
@@ -1086,21 +1141,18 @@ class SnapshotLakeSink(DataSink):
               for p in fs}
         d1 = {(b, p) for b, fs in (m1.get("deltas") or {}).items()
               for p in fs}
-        pks = self._pks(table_id)
+        schema = self._table_schema(table_id)
+        pks = schema.primary_keys
         if m0["buckets"] == m1["buckets"] and d0 <= d1:
+            declared = self._declared(spark, schema, changelog=True)
             new_rels = sorted(p for _, p in d1 - d0)
             if not new_rels:
-                empty = self.read(spark, table_id, snapshot=to_snapshot)
-                return (empty.withColumn(OP_COL, F.lit("+I"))
-                        .withColumn(_COMMIT_SEQ, F.lit(0).cast("bigint"))
-                        .limit(0))
+                return spark.createDataFrame(
+                    [], T.StructType(declared.fields[:-1]))
             paths = [os.path.join(self._delta_dir(table_id), p)
                      for p in new_rels]
-            df = (spark.read.option("basePath", self._delta_dir(table_id))
-                  .option("mergeSchema", "true").parquet(*paths))
-            data_cols = [c for c in df.columns
-                         if c not in (OP_COL, _COMMIT_SEQ, _BUCKET_COL)]
-            return df.select(*data_cols, OP_COL, _COMMIT_SEQ)
+            return self._scan(spark, self._delta_dir(table_id), paths,
+                              declared).drop(_BUCKET_COL)
         # state-diff fallback
         changed = {b for b in set(m0["buckets"]) | set(m1["buckets"])
                    if m0["buckets"].get(b) != m1["buckets"].get(b)}
@@ -1109,9 +1161,8 @@ class SnapshotLakeSink(DataSink):
         new = self.read(spark, table_id, snapshot=to_snapshot)
         if changed != set(m0["buckets"]) | set(m1["buckets"]):
             want = [int(b) for b in changed]
-            sch = self._table_schema(table_id)
-            old = old.where(self._bucket_of(old, pks, sch).isin(want))
-            new = new.where(self._bucket_of(new, pks, sch).isin(want))
+            old = old.where(self._bucket_of(old, pks, schema).isin(want))
+            new = new.where(self._bucket_of(new, pks, schema).isin(want))
         data_cols = new.columns
         o = old.select(*[F.col(c).alias(f"__o_{c}") for c in data_cols])
         n = new.select(*[F.col(c).alias(f"__n_{c}") for c in data_cols])
@@ -1267,21 +1318,14 @@ class SnapshotLakeSink(DataSink):
         contract; see :meth:`vacuum`), so size keep_last to the slowest
         consumer or pin a tag it has not passed.  Batch analog:
         :meth:`read_changes`."""
-        import pyspark.sql.types as T
-
         self._ensure_meta(table_id, create=False)
         if self.mode != "mor":
             raise ValueError(
                 "stream_changes needs mode='mor' (copy-on-write commits "
                 "rewrite buckets in place; use read_changes' state diff)")
-        with open(self._schema_path(table_id)) as f:
-            schema = Schema.from_json(f.read())
-        fields = list(schema.struct_type().fields) + [
-            T.StructField(OP_COL, T.StringType()),
-            T.StructField(_COMMIT_SEQ, T.LongType()),
-            T.StructField(_BUCKET_COL, T.IntegerType()),
-        ]
-        return (spark.readStream.schema(T.StructType(fields))
+        declared = self._declared(spark, self._table_schema(table_id),
+                                    changelog=True)
+        return (spark.readStream.schema(declared)
                 .option("basePath", self._delta_dir(table_id))
                 .parquet(os.path.join(self._delta_dir(table_id),
                                       f"{_BUCKET_COL}=*"))
@@ -1411,6 +1455,7 @@ class SnapshotLakeSink(DataSink):
                               files_per_bucket=files_per_bucket,
                               zorder=zorder, zorder_bits=zorder_bits)
             return
+        declared = self._declared(spark, self._table_schema(table_id))
         zcol = None
         if zorder:
             all_paths = [os.path.join(self._data_dir(table_id), p)
@@ -1418,14 +1463,12 @@ class SnapshotLakeSink(DataSink):
             if all_paths:
                 # GLOBAL min/max normalization (one bounded agg) so every
                 # bucket's files share one z-space
-                df_all = (spark.read
-                          .option("basePath", self._data_dir(table_id))
-                          .option("mergeSchema", "true").parquet(*all_paths))
+                df_all = self._scan(spark, self._data_dir(table_id),
+                                    all_paths, declared)
                 zcol = _zvalue_col(df_all, zorder, zorder_bits)
         def _rewrite_bucket(b: str, files: list[str]) -> tuple[str, list[str]]:
             paths = [os.path.join(self._data_dir(table_id), p) for p in files]
-            df = (spark.read.option("basePath", self._data_dir(table_id))
-                  .option("mergeSchema", "true").parquet(*paths))
+            df = self._scan(spark, self._data_dir(table_id), paths, declared)
             if zcol is not None:
                 df = (df.withColumn("__zorder", zcol)
                       .repartitionByRange(files_per_bucket, F.col("__zorder"))
@@ -1476,12 +1519,12 @@ class SnapshotLakeSink(DataSink):
         delta_paths = [os.path.join(self._delta_dir(tid), p)
                        for files in manifest["deltas"].values() for p in files]
         merged = self._merge_read(spark, tid, base_paths, delta_paths)
-        pks = self._pks(tid)
+        schema = self._table_schema(tid)
         new_seq = manifest["seq"] + 1
         rows = (merged
                 .withColumn(_BUCKET_COL,
-                            self._bucket_of(merged, pks,
-                                            self._table_schema(tid)))
+                            self._bucket_of(merged, schema.primary_keys,
+                                            schema))
                 .withColumn(_COMMIT_SEQ, F.lit(new_seq).cast("bigint")))
         # single pass (optimization r11, guide §2.4/§5): the staged
         # write's added_map is the touched-bucket set — no persist +

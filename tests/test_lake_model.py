@@ -6,6 +6,7 @@ group after a bucket empties, a vacuumed live shard) that single-path
 tests can miss.  Deterministic seeds instead of hypothesis: each example
 costs several Spark jobs."""
 
+import os
 import random
 
 import pytest
@@ -199,3 +200,170 @@ def test_concurrent_writer_files_never_absorbed(spark, tmp_path):
     assert "part-foreign-XYZ.parquet" not in " ".join(all_files)
     got = {(r["k"], r["v"]) for r in sink.read(spark, TID).collect()}
     assert got == {(1, 11), (2, 20)}  # no absorbed duplicate rows
+
+
+# -- schema evolution under the declared-schema scan -----------------------
+
+def _evolve(sink, schema, event):
+    from source_flink_cdc_3_5_0_spark.operators.schema_evolution import \
+        apply_schema_change_event
+
+    evolved = apply_schema_change_event(schema, event)
+    sink.metadata_applier().apply_schema_change(TID, event, evolved)
+    return evolved
+
+
+def _typed_batch(spark, schema, rows):
+    """rows: (k, v, ...) images upserted as +U, typed by ``schema``."""
+    ddl = ", ".join(f"{c.name} {c.data_type.simpleString()}"
+                    for c in schema.columns)
+    df = spark.createDataFrame(rows, ddl)
+    return df.select("*", F.lit("+U").alias(OP_COL),
+                     F.lit(0).cast("bigint").alias(SEQ_COL))
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_int_to_bigint_widening_then_upsert(spark, tmp_path, mode):
+    """After v: INT -> BIGINT and one more write, older files hold an INT
+    column and newer ones a BIGINT column. A read must widen the old
+    files instead of refusing to merge the two footers."""
+    import pyspark.sql.types as T
+
+    from source_flink_cdc_3_5_0_spark.common.events import \
+        AlterColumnTypeEvent
+
+    sink = SnapshotLakeSink(str(tmp_path / mode), num_buckets=4, mode=mode)
+    schema = Schema.from_struct_type(
+        spark.createDataFrame([], "k long, v int").schema, primary_keys=["k"])
+    sink.metadata_applier().apply_schema_change(
+        TID, CreateTableEvent(TID, schema), schema)
+    sink.write(TID, _typed_batch(spark, schema,
+                                 [(k, k * 10) for k in range(1, 9)]),
+               schema, batch_id=0)
+    schema = _evolve(sink, schema, AlterColumnTypeEvent(
+        TID, (("v", T.LongType()),)))
+    big = 1 << 40
+    sink.write(TID, _typed_batch(spark, schema, [(1, big), (9, big + 9)]),
+               schema, batch_id=1)
+    got = sink.read(spark, TID)
+    assert dict(got.dtypes)["v"] == "bigint"
+    want = {k: k * 10 for k in range(2, 9)} | {1: big, 9: big + 9}
+    assert {r["k"]: r["v"] for r in got.collect()} == want
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_added_column_default_survives_next_write(spark, tmp_path, mode):
+    """Flink CDC ADD COLUMN ... DEFAULT: rows written before the ADD read
+    the default, rows written after it read their own value (NULL
+    included) — also after a later write puts the column into some files
+    and, on copy-on-write, rewrites the old rows' buckets."""
+    import pyarrow.parquet as pq
+    import pyspark.sql.types as T
+
+    from source_flink_cdc_3_5_0_spark.common.events import AddColumnEvent
+    from source_flink_cdc_3_5_0_spark.common.schema import Column
+
+    sink = SnapshotLakeSink(str(tmp_path / mode), num_buckets=2, mode=mode)
+    schema = Schema.from_struct_type(
+        spark.createDataFrame([], "k long, v long").schema, primary_keys=["k"])
+    sink.metadata_applier().apply_schema_change(
+        TID, CreateTableEvent(TID, schema), schema)
+    sink.write(TID, _typed_batch(spark, schema,
+                                 [(k, k * 10) for k in range(1, 7)]),
+               schema, batch_id=0)
+    schema = _evolve(sink, schema, AddColumnEvent.last(
+        TID, Column("c", T.StringType(), default_expr="'dflt'")))
+
+    def state():
+        return {r["k"]: (r["v"], r["c"])
+                for r in sink.read(spark, TID).collect()}
+
+    before = {k: (k * 10, "dflt") for k in range(1, 7)}
+    assert state() == before
+    sink.write(TID, _typed_batch(spark, schema,
+                                 [(1, 11, "own"), (7, 70, None)]),
+               schema, batch_id=1)
+    assert state() == before | {1: (11, "own"), 7: (70, None)}
+    if mode == "cow":
+        # the bucket rewrite read the old rows through the default, so
+        # the rewritten files hold it as data
+        rewritten = [os.path.join(sink._data_dir(TID), p)
+                     for fs in sink._manifest(TID)["buckets"].values()
+                     for p in fs]
+        for path in rewritten:
+            t = pq.read_table(path).to_pydict()
+            if "c" in t:
+                assert all(c == "dflt" for k, c in zip(t["k"], t["c"])
+                           if 2 <= k <= 6), (path, t)
+
+
+
+def test_non_constant_default_reads_null_for_older_rows(spark, tmp_path):
+    """A default Spark cannot fold to a constant (MySQL's
+    ``CURRENT_TIMESTAMP(6)`` as the DDL parser keeps it) cannot be read
+    into files that lack the column: older rows read NULL, and the table
+    stays readable."""
+    import pyspark.sql.types as T
+
+    from source_flink_cdc_3_5_0_spark.common.events import AddColumnEvent
+    from source_flink_cdc_3_5_0_spark.common.schema import Column
+
+    sink = SnapshotLakeSink(str(tmp_path / "t"), num_buckets=2, mode="mor")
+    schema = Schema.from_struct_type(
+        spark.createDataFrame([], "k long, v long").schema, primary_keys=["k"])
+    sink.metadata_applier().apply_schema_change(
+        TID, CreateTableEvent(TID, schema), schema)
+    _write_batch(spark, sink, schema, [(1, 10), (2, 20)], 0)
+    _evolve(sink, schema, AddColumnEvent.last(
+        TID, Column("ts", T.TimestampType(),
+                    default_expr="CURRENT_TIMESTAMP(6)")))
+    got = {r["k"]: r["ts"] for r in sink.read(spark, TID).collect()}
+    assert got == {1: None, 2: None}
+
+def test_reads_start_no_planning_job(spark, tmp_path):
+    """A read plans from the manifest and the sidecar alone: building the
+    read() and read_changes() frames of a MoR table with more live files
+    than Spark's stock parallel-listing threshold (32) starts no Spark
+    job — neither a file-listing job nor a footer schema merge — in a
+    session carrying the engine's confs."""
+    from source_flink_cdc_3_5_0_spark.common.session import \
+        apply_engine_confs
+
+    class _LiveConf:  # a Builder's config() onto a running session
+        def __init__(self, session):
+            self.session = session
+
+        def config(self, k, v):
+            self.session.conf.set(k, v)
+            return self
+
+    sink = SnapshotLakeSink(str(tmp_path / "mor"), num_buckets=8, mode="mor")
+    schema = Schema.from_struct_type(
+        spark.createDataFrame([], "k long, v long").schema, primary_keys=["k"])
+    sink.metadata_applier().apply_schema_change(
+        TID, CreateTableEvent(TID, schema), schema)
+    for b in range(5):
+        _write_batch(spark, sink, schema,
+                     [(k, b * 100 + k) for k in range(64)], b)
+    deltas = sink._manifest(TID)["deltas"]
+    assert sum(len(fs) for fs in deltas.values()) > 32
+    first, last = sink.snapshots(TID)[0], sink.snapshots(TID)[-1]
+
+    session = apply_engine_confs(_LiveConf(spark.newSession())).session
+    sc = spark.sparkContext
+    group = f"lake-plan-{tmp_path.name}"
+    sc.setJobGroup(group, "build lake read frames")
+    try:
+        frames = [sink.read(session, TID),
+                  sink.read(session, TID, filters=[("k", "=", 3)]),
+                  sink.read_changes(session, TID, first),
+                  sink.read_changes(session, TID, last)]
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert {r["k"]: r["v"] for r in frames[0].collect()} == \
+        {k: 400 + k for k in range(64)}
+    assert [r["v"] for r in frames[1].collect()] == [403]
+    assert frames[2].count() == 4 * 64
+    assert frames[3].count() == 0

@@ -29,6 +29,15 @@ def test_engine_confs_carry_the_aqe_floor():
     assert "spark.sql.adaptive.coalescePartitions.minPartitionSize" in confs
 
 
+def test_engine_confs_keep_lake_file_listing_on_the_driver():
+    """Lake reads pass one root path per manifest-listed file; above the
+    parallel-discovery threshold Spark lists them in a job before the scan
+    is planned. The engine raises it to one fixed value, with no env
+    override."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert engine_session_confs()[key] == "10000"
+
+
 def test_env_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_AQE_MIN_PARTITION", "1m")
     assert engine_session_confs()[
@@ -49,8 +58,12 @@ def test_every_session_builder_inherits_the_engine_confs():
     session routes through apply_engine_confs, so the floor cannot drift
     back into being harness-only."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for rel in ("bench.py", "bench_retime.py", "bench_scale.py",
-                os.path.join("source_flink_cdc_3_5_0_spark", "__main__.py")):
+    tools = [os.path.join(".claude", f"{t}.py") for t in (
+        "profile_query", "capture_plans", "conf_experiment",
+        "cprofile_query")]
+    for rel in ["bench.py", "bench_retime.py", "bench_scale.py",
+                os.path.join("source_flink_cdc_3_5_0_spark", "__main__.py"),
+                *tools]:
         with open(os.path.join(root, rel)) as f:
             src = f.read()
         assert "apply_engine_confs" in src, \
