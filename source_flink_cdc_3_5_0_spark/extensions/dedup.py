@@ -14,6 +14,20 @@
 Design note for 1000-executor scale: every operator here avoids all-pairs
 comparisons; candidate generation is always a hash-bucket equi-join so the
 shuffle is O(n·bands), and verification touches only bucket-mates.
+
+Python-UDF cost: a pandas-UDF task has a fixed Python-worker cost that
+dwarfs the UDF bodies. Measured on a 4-core host (Python 3.11, pyspark
+4.1): an identity UDF costs 0.26-0.30 s of worker CPU per task at 4, 16
+or 64 tasks, over 4,000 or 400,000 rows alike, while the MinHash and SRP
+bodies take about 0.2 s of CPU for a whole 3,300-document + 3,300-vector
+pass. Most of the fixed cost is pyspark's per-task ``setup_spark_files``
+→ ``importlib.invalidate_caches()``, which re-reads the ``pyspark.zip``
+directory (1,328 entries) once per zipimporter on ``sys.path``; timed
+alone, one such call takes ~0.11 s of CPU. So the count of UDF tasks
+sets the Python bill, and each LSH band self-join here evaluates its UDF
+once: the band table is hash-partitioned on the join key above the UDF,
+and AQE serves both join sides from that one exchange (a
+ShuffleQueryStage plus a ReusedExchange).
 """
 
 from __future__ import annotations
@@ -134,9 +148,12 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 def _spread(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition ahead of a pandas-UDF stage: a single-file parquet
     scan yields ONE partition, serializing the Python compute; spreading to
-    the session's parallelism restores linear scaling. Hash (not round-robin)
-    partitioning keeps the subtree deterministic so the downstream self-join
-    REUSES the exchange instead of recomputing the signatures twice."""
+    the session's parallelism restores linear scaling. Hash (not
+    round-robin) partitioning keeps the subtree deterministic. This
+    exchange sits BELOW the UDF, so reusing it does not spare a self-join
+    its second UDF pass: callers that join the UDF output with itself
+    hash-partition that output on the join key, and both join sides read
+    the one exchange above the UDF."""
     target = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(target, F.col(key))
 
@@ -159,7 +176,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
                 for b in range(_BANDS)
             ])
         ).alias("bk"),
-    ).select(id_col, "sig", "bk.band", "bk.bucket")
+    ).select(id_col, "sig", "bk.band", "bk.bucket").repartition("band", "bucket")
     left = bands.alias("l")
     right = bands.alias("r")
     cand = (
@@ -633,7 +650,7 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "
                      F.shiftrightunsigned(F.col("sh"), b * 16).bitwiseAND(F.lit(0xFFFF)).alias("key"))
             for b in range(4)
         ])).alias("bk"),
-    ).select(id_col, "sh", "bk.band", "bk.key")
+    ).select(id_col, "sh", "bk.band", "bk.key").repartition("band", "key")
     cand = (
         bands.alias("l").join(bands.alias("r"), on=["band", "key"])
         .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
@@ -811,16 +828,19 @@ def _srp_planes(dim: int) -> np.ndarray:
 @pandas_udf(T.ArrayType(T.IntegerType()))
 def srp_band_keys(vecs: pd.Series) -> pd.Series:
     """8 band keys (8 sign bits each) per vector — Arrow-batched numpy
-    matmul, no per-row Python."""
-    rows = [np.asarray(v, dtype=np.float64) for v in vecs]
-    if not rows:
-        return pd.Series([], dtype=object)
-    X = np.stack(rows)
+    matmul, no per-row Python.  A NULL vector gets NULL keys, so it
+    joins nothing."""
+    present = vecs.notna().to_numpy()
+    if not present.any():
+        return pd.Series([None] * len(vecs), dtype=object)
+    X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs[present]])
     bits = (X @ _srp_planes(X.shape[1]).T) >= 0.0     # (n, 64) bool
     r = _SRP_BITS // _SRP_BANDS
     weights = (1 << np.arange(r))[::-1]
-    bands = bits.reshape(len(X), _SRP_BANDS, r) @ weights  # (n, 8) ints
-    return pd.Series([b.astype(np.int32).tolist() for b in bands])
+    bands = iter((bits.reshape(len(X), _SRP_BANDS, r) @ weights)  # (n, 8)
+                 .astype(np.int32).tolist())
+    return pd.Series([next(bands) if p else None for p in present],
+                     dtype=object)
 
 
 def srp_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
@@ -838,16 +858,23 @@ def srp_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
     of its already-tiny one-band rate, keeping the verify tier ~70×
     smaller than any-band banding.  At a looser cos 0.99 gate the miss
     rate grows to ~2e-3 — quantify before claiming exactness there.
-    One shuffle on the (band, key) pair —
-    never the vectors; verification computes true cosine for bucket-mates
-    only, via id joins back to the vector table."""
+    One UDF pass over the spread (id, vector) rows, then one shuffle
+    of (id, band, key) rows on (band, key) that both sides of the band
+    self-join read — the vectors never enter it; verification computes
+    true cosine for bucket-mates only, via id joins back to the vector
+    table."""
     v = df.select(F.col(id_col),
                   F.transform(F.col(vec_col),
                               lambda x: x.cast("double")).alias("v"))
     keyed = (_spread(df, id_col)
              .select(F.col(id_col),
                      srp_band_keys(F.col(vec_col)).alias("bands")))
-    h = keyed.select(F.col(id_col), F.posexplode("bands").alias("bx", "bv"))
+    # the OUTER generator infers no `size(bands) > 0` filter, which
+    # predicate pushdown would sink below the spread exchange as a second
+    # UDF pass; a NULL-keyed row still joins nothing
+    h = (keyed.select(F.col(id_col),
+                      F.posexplode_outer("bands").alias("bx", "bv"))
+         .repartition("bx", "bv"))
     # ≥2 matching bands (same slot-count trick as minhash_lsh_exact_pairs):
     # a random pair matches one band with 2^-8 but two with ~4e-4 of that,
     # while a near-identical pair (per-band p ≈ 0.92) misses two bands with

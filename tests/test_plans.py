@@ -374,6 +374,45 @@ def test_srp_neardup_no_cartesian_band_join(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
+def _lsh_pairs(spark, fn):
+    from source_flink_cdc_3_5_0_spark.extensions import dedup
+
+    table, key = (("embeddings", "vec_id") if fn == "srp_neardup_pairs"
+                  else ("documents", "doc_id"))
+    # a trivially-true filter no other test uses: keeps the input
+    # canonically distinct from other tests' calls, whose cache entries
+    # (minhash_lsh_exact_pairs persists the same signature subtree) would
+    # otherwise replace the UDF stage with a cached scan
+    return getattr(dedup, fn)(spark.read.parquet(f"{SF}/{table}.parquet")
+                              .where(f"{key} IS NULL OR {key} = {key}"))
+
+
+@pytest.mark.parametrize("fn, band_key", [
+    ("minhash_lsh_pairs", "band"),
+    ("simhash_neardup_pairs", "band"),
+    ("srp_neardup_pairs", "bx"),
+])
+def test_lsh_band_self_join_runs_udf_once(spark, fn, band_key):
+    """The band self-join reads ONE exchange hash-partitioned on the band
+    key above the pandas UDF: AQE serves the second join side as a
+    ReusedExchange, so the UDF runs once per row.  Without it each side
+    re-ran the UDF (SRP a third time, for a generator filter pushed below
+    the spread exchange).  Pinned on the final adaptive plan of the
+    DataFrame that ran — a ``.write`` plans its own QueryExecution."""
+    import re
+
+    df = _lsh_pairs(spark, fn)
+    df.collect()
+    p = plan_of(df)
+    assert p.startswith("AdaptiveSparkPlan isFinalPlan=true"), p
+    # no cached relation or subquery here, so the first Initial Plan
+    # marker is the top-level one
+    final = p.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+    assert re.search(r"ReusedExchange \[.*\], Exchange hashpartitioning\("
+                     rf"{band_key}#", final), final
+
+
 def test_rolling_revenue_single_shuffle(spark):
     """Time-RANGE frame: one hash exchange on o_custkey, the frame sort
     rides the same exchange."""

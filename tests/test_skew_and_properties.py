@@ -351,3 +351,26 @@ class TestWinnowingGuarantee:
             got = winnowed_fingerprint_pairs(df, k=8, window=4).collect()
             assert len(got) == 1 and got[0]["n_shared_fps"] >= 1, \
                 (off_a, off_b)
+
+
+class TestLshNullInputs:
+    @pytest.mark.parametrize("fn", [
+        "minhash_lsh_pairs", "simhash_neardup_pairs", "srp_neardup_pairs"])
+    def test_null_input_row_joins_nothing(self, spark, fn):
+        """A NULL text or embedding pairs with nothing and does not fail
+        the query: the other rows still pair."""
+        from source_flink_cdc_3_5_0_spark.extensions import dedup
+
+        if fn == "srp_neardup_pairs":
+            v = [float(i + 1) for i in range(8)]
+            w = [(-1.0) ** i for i in range(8)]
+            df = spark.createDataFrame(
+                [(1, v), (2, v), (3, None), (4, w)],
+                "vec_id bigint, embedding array<double>")
+        else:
+            df = spark.createDataFrame(
+                [(1, "a b c d e f"), (2, "a b c d e f"), (3, None),
+                 (4, "q r s t u v")],
+                "doc_id bigint, text string")
+        got = sorted((r.id_a, r.id_b) for r in getattr(dedup, fn)(df).collect())
+        assert got == [(1, 2)]
