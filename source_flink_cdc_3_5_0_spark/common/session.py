@@ -17,8 +17,7 @@ profile: cdc_db2_asn). Lowering the floor keeps
 ``coalescePartitions.parallelismFirst`` actually parallel. At production
 shuffle sizes every partition exceeds any of these values, so the floor
 is inert there — it only matters where small-byte/high-CPU stages meet
-many cores. Override per deployment via ``SPARK_GRAFT_AQE_MIN_PARTITION``
-(any Spark byte string, e.g. ``1m`` to restore the stock default).
+many cores. It is one constant, 64k, not a deployment knob.
 
 Why the listing threshold: a lake read (``sinks/lakehouse.py``) hands
 Spark the data files its snapshot manifest already lists, one root path
@@ -33,22 +32,31 @@ and the lake's declared-schema scan, the median read of the benchmark's
 threshold is 10000 paths, which keeps a serial listing of local files
 near a second. It is a constant, not a deployment knob, and a session
 conf because a per-read ``.option(...)`` does not reach the file index.
+
+Why no JVM flag: C1-only JIT (``-XX:TieredStopAtLevel=1``) was measured
+and rejected. On a 4-core host it cut the benchmark's CPU, because its
+rounds plan short queries whose JIT time outweighs their task time:
+``upsert_stream`` ``cpu_ms_per_krecord`` 150/152 → 116/129 and its read
+1960/1760 → 1080/1070 ms, ``neardup_corpus`` 600/556 → 468/499. But C1
+code runs tasks about half as fast, and executor-heavy registry queries
+at sf0.1 lost (process CPU-ms, two passes in each of two sessions per
+setting): ``text_lm_quality`` 11350-13500 → 18690-20840,
+``stats_correlation`` 5380-7610 → 7050-7830, ``cdc_postgres_pipeline``
+13470-21100 → 22660-24160. ``-XX:CICompilerCount=2``, 3× tier-4
+thresholds and ``-XX:+UseParallelGC`` left ``upsert_stream`` within
+noise. The engine therefore ships no JVM flag.
 """
 
 from __future__ import annotations
-
-import os
 
 
 def engine_session_confs() -> dict[str, str]:
     """Session confs the engine recommends wherever IT builds the session.
     Deliberately tiny: only settings whose rationale is an engine operator
-    profile (see the module docstring); the AQE floor is parameterised by
-    env for non-local deployments."""
+    profile (see the module docstring)."""
     return {
         "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "10000",
     }
 

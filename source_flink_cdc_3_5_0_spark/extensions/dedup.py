@@ -16,17 +16,17 @@ comparisons; candidate generation is always a hash-bucket equi-join so the
 shuffle is O(n·bands), and verification touches only bucket-mates.
 
 Python-UDF cost: a pandas-UDF task has a fixed Python-worker cost that
-dwarfs the UDF bodies. Measured on a 4-core host (Python 3.11, pyspark
-4.1): an identity UDF costs 0.26-0.30 s of worker CPU per task at 4, 16
-or 64 tasks, over 4,000 or 400,000 rows alike, while the MinHash and SRP
-bodies take about 0.2 s of CPU for a whole 3,300-document + 3,300-vector
-pass. Most of the fixed cost is pyspark's per-task ``setup_spark_files``
-→ ``importlib.invalidate_caches()``, which re-reads the ``pyspark.zip``
-directory (1,328 entries) once per zipimporter on ``sys.path``; timed
-alone, one such call takes ~0.11 s of CPU. So the count of UDF tasks
-sets the Python bill, and each LSH band self-join here evaluates its UDF
-once: the band table is hash-partitioned on the join key above the UDF,
-and AQE serves both join sides from that one exchange (a
+dwarfs the UDF bodies at small inputs. Measured on a 4-core host (Python
+3.11, pyspark 4.1): an identity UDF costs 0.19-0.26 s of worker CPU per
+task at 1, 4 or 16 tasks, whatever its rows. Most of it is pyspark's
+per-task ``setup_spark_files`` → ``importlib.invalidate_caches()``, which
+re-reads the ``pyspark.zip`` directory (1,328 entries) once per
+zipimporter on ``sys.path``. So a UDF task's fixed cost, not the core
+count, sets how many tasks a UDF stage gets: ``_spread`` sizes the stage
+from the input's estimated bytes (see ``_UDF_TASK_BYTES``) and uses the
+cores only as the ceiling. And each LSH band self-join here evaluates its
+UDF once: the band table is hash-partitioned on the join key above the
+UDF, and AQE serves both join sides from that one exchange (a
 ShuffleQueryStage plus a ReusedExchange).
 """
 
@@ -145,17 +145,43 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
+# Input bytes (the Catalyst size estimate of a UDF stage's input) whose
+# pandas-UDF body costs as much CPU as one UDF task's fixed cost. Measured
+# on a 4-core host over the benchmark's 3,300-document / 3,300-vector
+# corpus (parquet, ~0.63 MB estimated each): a task costs ~0.23 s of
+# Python-worker CPU before its first row (identity UDF, 1/4/16 tasks);
+# the MinHash body takes 0.185 s per 0.63 MB (0.29 s/MB), the SRP body
+# 0.054 s (0.09 s/MB). The break-even is 0.23/0.29 ≈ 0.8 MB for MinHash
+# and 0.23/0.09 ≈ 2.6 MB for SRP; the constant is the costlier body's,
+# rounded to 1 MiB. Bytes are a proxy: MinHash costs 0.61 s/MB over the
+# sf0.1 documents table (better-compressed text), and the SimHash body
+# 1.9 s/MB (break-even ~0.12 MB), so a sub-MiB SimHash stage runs in one
+# task, trading wall time for CPU (sf0.1 on 4 cores: ~1.3 → ~2.1 s wall,
+# ~4.0 → ~3.4 s CPU).
+_UDF_TASK_BYTES = 1 << 20
+
+
 def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Hash-repartition ahead of a pandas-UDF stage: a single-file parquet
-    scan yields ONE partition, serializing the Python compute; spreading to
-    the session's parallelism restores linear scaling. Hash (not
-    round-robin) partitioning keeps the subtree deterministic. This
-    exchange sits BELOW the UDF, so reusing it does not spare a self-join
-    its second UDF pass: callers that join the UDF output with itself
-    hash-partition that output on the join key, and both join sides read
-    the one exchange above the UDF."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(target, F.col(key))
+    """Hash-repartition ahead of a pandas-UDF stage into
+    ``clamp(ceil(estimated_bytes / _UDF_TASK_BYTES), 1, defaultParallelism)``
+    partitions. A UDF task's fixed Python-worker cost, not the core count,
+    sets the count: a task is worth adding only when its share of the UDF
+    body costs at least that fixed cost, so a small input runs in one task
+    and a large one (or one whose size is unknown) spreads over every core,
+    as a single-file scan (ONE partition) would otherwise serialize it.
+    The estimate is the input plan's Catalyst statistics, computed on the
+    driver without a job. Unknown statistics (an RDD-backed frame) report
+    ``spark.sql.defaultSizeInBytes``, Long.MaxValue unless a session lowers
+    it, so they and overflowing estimates clamp to the core count.
+    Hash (not round-robin) partitioning keeps the subtree deterministic.
+    This exchange sits BELOW the UDF, so reusing it does not spare a
+    self-join its second UDF pass: callers that join the UDF output with
+    itself hash-partition that output on the join key, and both join
+    sides read the one exchange above the UDF."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    n = min(cores, max(1, -(-size // _UDF_TASK_BYTES)))
+    return df.repartition(n, F.col(key))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -177,28 +203,24 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
             ])
         ).alias("bk"),
     ).select(id_col, "sig", "bk.band", "bk.bucket").repartition("band", "bucket")
-    left = bands.alias("l")
-    right = bands.alias("r")
-    cand = (
-        left.join(right, on=["band", "bucket"], how="inner")
+    est = F.aggregate(
+        F.zip_with("l.sig", "r.sig", lambda a, b: (a == b).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ) / F.lit(_N_HASHES)
+    # the estimate is a function of the pair, so it is computed and
+    # filtered right after the band join and the pairs deduplicate as
+    # scalars: no signature crosses the post-join exchange
+    return (
+        bands.alias("l").join(bands.alias("r"), on=["band", "bucket"])
         .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
         .select(
             F.col(f"l.{id_col}").alias("id_a"),
             F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.sig").alias("sig_a"),
-            F.col("r.sig").alias("sig_b"),
+            est.cast("double").alias("est_jaccard"),
         )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(_N_HASHES)
-    return (
-        cand.withColumn("est_jaccard", est.cast("double"))
         .where(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard")
+        .distinct()
     )
 
 
@@ -311,8 +333,12 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # persist the exploded gram table: it feeds BOTH self-join sides and
     # the per-doc size aggregate — uncached, the tokenize+explode subtree
     # runs three times (the join sides' exchange reuse doesn't cover the
-    # separate sizes aggregation)
-    grams = (_spread(df, id_col)
+    # separate sizes aggregation). The spread keeps one task per core, not
+    # _spread's byte sizing: the explode is JVM work with no per-task
+    # Python cost to amortize, and sized to one task at sf0.1 on 4 cores
+    # the query took 47-68 s of CPU and ~60 s wall against 53-58 s and 15 s
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    grams = (df.repartition(cores, F.col(id_col))
              .select(F.col(id_col).alias("id"),
                      F.explode(word_ngrams_col(text_col, k=k)).alias("gram"))
              .persist())
@@ -340,7 +366,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         .select("id_a", "id_b", "jaccard")
     )
     # release handle, same convention as minhash_lsh_exact_pairs'
-    # lsh_base/lsh_pruned: callers that are done with the result call
+    # lsh_pruned/lsh_grams: callers that are done with the result call
     # out.gram_base.unpersist() (re-invocations canonicalize to the same
     # cache entry, so a long session holds ONE copy, not one per call)
     out.gram_base = grams
@@ -383,25 +409,28 @@ def minhash_lsh_exact_pairs(df: DataFrame, text_col: str = "text", id_col: str =
     of massive mutual-dup clusters, which belong to ``exact_dedup``
     upstream; leave None for the oracle-exact answer.
 
-    Persisted state is MINIMAL: only (id, 64-long signature) — one pandas
-    UDF pass, O(docs × 512 B), MEMORY_AND_DISK (the signature subtree is
-    referenced by both sides of the self-join and ReusedExchange can't fire
-    across different projections). Gram arrays — the heavyweight payload —
-    are NEVER persisted or shuffled corpus-wide: the verify tier re-derives
-    them only for the est-filtered survivor ids via a semi-join back to the
-    source (re-reads the text column of survivors; trade memory for that
-    re-scan by persisting grams if survivors are ever a large fraction).
-    The tiny survivor pair set is persist()ed too (it fans out into three
-    branches). Callers that want deterministic release can unpersist via
-    the returned DataFrame's ``lsh_base`` / ``lsh_pruned`` attributes."""
+    The signature is not persisted: one pandas-UDF pass explodes each
+    document's 64 (hx, hv) slots, hash-partitioned on (hx, hv) above the
+    UDF, and both sides of the band self-join (and the ``hot_bucket_cap``
+    window) read that one exchange. The outer generator infers no
+    ``size(sig) > 0`` filter, which predicate pushdown would sink below
+    the spread exchange as a second UDF pass. Gram arrays — the
+    heavyweight payload — are NEVER persisted or shuffled corpus-wide: the
+    verify tier re-derives them only for the est-filtered survivor ids via
+    a semi-join back to the source (re-reads the text column of survivors;
+    trade memory for that re-scan by persisting grams if survivors are
+    ever a large fraction). The tiny survivor pair set is persist()ed too
+    (it fans out into three branches). Callers that want deterministic
+    release can unpersist via the returned DataFrame's ``lsh_pruned`` /
+    ``lsh_grams`` attributes."""
     from pyspark import StorageLevel
 
-    sig = (
+    hashes = (
         _spread(df, id_col)
         .select(F.col(id_col), minhash_signature(F.col(text_col)).alias("sig"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(F.col(id_col), F.posexplode_outer("sig").alias("hx", "hv"))
+        .repartition("hx", "hv")
     )
-    hashes = sig.select(F.col(id_col), F.posexplode("sig").alias("hx", "hv"))
     if hot_bucket_cap is not None:
         from pyspark.sql import Window
 
@@ -459,8 +488,7 @@ def minhash_lsh_exact_pairs(df: DataFrame, text_col: str = "text", id_col: str =
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    out.lsh_base = sig        # release handles:
-    out.lsh_pruned = pruned   # out.lsh_base.unpersist(); out.lsh_pruned.unpersist()
+    out.lsh_pruned = pruned   # release handles: out.lsh_pruned.unpersist()
     out.lsh_grams = grams     # out.lsh_grams.unpersist()
     return out
 
@@ -957,7 +985,7 @@ def winnowed_fingerprint_pairs(df: DataFrame, text_col: str = "text",
                # side the exchanges differ so ReusedExchange can't fire —
                # uncached, the tokenize + per-gram md5 + window-min
                # subtree (the expensive part) runs twice (optimization
-               # r11, guide §2.4; same convention as gram_base/lsh_base)
+               # r11, guide §2.4; same convention as gram_base/lsh_pruned)
                .persist())
     out = (fp_rows.alias("l").join(fp_rows.alias("r"), on="fp")
            .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))

@@ -90,19 +90,20 @@ def infer_json_schema(df: DataFrame, col: str = "props") -> DataFrame:
     the key: the single observed type; BIGINT+DOUBLE (±NULL) widen to
     DOUBLE; NULL alone stays NULL; any other mix falls back to VARCHAR —
     JSON's universal donor.  Returns ``(key, jtype, n, inferred)``."""
+    from pyspark.sql import Window
+
     obs = (json_type_observations(df, col)
            .groupBy("key", "jtype").agg(F.count(F.lit(1)).alias("n")))
-    per_key = (obs.where(F.col("jtype") != "NULL")
-                  .groupBy("key")
-                  .agg(F.collect_set("jtype").alias("ts")))
-    inferred = per_key.select(
-        "key",
+    # a window over the key, not a self-join, so the mapInPandas stage
+    # runs once
+    ts = F.collect_set(F.when(F.col("jtype") != "NULL", F.col("jtype"))) \
+        .over(Window.partitionBy("key"))
+    inferred = (
         F.when(F.size("ts") == 0, F.lit("NULL"))
          .when(F.size("ts") == 1, F.element_at("ts", 1))
          .when((F.size("ts") == 2)
                & F.array_contains("ts", "BIGINT")
                & F.array_contains("ts", "DOUBLE"), F.lit("DOUBLE"))
-         .otherwise(F.lit("VARCHAR")).alias("inferred"))
-    return (obs.join(inferred, "key", "left")
-               .select("key", "jtype", "n",
-                       F.coalesce("inferred", F.lit("NULL")).alias("inferred")))
+         .otherwise(F.lit("VARCHAR")))
+    return (obs.withColumn("ts", ts)
+               .select("key", "jtype", "n", inferred.alias("inferred")))

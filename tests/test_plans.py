@@ -112,11 +112,20 @@ def test_ivf_topk_matches_bruteforce_on_probed_buckets(spark):
     assert full_probe == exact
 
 
+def _final_plan(plan: str) -> str:
+    """The first ``== Final Plan ==`` section of an adaptive plan string."""
+    return plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
 def test_lsh_exact_single_udf_pass_and_no_payload_in_band_join(spark):
-    """minhash_lsh_exact_pairs: the pandas-UDF signature stage must run
-    ONCE (persisted base; column pruning would otherwise clone it into
-    every branch — 6 ArrowEvalPython nodes before the fix), and the band
-    self-join must carry only (id, hash) — never gram arrays."""
+    """minhash_lsh_exact_pairs: the pandas-UDF signature stage runs ONCE
+    and nothing persists the signatures: the exploded (id, hx, hv) slots
+    are hash-partitioned on (hx, hv) above the UDF and both band-join
+    sides read that one exchange (column pruning used to clone the UDF
+    into every branch — 6 ArrowEvalPython nodes before the fix). The band
+    self-join carries only (id, hx, hv) — never gram arrays."""
+    import re
+
     from source_flink_cdc_3_5_0_spark.extensions.dedup import (
         minhash_lsh_exact_pairs)
 
@@ -149,11 +158,20 @@ def test_lsh_exact_single_udf_pass_and_no_payload_in_band_join(spark):
         return "\n".join(kept)
 
     live = outside_cached_builds(p)
-    assert p.count("InMemoryTableScan") >= 3, p
     assert "ArrowEvalPython" not in live, live
-    # band-join input scans only (doc_id, sig) — gram payload never enters
-    # the 64x explode
-    assert "InMemoryTableScan [doc_id" in p and "Generate posexplode(sig" in p
+    # the only persisted relations are the survivor pairs and their grams
+    assert not re.search(r"InMemoryRelation \[[^\]]*\bsig#", p), p
+    out.collect()
+    # the survivor-pair cache holds the band join; once built, its plan
+    # prints the build's final adaptive plan first
+    build = _final_plan(plan_of(out.lsh_pruned))
+    assert build.count("ArrowEvalPython") == 1, build
+    assert re.search(r"ReusedExchange \[doc_id#\d+L, hx#\d+, hv#\d+L\], "
+                     r"Exchange hashpartitioning\(hx#", build), build
+    # the outer generator: no inferred size(sig) > 0 filter sinks below
+    # the spread exchange as a second UDF pass
+    assert re.search(r"Generate posexplode\(sig#\d+\), \[doc_id#\d+L\], "
+                     r"true", build), build
 
 
 def test_windowed_counts_single_shuffle_partial_agg(spark):
@@ -411,6 +429,74 @@ def test_lsh_band_self_join_runs_udf_once(spark, fn, band_key):
     assert final.count("ArrowEvalPython") == 1, final
     assert re.search(r"ReusedExchange \[.*\], Exchange hashpartitioning\("
                      rf"{band_key}#", final), final
+
+
+def test_minhash_pairs_after_exact_pairs_still_reuses_band_exchange(spark):
+    """A minhash_lsh_exact_pairs run on the same input leaves no cached
+    signature subtree behind: the later minhash_lsh_pairs still evaluates
+    its UDF once and serves the second band-join side as a
+    ReusedExchange (a cached subtree made each side read its own cache
+    stage and run the band exchange twice). Its candidate pairs
+    deduplicate as scalars: no SortAggregate of first(sig_…) and no
+    array through the post-join exchange."""
+    import re
+
+    from source_flink_cdc_3_5_0_spark.extensions import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet") \
+        .where("doc_id IS NULL OR doc_id <= doc_id")
+    dedup.minhash_lsh_exact_pairs(docs, jaccard_threshold=0.5).collect()
+    df = dedup.minhash_lsh_pairs(docs)
+    df.collect()
+    final = _final_plan(plan_of(df))
+    assert final.count("ArrowEvalPython") == 1, final
+    assert re.search(r"ReusedExchange \[.*\], Exchange hashpartitioning\("
+                     r"band#", final), final
+    assert "SortAggregate" not in final and "first(" not in final, final
+    assert re.search(r"Exchange hashpartitioning\(id_a#\d+L, id_b#\d+L, "
+                     r"est_jaccard#\d+, \d+\)", final), final
+
+
+def test_json_schema_infer_runs_map_in_pandas_once(spark):
+    """The inferred type per key is a window over the key, not a
+    self-join of the observations: one MapInPandas in the final plan."""
+    df = EQ.q_json_schema_infer(spark, SF)
+    df.collect()
+    final = _final_plan(plan_of(df))
+    assert final.count("MapInPandas") == 1, final
+
+
+def _spread_partitions(df) -> int:
+    """The partition count of ``_spread``'s RepartitionByExpression."""
+    from source_flink_cdc_3_5_0_spark.extensions.dedup import _spread
+
+    return _spread(df, df.columns[0])._jdf.queryExecution().analyzed() \
+        .numPartitions()
+
+
+def test_spread_sizes_udf_stage_by_estimated_bytes(spark):
+    """ceil(estimated bytes / _UDF_TASK_BYTES) tasks, clamped to
+    [1, defaultParallelism]: a small parquet input runs in one task, and
+    spark.range (exact statistics, 8 bytes a row) gets one task per
+    _UDF_TASK_BYTES up to the core count."""
+    from source_flink_cdc_3_5_0_spark.extensions.dedup import _UDF_TASK_BYTES
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores >= 3
+    assert _spread_partitions(
+        spark.read.parquet(f"{SF}/documents.parquet")) == 1
+    rows = 2 * _UDF_TASK_BYTES // 8 + 1          # just over 2 x B
+    assert _spread_partitions(spark.range(rows)) == 3
+    big = cores * _UDF_TASK_BYTES // 8 * 10       # 10 x (cores x B)
+    assert _spread_partitions(spark.range(big)) == cores
+
+
+def test_spread_without_statistics_keeps_the_core_count(spark):
+    """An RDD-backed frame reports spark.sql.defaultSizeInBytes, i.e. no
+    estimate: the spread keeps one task per core."""
+    df = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]),
+                               "id bigint")
+    assert _spread_partitions(df) == spark.sparkContext.defaultParallelism
 
 
 def test_rolling_revenue_single_shuffle(spark):

@@ -26,7 +26,8 @@ class _FakeBuilder:
 def test_engine_confs_carry_the_aqe_floor():
     confs = engine_session_confs()
     assert confs["spark.sql.adaptive.enabled"] == "true"
-    assert "spark.sql.adaptive.coalescePartitions.minPartitionSize" in confs
+    assert confs[
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "64k"
 
 
 def test_engine_confs_keep_lake_file_listing_on_the_driver():
@@ -36,15 +37,6 @@ def test_engine_confs_keep_lake_file_listing_on_the_driver():
     override."""
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     assert engine_session_confs()[key] == "10000"
-
-
-def test_env_override(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_AQE_MIN_PARTITION", "1m")
-    assert engine_session_confs()[
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "1m"
-    monkeypatch.delenv("SPARK_GRAFT_AQE_MIN_PARTITION")
-    assert engine_session_confs()[
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "64k"
 
 
 def test_apply_folds_every_conf():
