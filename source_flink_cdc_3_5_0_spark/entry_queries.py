@@ -22,6 +22,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .api import transform_table
+from .common.atomic import atomic_write
 from .common.events import BEFORE_COL, OP_COL
 from .common.schema import Column as SchemaColumn, Schema
 from .extensions import text as X
@@ -2376,10 +2377,7 @@ def q_cdc_mysql_binlog_decode(spark, sf_dir):
     def write_file(row):
         # tasks and driver share a filesystem in local mode; on a real
         # deployment the capture files live on the source server already
-        tmp = os.path.join(served, row.path + ".part")
-        with open(tmp, "wb") as f:
-            f.write(bytes(row.content))
-        os.replace(tmp, os.path.join(served, row.path))
+        atomic_write(os.path.join(served, row.path), bytes(row.content))
 
     try:
         binlog_capture_files(spark, sf_dir).foreach(write_file)
@@ -2803,10 +2801,7 @@ def q_cdc_pgoutput_walsender_decode(spark, sf_dir):
     atexit.register(shutil.rmtree, spool, ignore_errors=True)
 
     def write_file(row):
-        tmp = os.path.join(served, row.path + ".part")
-        with open(tmp, "wb") as f:
-            f.write(bytes(row.content))
-        os.replace(tmp, os.path.join(served, row.path))
+        atomic_write(os.path.join(served, row.path), bytes(row.content))
 
     try:
         pgoutput_capture_files(spark, sf_dir).foreach(write_file)

@@ -13,9 +13,9 @@ barrier is needed. The registry is JSON-checkpointable for streaming restart.
 from __future__ import annotations
 
 import json
-import os
 from typing import Iterator
 
+from ..common.atomic import atomic_write
 from ..common.events import CreateTableEvent, SchemaChangeEvent
 from ..common.schema import Schema
 from ..common.tableid import TableId
@@ -93,10 +93,7 @@ class SchemaRegistry:
         return reg
 
     def checkpoint(self, path: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(self.to_json())
-        os.replace(tmp, path)
+        atomic_write(path, self.to_json())
 
     @staticmethod
     def restore(path: str) -> "SchemaRegistry":

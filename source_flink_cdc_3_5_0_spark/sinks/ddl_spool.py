@@ -21,6 +21,11 @@ applies them BEFORE the spool append so the one unprotected crash window
 (between effect and marker) replays into an idempotent re-apply plus, at
 worst, one duplicated spool line — never a lost effect and never a
 destructive re-apply over later data.
+
+The text-spool sinks (Kafka, Elasticsearch, Stream Load without a live
+endpoint) publish each batch through :func:`spool_batch`: the directory
+``batch_<id>`` appears whole or not at all, and its existence is the
+batch's replay marker.
 """
 
 from __future__ import annotations
@@ -28,6 +33,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+
+from ..common.atomic import atomic_write
 
 _MARKER = "_ddl_state.json"
 
@@ -82,10 +89,22 @@ def spool_ddl(table_dir: str, stmts: list[str], batch_ctx,
         for s in stmts:
             f.write(s + ";\n")
     groups = groups[:ordinal] + [group_digest(stmts)]
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"batch": b, "groups": groups}, f)
-    os.replace(tmp, marker)
+    atomic_write(marker, json.dumps({"batch": b, "groups": groups}))
+
+
+def spool_batch(out: str, lines) -> None:
+    """Publish ``lines`` (a one-string-column DataFrame) as the text
+    directory ``out`` (``.../batch_<id>``) exactly once.  An existing
+    ``out`` is a replayed batch and no-ops.  Spark writes into a
+    dot-prefixed staging dir, which ``batch_*`` globs and Spark's file
+    index both skip, so a crash mid-write leaves nothing a consumer or
+    the replay check could mistake for a committed batch."""
+    if os.path.exists(out):
+        return
+    parent, name = os.path.split(out)
+    staging = os.path.join(parent, f".{name}.tmp")
+    lines.write.mode("overwrite").text(staging)
+    os.rename(staging, out)
 
 
 class DdlSpoolPosition:

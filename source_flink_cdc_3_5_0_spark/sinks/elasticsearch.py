@@ -13,8 +13,9 @@ Spark-first shape: the batch reduces to ONE final image per key (the same
 map-side-combinable reduction every keyed sink here uses), then the bulk
 NDJSON renders entirely JVM-side (``to_json`` over structs — no Python),
 giving byte-exact ``_bulk`` request bodies. With ``hosts`` unset the
-batches spool to ``output_dir/<index>/batch_<id>.ndjson`` with
-atomic-rename replay markers (the spool path, same contract as the
+batches spool to ``output_dir/<index>/batch_<id>/`` through
+:func:`.ddl_spool.spool_batch`: the batch directory appears whole or
+not at all and doubles as the replay marker (same contract as the
 Kafka sink). With ``hosts`` set the body POSTs to ``/_bulk`` over real
 HTTP (round 10) and the response's per-item results are CHECKED —
 ``errors: true`` raises with the first item's error. No ES cluster
@@ -34,6 +35,7 @@ from ..common.schema import Schema
 from ..common.tableid import TableId
 from ..sources.base import SEQ_COL
 from .base import DataSink, MetadataApplier
+from .ddl_spool import spool_batch
 
 
 class _EsMetadataApplier(MetadataApplier):
@@ -124,13 +126,9 @@ class ElasticsearchBulkSink(DataSink):
             post_bulk(self.hosts, body, auth=self.auth,
                       ca_cert=self.ca_cert)
             return
-        out = os.path.join(self.output_dir, table_id.identifier(),
-                           f"batch_{batch_id}")
-        if os.path.exists(out):
-            return  # idempotent replay (same spool contract as Kafka sink)
-        tmp = out + ".tmp"
-        self.encode_bulk(table_id, df, schema).write.mode("overwrite").text(tmp)
-        os.rename(tmp, out)
+        spool_batch(os.path.join(self.output_dir, table_id.identifier(),
+                                 f"batch_{batch_id}"),
+                    self.encode_bulk(table_id, df, schema))
 
 
 def post_bulk(hosts: list[str], body: str,

@@ -21,6 +21,7 @@ from ..common.schema import Schema
 from ..common.tableid import TableId
 from ..sources.debezium import encode_canal, encode_debezium
 from .base import DataSink, MetadataApplier
+from .ddl_spool import spool_batch
 
 
 class _KafkaMetadataApplier(MetadataApplier):
@@ -255,12 +256,6 @@ class KafkaChangelogSink(DataSink):
                 .produce(topic, records, partition=fixed,
                          compression=compression)
         else:
-            out = os.path.join(self.output_dir, topic, f"batch_{batch_id}")
-            if os.path.exists(out):
-                return  # idempotent replay
-            # write to a temp dir then atomically rename: a crash mid-write
-            # must not leave a partial dir that replay would mistake for a
-            # completed batch
-            tmp = out + ".tmp"
-            encoded.select(F.col("value")).write.mode("overwrite").text(tmp)
-            os.rename(tmp, out)
+            spool_batch(os.path.join(self.output_dir, topic,
+                                     f"batch_{batch_id}"),
+                        encoded.select(F.col("value")))

@@ -42,6 +42,8 @@ import socketserver
 import struct
 import threading
 
+from ..common.atomic import atomic_write
+
 API_PRODUCE = 0
 API_FETCH = 1
 API_METADATA = 3
@@ -1146,8 +1148,6 @@ def dump_kafka_topic(bootstrap: str, topic: str, spool_dir: str,
     pipeline consumed and renames the files once. Files whose name
     merely STARTS with 'part-' because the topic is named that way
     ('part-events.part-00000.N.jsonl') are prefixed, not legacy."""
-    import os
-
     os.makedirs(spool_dir, exist_ok=True)
     consumer = KafkaWireProducer(bootstrap, **(security or {}))
     written = []
@@ -1178,11 +1178,9 @@ def dump_kafka_topic(bootstrap: str, topic: str, spool_dir: str,
         if not fresh:
             continue
         name = "%s%d.jsonl" % (prefix, fresh[-1][0] + 1)
-        tmp = os.path.join(spool_dir, name + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write("".join((v or b"").decode("utf-8") + "\n"
-                            for _off, _k, v, _h in fresh))
-        os.replace(tmp, os.path.join(spool_dir, name))
+        atomic_write(os.path.join(spool_dir, name),
+                     "".join((v or b"").decode("utf-8") + "\n"
+                             for _off, _k, v, _h in fresh))
         written.append(name)
     return written
 

@@ -53,6 +53,7 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..common.atomic import atomic_write
 from ..common.events import (DropTableEvent, OP_COL, SchemaChangeEvent,
                              TruncateTableEvent)
 from ..common.schema import Schema
@@ -322,10 +323,8 @@ class _LakeMetadataApplier(MetadataApplier):
                 if st.get("batch") == str(ctx) and n < st.get("applied", 0):
                     return  # this delivery replays an applied truncate
                 self.sink._commit(table_id, {})
-                tmp = spath + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump({"batch": str(ctx), "applied": n + 1}, f)
-                os.replace(tmp, spath)
+                atomic_write(spath, json.dumps({"batch": str(ctx),
+                                                "applied": n + 1}))
                 return
             self.sink._commit(table_id, {})
             return
@@ -418,9 +417,8 @@ class SnapshotLakeSink(DataSink):
         if not create:
             return
         os.makedirs(self._table_dir(tid), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump({"num_buckets": self.num_buckets, "mode": self.mode},
-                      f)
+        atomic_write(path, json.dumps({"num_buckets": self.num_buckets,
+                                       "mode": self.mode}))
 
     def _data_dir(self, tid: TableId) -> str:
         return os.path.join(self._table_dir(tid), "data")
@@ -529,8 +527,6 @@ class SnapshotLakeSink(DataSink):
         snap_dir = self._snap_dir(tid)
         os.makedirs(snap_dir, exist_ok=True)
         seq = (self.snapshots(tid) or [-1])[-1] + 1
-        # per-writer tmp name so racing writers don't collide pre-commit
-        tmp = os.path.join(snap_dir, f"{seq}.json.{os.getpid()}.tmp")
         import time as _time
 
         doc = {"seq": seq, "batch_id": None if batch_id is None
@@ -588,8 +584,7 @@ class SnapshotLakeSink(DataSink):
             # share a shard path (the loser's file would otherwise
             # overwrite content a winning manifest references)
             shard = f"s{seq}_{os.getpid()}_{_uuid.uuid4().hex[:8]}.json"
-            with open(os.path.join(sdir, shard), "w") as f:
-                json.dump(new_entries, f)
+            atomic_write(os.path.join(sdir, shard), json.dumps(new_entries))
             prev_shards = prev_shards + [shard]
         doc["stats_shards"] = prev_shards
         # SHARDED LIVE-FILE LIST (Iceberg manifest files under the
@@ -655,10 +650,7 @@ class SnapshotLakeSink(DataSink):
                 os.utime(fpath)
             else:
                 os.makedirs(fdir, exist_ok=True)
-                tmp_sh = f"{fpath}.{os.getpid()}.{_uuid.uuid4().hex[:8]}.tmp"
-                with open(tmp_sh, "w") as f:
-                    f.write(blob.decode())
-                os.replace(tmp_sh, fpath)  # same-content race is benign
+                atomic_write(fpath, blob)  # same-content race is benign
             refs[g] = fname
         doc["file_shards"] = refs
         # span + file count recorded so READERS can (a) resolve only the
@@ -666,22 +658,18 @@ class SnapshotLakeSink(DataSink):
         # without materializing the full listing
         doc["filelist_span"] = span
         doc["n_files"] = sum(len(fs) for fs in buckets.values())
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
         # optimistic concurrency: atomically CREATE (never overwrite) the
         # manifest — two writers racing to commit seq N cannot both win,
         # the loser gets a conflict instead of silently clobbering the
-        # winner's snapshot (os.rename would overwrite)
-        final = os.path.join(snap_dir, f"{seq}.json")
+        # winner's snapshot
         try:
-            os.link(tmp, final)
+            atomic_write(os.path.join(snap_dir, f"{seq}.json"),
+                         json.dumps(doc), exclusive=True)
         except FileExistsError:
-            os.unlink(tmp)
             raise CommitConflictError(
                 f"{tid}: snapshot {seq} was committed concurrently; "
                 "re-read the manifest and retry (orphaned data files are "
                 "unreferenced — vacuum reclaims them)") from None
-        os.unlink(tmp)
         return seq
 
     def _stats_dir(self, tid: TableId) -> str:
@@ -769,8 +757,7 @@ class SnapshotLakeSink(DataSink):
     def _write_schema(self, tid: TableId, schema: Schema) -> None:
         path = self._schema_path(tid)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            f.write(schema.to_json())
+        atomic_write(path, schema.to_json())
 
     def _existence_default(self, spark: SparkSession, expr: str,
                            dtype: T.DataType) -> str | None:
@@ -922,8 +909,7 @@ class SnapshotLakeSink(DataSink):
             # files actually written, so it matches them by construction
             # even for a nondeterministic batch
             self._write_mor_commit(table_id, final, names, pks, batch_id)
-            with open(marker, "w") as f:
-                f.write("ok")
+            atomic_write(marker, "ok")
             return
         # persist: the touched-bucket collect and the file write are two
         # actions — unpersisted, a nondeterministic batch could write a
@@ -961,8 +947,7 @@ class SnapshotLakeSink(DataSink):
             self._commit(table_id, new_buckets, batch_id)
         finally:
             final.unpersist()
-        with open(marker, "w") as f:
-            f.write("ok")
+        atomic_write(marker, "ok")
 
     def _write_mor_commit(self, tid: TableId, final: DataFrame,
                           names: list[str], pks: list[str], batch_id) -> None:
@@ -1282,11 +1267,7 @@ class SnapshotLakeSink(DataSink):
             raise ValueError(f"unknown snapshot {seq}; have {seqs}")
         tags = self.tags(table_id)
         tags[name] = seq
-        p = self._tags_path(table_id)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(tags, f)
-        os.replace(tmp, p)  # atomic like every other control file
+        atomic_write(self._tags_path(table_id), json.dumps(tags))
         return seq
 
     def tags(self, table_id: TableId) -> dict[str, int]:

@@ -28,6 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..common.atomic import atomic_write
 from ..common.events import (DropTableEvent, OP_COL, SchemaChangeEvent,
                              TruncateTableEvent)
 from ..common.schema import Schema
@@ -61,8 +62,7 @@ class _ParquetMetadataApplier(MetadataApplier):
             return
         path = self.sink._schema_path(table_id)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            f.write(evolved_schema.to_json())
+        atomic_write(path, evolved_schema.to_json())
 
 
 class ParquetUpsertSink(DataSink):
@@ -133,8 +133,7 @@ class ParquetUpsertSink(DataSink):
                 out.write.mode("append").parquet(data_dir)
         else:
             self._merge(spark, df, data_dir, pks, names, schema)
-        with open(marker, "w") as f:
-            f.write("ok")
+        atomic_write(marker, "ok")
 
     @staticmethod
     def _write_bucketed(df: DataFrame, mode: str, data_dir: str,

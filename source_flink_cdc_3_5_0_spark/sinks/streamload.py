@@ -14,13 +14,14 @@ Parity targets:
 Spark-first shape: the batch reduces to ONE final image per key, the
 JSON-lines body renders entirely JVM-side (``to_json``), giving byte-exact
 Stream Load payloads. With no frontend endpoint configured the bodies
-spool to ``output_dir/<table>/batch_<id>`` with atomic-rename replay
-markers, and the DDL statements append to ``output_dir/<table>/ddl.sql``
+spool to ``output_dir/<table>/batch_<id>`` through
+:func:`.ddl_spool.spool_batch` (the batch directory appears whole or not
+at all and is the replay marker), and the DDL statements append to ``output_dir/<table>/ddl.sql``
 (MySQL dialect — what a live Doris/StarRocks applier executes). With a
 ``frontend`` configured (round 10) the body PUTs to the REAL Stream
 Load endpoint ``/api/{db}/{table}/_stream_load`` with a DETERMINISTIC
 ``label`` — the server's label dedup then provides the same replay
-idempotence the spool gets from atomic renames ("Label Already Exists"
+idempotence the spool gets from its batch directories ("Label Already Exists"
 is a clean no-op; any other non-Success status raises by name). No
 Doris/StarRocks ships in this sandbox, so :class:`ToyStreamLoadFrontend`
 speaks the documented API over a real socket (label dedup, per-row
@@ -33,12 +34,13 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..common.atomic import atomic_write
 from ..common.events import OP_COL
 from ..common.schema import Schema
 from ..common.tableid import TableId
 from ..sources.base import SEQ_COL
 from .base import DataSink, MetadataApplier
-from .ddl_spool import DdlSpoolPosition, is_replay, spool_ddl
+from .ddl_spool import DdlSpoolPosition, is_replay, spool_batch, spool_ddl
 from .dialects import MySqlDialect
 
 
@@ -111,10 +113,7 @@ class _StreamLoadSink(DataSink):
                         self._label_salt = f.read().strip()
                 except OSError:
                     salt = uuid.uuid4().hex[:12]
-                    tmp = path + ".tmp"
-                    with open(tmp, "w", encoding="ascii") as f:
-                        f.write(salt + "\n")
-                    os.replace(tmp, path)
+                    atomic_write(path, salt + "\n")
                     self._label_salt = salt
         return self._label_salt
 
@@ -165,7 +164,7 @@ class _StreamLoadSink(DataSink):
             # deterministic label WITHIN a checkpoint lifetime: the
             # server's dedup makes a crash replay of the same batch a
             # clean no-op — the live twin of the spool path's
-            # atomic-rename marker; the salt keeps fresh checkpoints
+            # batch-directory marker; the salt keeps fresh checkpoints
             # from colliding with a previous run's labels
             salt = self._resolve_label_salt()
             label = "cdc-%s%s-%s" % (
@@ -174,14 +173,9 @@ class _StreamLoadSink(DataSink):
             stream_load_put(self.frontend, table_id, body + "\n", label,
                             auth=self.auth)
             return
-        out = os.path.join(self.output_dir, table_id.identifier(),
-                           f"batch_{batch_id}")
-        if os.path.exists(out):
-            return  # idempotent replay
-        tmp = out + ".tmp"
-        self.encode_stream_load(table_id, df, schema) \
-            .write.mode("overwrite").text(tmp)
-        os.rename(tmp, out)
+        spool_batch(os.path.join(self.output_dir, table_id.identifier(),
+                                 f"batch_{batch_id}"),
+                    self.encode_stream_load(table_id, df, schema))
 
 
 def stream_load_put(frontend: str, table_id: TableId, body: str,

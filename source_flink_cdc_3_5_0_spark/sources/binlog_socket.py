@@ -42,6 +42,7 @@ import socket
 import socketserver
 import threading
 
+from ..common.atomic import atomic_write
 from .mysql_binlog import _file_sort_key
 
 _MAX_HEADER = 4096
@@ -151,15 +152,6 @@ def fetch_binlog_files(host: str, port: int, spool_dir: str,
                 with open(dest, "rb") as existing:
                     if existing.read() == data:
                         continue
-            tmp = os.path.join(os.path.dirname(dest),
-                               "." + os.path.basename(dest)
-                               + ".part")  # dot-prefixed: a
-            # crash-leftover temp must stay INVISIBLE to the
-            # Spark binaryFile source and table inference
-            # (round-9 review: a truncated bare .part file
-            # permanently failed every retry)
-            with open(tmp, "wb") as out:
-                out.write(data)
-            os.replace(tmp, dest)  # readers never see a partial file
+            atomic_write(dest, data)  # readers never see a partial file
             fetched.append(name)
     return sorted(fetched, key=_file_sort_key)

@@ -47,6 +47,7 @@ import struct
 import threading
 import zlib
 
+from ..common.atomic import atomic_write
 from .mysql_binlog import (_file_sort_key, _read_lenc,
                            decode_gtid_set, encode_gtid_set)
 from .vitess import gtid_covers  # MySQL GTID-set algebra
@@ -1208,17 +1209,7 @@ def dump_binlog_stream(host: str, port: int, spool_dir: str, *,
                         "name (no ROTATE name, no FDE) — refusing to "
                         "drop them" % len(current))
                 return  # empty magic-only buffer: nothing to lose
-            dest = os.path.join(spool_dir, name)
-            tmp = os.path.join(os.path.dirname(dest),
-                               "." + os.path.basename(dest)
-                               + ".part")  # dot-prefixed: a
-            # crash-leftover temp must stay INVISIBLE to the
-            # Spark binaryFile source and table inference
-            # (round-9 review: a truncated bare .part file
-            # permanently failed every retry)
-            with open(tmp, "wb") as out:
-                out.write(bytes(current))
-            os.replace(tmp, dest)
+            atomic_write(os.path.join(spool_dir, name), bytes(current))
             written.append(name)
 
         # checksum state: None until the first FDE declares the

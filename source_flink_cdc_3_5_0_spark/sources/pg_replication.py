@@ -63,6 +63,8 @@ import struct
 import threading
 import time as _time
 
+from ..common.atomic import atomic_write
+
 _PROTO_V3 = 196608  # 3 << 16
 _MD5_AUTH = 5
 _SASL, _SASL_CONTINUE, _SASL_FINAL = 10, 11, 12
@@ -552,7 +554,9 @@ def start_replication_stream(host: str, port: int, spool_dir: str, *,
       session the same way.
     - **Durability-true acks** — Standby Status Updates report
       ``flushed`` (and ``applied``) as the last LSN actually persisted
-      via the ``os.replace`` spool path, NEVER the received wal_end:
+      (the spool segment and ``.pgwal.next`` each written by
+      ``atomic_write``, so fsynced with their directory before the ack
+      advances), NEVER the received wal_end:
       acking buffered-only WAL advances the slot's
       ``confirmed_flush_lsn`` past data a crash would lose (confirmed
       data loss in the round-7 probe). ``written`` reports the receive
@@ -593,7 +597,7 @@ def start_replication_stream(host: str, port: int, spool_dir: str, *,
     open_prepared: set[str] = set()  # gids prepared but not yet decided
     committed_len = 0           # bytes of buf through the last safe commit
     committed_lsn = 0           # LSN of that commit (durable once flushed)
-    durable_lsn = 0             # last LSN persisted via os.replace
+    durable_lsn = 0             # last LSN fsynced into the spool
     received_lsn = 0            # last wal position seen on the wire
     sentinel_lsn = 0            # consumed stop-message LSN — ackable ONLY
     #                             when nothing was dropped: commits and
@@ -614,21 +618,9 @@ def start_replication_stream(host: str, port: int, spool_dir: str, *,
             return
         name = "pgwal.%06d" % file_no
         file_no += 1
-        dest = os.path.join(spool_dir, name)
-        tmp = os.path.join(os.path.dirname(dest),
-                           "." + os.path.basename(dest)
-                           + ".part")  # dot-prefixed: a
-        # crash-leftover temp must stay INVISIBLE to the
-        # Spark binaryFile source and table inference
-        # (round-9 review: a truncated bare .part file
-        # permanently failed every retry)
-        with open(tmp, "wb") as out:
-            out.write(bytes(buf[:committed_len]))
-        os.replace(tmp, dest)
-        tmp2 = seq_path + ".part"
-        with open(tmp2, "w") as out:
-            out.write(str(file_no))
-        os.replace(tmp2, seq_path)
+        atomic_write(os.path.join(spool_dir, name),
+                     bytes(buf[:committed_len]))
+        atomic_write(seq_path, str(file_no))
         written.append(name)
         buf = bytearray(buf[committed_len:])
         committed_len = 0

@@ -30,6 +30,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
 
+from ..common.atomic import atomic_write
 from ..common.events import CreateTableEvent
 from ..common.schema import Schema
 from ..common.tableid import TableId
@@ -275,10 +276,7 @@ class StreamingPipeline:
 
     def _save_vitess_state(self, state) -> None:
         os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = self._vitess_state_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(state.to_json())
-        os.replace(tmp, self._vitess_state_path())
+        atomic_write(self._vitess_state_path(), state.to_json())
 
     # -- wire-source connector state (OFFSETS) ------------------------------
     def _connector_offset_path(self) -> str:
@@ -321,10 +319,7 @@ class StreamingPipeline:
         if cur is not None and new.compare(cur) <= 0:
             return
         os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = self._connector_offset_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(new.to_json())
-        os.replace(tmp, self._connector_offset_path())
+        atomic_write(self._connector_offset_path(), new.to_json())
 
     # -- shared control plane (delegates to the batch execution) ----------
     def _execution(self) -> PipelineExecution:
@@ -382,10 +377,7 @@ class StreamingPipeline:
             if os.path.exists(self._watermarks_path()):
                 with open(self._watermarks_path()) as f:
                     merged = {**json.load(f), **merged}
-            tmp = self._watermarks_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(merged, f)
-            os.replace(tmp, self._watermarks_path())
+            atomic_write(self._watermarks_path(), json.dumps(merged))
 
     def _discover_new_tables(self, data_df: DataFrame, tables: dict[str, Schema],
                              value_col: str) -> None:

@@ -376,6 +376,52 @@ def test_status_updates_never_ack_beyond_durable_spool(tmp_path):
     assert max(u[1] for u in updates) == max(commit_lsns)
 
 
+def test_acks_follow_fsync_of_segment_and_sidecar(tmp_path, monkeypatch):
+    """A Standby Status Update may advance ``flushed`` to a commit only
+    after the spool segment holding that commit and then the
+    ``.pgwal.next`` sidecar were fsynced, each followed by an fsync of
+    the spool directory (``/proc/self/fd`` names each fsynced fd)."""
+    import os
+
+    from source_flink_cdc_3_5_0_spark.common import atomic
+    from source_flink_cdc_3_5_0_spark.sources import pg_replication
+
+    events = []
+    real_fsync, real_write = os.fsync, pg_replication.write_msg
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink("/proc/self/fd/%d" % fd)))
+        real_fsync(fd)
+
+    def write_msg(wfile, mtype, payload):
+        if mtype == b"d" and payload[:1] == b"r":  # client status update
+            events.append(("ack", struct.unpack_from(">QQ", payload, 1)[1]))
+        real_write(wfile, mtype, payload)
+
+    monkeypatch.setattr(atomic.os, "fsync", fsync)
+    monkeypatch.setattr(pg_replication, "write_msg", write_msg)
+    src = _capture(tmp_path, n_txns=6)
+    spool = tmp_path / "spool"
+    with PgWalToyServer(str(src), keepalive_every=1) as srv:
+        written = start_replication_stream(srv.host, srv.port, str(spool),
+                                           commits_per_file=2)
+    assert len(written) == 3
+    segment_of = {max(c["commit_lsn"] for c in pgoutput_changes(
+        (spool / n).read_bytes()) if "commit_lsn" in c): n for n in written}
+    acked = 0
+    for i, (kind, val) in enumerate(events):
+        if kind != "ack" or val <= acked:
+            continue
+        acked = val
+        synced = [os.path.basename(p) for k, p in events[:i] if k == "fsync"]
+        seg = next(j for j, n in enumerate(synced)
+                   if n.startswith(".%s." % segment_of[val]))
+        nxt = next(j for j, n in enumerate(synced)
+                   if j > seg and n.startswith("..pgwal.next."))
+        assert synced[seg + 1] == synced[nxt + 1] == "spool"
+    assert acked == max(segment_of)
+
+
 def test_end_lsn_stops_on_keepalive_after_third_commit(tmp_path):
     """pg_recvlogical --endpos semantics, KEEPALIVE-only by design: the
     client stops at the first keepalive whose wal_end reaches end_lsn

@@ -355,6 +355,79 @@ def test_kafka_sink_conformance(spark, tmp_path):
     assert _kafka_state(out, T2, S1) == {(1, "q")}
 
 
+@pytest.mark.parametrize("kind", ["kafka", "es", "starrocks"])
+def test_text_spool_crash_leftover_stays_invisible(spark, tmp_path,
+                                                   monkeypatch, kind):
+    """A crash between Spark's staging write and the publish leaves the
+    staging dir behind. Consumers glob ``batch_*`` and parse the batch id
+    from the name, so the leftover must not match: they read exactly the
+    committed batches, a replayed batch still no-ops, and the retried
+    batch publishes over the leftover."""
+    from source_flink_cdc_3_5_0_spark.sinks.elasticsearch import \
+        ElasticsearchBulkSink
+    from source_flink_cdc_3_5_0_spark.sinks.streamload import \
+        StarRocksStreamLoadSink
+
+    out = str(tmp_path / kind)
+    sink, state = {
+        "kafka": (KafkaChangelogSink(output_dir=out),
+                  lambda: _kafka_state(out, T1, S2)),
+        "es": (ElasticsearchBulkSink(output_dir=out),
+               lambda: _es_state(out, T1, S2)),
+        "starrocks": (StarRocksStreamLoadSink(output_dir=out),
+                      lambda: _streamload_state(out, T1, S2, "__op", 1)),
+    }[kind]
+    _drive(spark, sink)
+    b2 = _batch_df(spark, S2, [DataChangeEvent.insert(T1, (5, "e", "z"))])
+
+    def crash(src, dst):
+        raise OSError("crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash)
+        with pytest.raises(OSError, match="crash before publish"):
+            sink.write(T1, b2, S2, batch_id=2)
+    assert [n for n in os.listdir(os.path.join(out, T1.identifier()))
+            if n.endswith(".tmp")], "the crash left no staging dir"
+    assert state() == MID_STATE
+    sink.write(T1, b2, S2, batch_id=1)  # replay of a committed batch
+    assert state() == MID_STATE
+    sink.write(T1, b2, S2, batch_id=2)
+    assert state() == MID_STATE | {(5, "e", "z")}
+
+
+def test_kafka_topic_spool_publish_failure_leaves_no_rows(spark, tmp_path,
+                                                          monkeypatch):
+    """``dump_kafka_topic`` spools into the directory ``file_stream_source``
+    reads whole. A failure after the spool file's bytes are written but
+    before it is published must leave nothing that stream reads: a
+    visible partial file would be consumed, then duplicated by the
+    retried dump."""
+    from source_flink_cdc_3_5_0_spark.sinks.kafka_protocol import (
+        KafkaWireProducer, ToyKafkaBroker, dump_kafka_topic)
+    from source_flink_cdc_3_5_0_spark.streaming.runner import \
+        file_stream_source
+
+    spool = str(tmp_path / "spool")
+    with ToyKafkaBroker(num_partitions=1) as br:
+        KafkaWireProducer(br.bootstrap).produce(
+            "cdc.t", [(b"k", b'{"id": %d}' % i, []) for i in range(3)],
+            partition=0)
+
+        def crash(src, dst):
+            raise OSError("crash before publish")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", crash)
+            with pytest.raises(OSError, match="crash before publish"):
+                dump_kafka_topic(br.bootstrap, "cdc.t", spool)
+    q = (file_stream_source(spark, spool).writeStream.format("memory")
+         .queryName("kafka_spool_after_crash")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert spark.table("kafka_spool_after_crash").count() == 0
+
+
 # ---------------------------------------------------------------------------
 # Dialect statement text: 7 DDL events x 3 dialects + keyed DML
 # ---------------------------------------------------------------------------

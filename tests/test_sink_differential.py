@@ -4,9 +4,12 @@ jdbc/sqlite), asserting the IDENTICAL final state. Complements the fixed
 conformance script with randomized op interleavings, replays and
 truncates — the cheap cross-engine analog of the reference's e2e matrix.
 One more input routes two source tables into one sink table (an N:1
-route) through the pipeline, then replays the run."""
+route) through the pipeline, then replays the run.  The crash cases fail
+one control-file write mid-script and restart from the same directory."""
 
+import os
 import random
+import re
 
 import pytest
 from pyspark.sql import types as T
@@ -17,6 +20,7 @@ from source_flink_cdc_3_5_0_spark.common import (
     DataChangeEvent,
     Schema,
     TableId,
+    atomic,
 )
 from source_flink_cdc_3_5_0_spark.common.events import TruncateTableEvent
 from source_flink_cdc_3_5_0_spark.pipeline import (PipelineComposer,
@@ -161,6 +165,62 @@ def test_all_sinks_agree_on_random_scripts(spark, tmp_path, script):
     assert got["memory"] == expected, "python-model mismatch"
     for name, st in got.items():
         assert st == expected, (name, st ^ expected)
+
+
+CRASH_SINKS = {
+    "parquet": lambda root: ParquetUpsertSink(root, num_buckets=3),
+    "lake_cow": lambda root: SnapshotLakeSink(root, num_buckets=3),
+    "lake_mor": lambda root: SnapshotLakeSink(root, num_buckets=3,
+                                              mode="mor"),
+}
+
+
+def _control_kind(path):
+    """A lake manifest part is named by its directory; anything else by
+    its name without digits (``_batch_`` for every replay marker)."""
+    parent = os.path.basename(os.path.dirname(path))
+    if parent in ("_stats", "_filelists", "_snapshots"):
+        return parent
+    return re.sub(r"\d+", "", os.path.basename(path))
+
+
+@pytest.mark.parametrize("sink_name,kind", [
+    ("parquet", "_batch_"),
+    ("lake_cow", "_stats"), ("lake_cow", "_filelists"),
+    ("lake_cow", "_snapshots"), ("lake_cow", "_batch_"),
+    ("lake_mor", "_filelists"), ("lake_mor", "_snapshots"),
+    ("lake_mor", "_batch_"),
+])
+def test_crash_at_control_write_then_redrive_converges(
+        spark, tmp_path, monkeypatch, sink_name, kind):
+    """The seed-7 script crashes at the first control-file write of one
+    kind at or after batch 1; a fresh sink then re-drives the whole
+    script against the same directory and must end in the crash-free
+    state."""
+    batches, replay_at, expected = _script(7)
+    root = str(tmp_path / sink_name)
+    sink = CRASH_SINKS[sink_name](root)
+    current, fired = [-1], []
+    real_write, real_publish = sink.write, atomic._publish
+
+    def write(tid, df, schema, batch_id):
+        current[0] = batch_id
+        real_write(tid, df, schema, batch_id)
+
+    def publish(tmp, path, exclusive):
+        if current[0] >= 1 and not fired and _control_kind(path) == kind:
+            fired.append(path)
+            raise OSError("injected crash")
+        real_publish(tmp, path, exclusive)
+
+    monkeypatch.setattr(sink, "write", write)
+    monkeypatch.setattr(atomic, "_publish", publish)
+    with pytest.raises(OSError, match="injected crash"):
+        _drive(spark, sink, batches, replay_at)
+    monkeypatch.undo()
+    restarted = CRASH_SINKS[sink_name](root)
+    _drive(spark, restarted, batches, replay_at)
+    assert _state_read(restarted, spark) == expected, fired
 
 
 def test_memory_sink_write_loop_edges(spark):
