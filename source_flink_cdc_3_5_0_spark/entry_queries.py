@@ -3842,20 +3842,22 @@ FROM b
 
 
 def q_sink_upsert_merge(spark, sf_dir):
-    """Parquet upsert sink end-to-end (P9/S8; the changelog-applying sink
-    contract of the lake writers): snapshot insert batch, then a scripted
-    update/delete batch, read back the merged table state. Oracle = the same
-    changelog replayed as SQL over `customer`."""
+    """Upsert sink end-to-end (P9/S8; the changelog-applying sink contract
+    of the lake writers, on the one-snapshot copy-on-write lake table
+    every ``path``-backed upsert sink builds): snapshot insert batch, then
+    a scripted update/delete batch, read back the merged table state.
+    Oracle = the same changelog replayed as SQL over `customer`."""
     import tempfile
 
     from .common.tableid import TableId
-    from .sinks.parquet_sink import ParquetUpsertSink
+    from .sinks.lakehouse import SnapshotLakeSink
     from .sources.base import attach_envelope
 
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     tid = TableId.parse("out.db.customer")
     schema = Schema.from_struct_type(cust.schema, primary_keys=["c_custkey"])
-    sink = ParquetUpsertSink(tempfile.mkdtemp(prefix="cdc_sink_merge_"), num_buckets=16)
+    sink = SnapshotLakeSink(tempfile.mkdtemp(prefix="cdc_sink_merge_"),
+                            num_buckets=16, keep_last=1)
     sink.write(tid, attach_envelope(cust, "+I", seq=0), schema, batch_id=0)
     updates = (cust.where(F.col("c_custkey") % 10 == 0)
                .withColumn("c_acctbal", F.col("c_acctbal") + 100)

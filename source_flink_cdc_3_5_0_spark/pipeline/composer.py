@@ -63,6 +63,16 @@ _LIVE_ENDPOINT_OPTS = ("fenodes", "jdbc-url", "load-url",
                        "accessId", "accessKey")
 
 
+def _keep_one_table(path: str) -> DataSink:
+    """The upsert table a ``path``-backed sink builds without
+    ``snapshots: true``: a 32-bucket copy-on-write lake table that vacuums
+    to one snapshot after every commit, so ``<path>/<table>/data`` holds
+    exactly the live files between commits."""
+    from ..sinks.lakehouse import SnapshotLakeSink
+
+    return SnapshotLakeSink(path, num_buckets=32, keep_last=1)
+
+
 def diff_schemas(table_id: TableId, old: Schema, new: Schema) -> list[SchemaChangeEvent]:
     """Structural diff old->new as DDL events (adds / drops / type changes).
 
@@ -803,9 +813,7 @@ class PipelineComposer:
 
             return MemorySink()
         if t == "parquet":
-            from ..sinks.parquet_sink import ParquetUpsertSink
-
-            return ParquetUpsertSink(opts["path"])
+            return _keep_one_table(opts["path"])
         if t == "kafka":
             # JsonSerializationType.java:29-32 — debezium-json / canal-json;
             # properties.bootstrap.servers like the reference, or a local
@@ -902,9 +910,9 @@ class PipelineComposer:
         if t in ("doris", "starrocks", "paimon", "iceberg", "elasticsearch",
                  "fluss", "maxcompute", "oceanbase", "mysql", "postgres"):
             # lake/OLAP sinks: same changelog-apply contract (PK upsert,
-            # delete, idempotent replay) represented by the bucketed
-            # copy-on-write parquet sink; a live-endpoint option without the
-            # external system is refused rather than silently redirected
+            # delete, idempotent replay) represented by the lake table; a
+            # live-endpoint option without the external system is refused
+            # rather than silently redirected
             live_opts = [k for k in _LIVE_ENDPOINT_OPTS if k in opts]
             if live_opts:
                 raise ValueError(
@@ -937,8 +945,8 @@ class PipelineComposer:
                 return SnapshotLakeSink(path, mode="mor")
             if str(opts.get("snapshots", "false")).lower() == "true":
                 # snapshot-isolated manifests + time travel (the
-                # paimon/iceberg table-format semantics); default stays
-                # the bounded-files copy-on-write stand-in.
+                # paimon/iceberg table-format semantics); the default
+                # table keeps one snapshot.
                 # changelog-mode: copy-on-write (default) or merge-on-read
                 # delta commits (paimon changelog table / iceberg v2)
                 from ..sinks.lakehouse import SnapshotLakeSink
@@ -948,7 +956,5 @@ class PipelineComposer:
                     path, mode={"cow": "cow", "copy-on-write": "cow",
                                 "mor": "mor", "merge-on-read": "mor"}.get(
                                     mode, mode))
-            from ..sinks.parquet_sink import ParquetUpsertSink
-
-            return ParquetUpsertSink(path)
+            return _keep_one_table(path)
         raise ValueError(f"unknown sink type {t!r}")

@@ -9,7 +9,7 @@ through a ``MetadataApplier`` (MetadataApplier.java:33-37), all under the
 (DataSinkWriterOperator.java:65).
 
 Spark-first shape: the batch is first reduced to ONE final image per key
-(map-side-combinable window, same reduction the parquet sink uses), hash-
+(map-side-combinable window, same reduction the lake table uses), hash-
 repartitioned by primary key so each executor partition owns disjoint keys,
 then written via per-partition DB-API connections with batched upsert
 statements — the exact analog of the reference's per-subtask JDBC writers.

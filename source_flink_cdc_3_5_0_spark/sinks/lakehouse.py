@@ -19,17 +19,29 @@ Physical layout (all JSON control files are tiny — O(buckets) entries):
     <root>/<tableId>/_tags.json                       named snapshot refs
     <root>/<tableId>/_batch_<id>                      replay markers
 
-Write path (copy-on-write at bucket granularity, like the default
-:class:`.parquet_sink.ParquetUpsertSink` — but REPLACED buckets' old files
-are kept on disk and only dropped from the manifest, which is what buys
-time travel at the cost of needing ``vacuum``): reduce the batch to one
-final image per key, read ONLY the touched buckets' files from the
+Write path (copy-on-write at bucket granularity — REPLACED buckets' old
+files are kept on disk and only dropped from the manifest, which is what
+buys time travel at the cost of needing ``vacuum``): reduce the batch to
+one final image per key, read ONLY the touched buckets' files from the
 current manifest, anti-join + union, append the merged buckets as new
-files, commit a manifest carrying forward untouched buckets.  TRUNCATE
+files, commit a manifest carrying forward untouched buckets.  A table
+without a primary key appends instead (copy-on-write only).  TRUNCATE
 commits an empty manifest (history stays readable); DROP removes the
 table directory.  The driver-side file bookkeeping is one directory
 listing per touched bucket per commit — the same control-plane shape as
 Delta/Paimon commit protocols.
+
+This is the one upsert-table engine: every ``path``-backed upsert sink of
+the pipeline (``type: parquet`` and the lake/OLAP stand-ins) is a
+copy-on-write table.  Without ``snapshots: true`` it is built with
+``keep_last=1``: every commit ends with ``vacuum(keep_last=1)``, so
+between commits ``data/`` holds exactly the live files and a plain
+``spark.read.parquet(<table>/data)`` sees the table.  One exception: a
+crash after a data publish but before its manifest commit leaves part
+files that no snapshot names.  :meth:`read` never sees them, but direct
+``data/`` readers do until vacuum's one-hour grace reaps them — a grace
+that stays, because it is what protects a concurrent committer's
+not-yet-linked files.
 
 MERGE-ON-READ mode (``mode="mor"`` — Paimon changelog tables / Iceberg v2
 row-level deletes, the mode the reference's streaming CDC ingestion
@@ -308,6 +320,7 @@ class _LakeMetadataApplier(MetadataApplier):
             # made the rewrite a no-op). Same contract as the DDL
             # spool: per-delivery ordinal (reset by begin_batch) vs a
             # durable per-batch applied-count.
+            self.sink._ensure_meta(table_id)
             ctx = self.batch_ctx
             if ctx is not None:
                 key = (str(table_id), str(ctx))
@@ -334,12 +347,15 @@ class _LakeMetadataApplier(MetadataApplier):
 
 class SnapshotLakeSink(DataSink):
     def __init__(self, root: str, num_buckets: int = 16, mode: str = "cow",
-                 filelist_shard_span: int = 8):
+                 filelist_shard_span: int = 8, keep_last: int | None = None):
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be cow|mor, got {mode!r}")
         self.root = root
         self.num_buckets = num_buckets
         self.mode = mode
+        #: snapshots kept after every commit (``vacuum(keep_last)`` runs
+        #: inside the commit); None keeps the full history
+        self.keep_last = keep_last
         # buckets per file-list shard (Iceberg manifest-file granularity):
         # a commit rewrites only the shards whose bucket GROUP changed, so
         # commit write amplification is O(touched buckets / span), never
@@ -414,11 +430,29 @@ class SnapshotLakeSink(DataSink):
                     f"sink was built with {self.mode!r}; use "
                     "SnapshotLakeSink.for_table()")
             return
+        self._refuse_legacy_layout(tid)
         if not create:
             return
         os.makedirs(self._table_dir(tid), exist_ok=True)
         atomic_write(path, json.dumps({"num_buckets": self.num_buckets,
                                        "mode": self.mode}))
+
+    def _refuse_legacy_layout(self, tid: TableId) -> None:
+        """A table directory with bucket files but no ``_snapshots/`` was
+        written by the retired bucket-swap parquet sink.  Read as a lake
+        table it is empty, and vacuum's grace would later delete its
+        files, so it is refused by name instead.  Runs only while a table
+        has no ``_table.json``: steady-state commits list nothing."""
+        import glob
+
+        data = self._data_dir(tid)
+        if not os.path.isdir(self._snap_dir(tid)) and any(
+                glob.glob(os.path.join(data, p, "*.parquet"))
+                for p in ("", f"{_BUCKET_COL}=*")):
+            raise ValueError(
+                f"{tid}: {data} holds data files but no _snapshots/ — a "
+                "table written by the retired parquet upsert sink; reload "
+                "it into a new path")
 
     def _data_dir(self, tid: TableId) -> str:
         return os.path.join(self._table_dir(tid), "data")
@@ -670,6 +704,8 @@ class SnapshotLakeSink(DataSink):
                 f"{tid}: snapshot {seq} was committed concurrently; "
                 "re-read the manifest and retry (orphaned data files are "
                 "unreferenced — vacuum reclaims them)") from None
+        if self.keep_last is not None:
+            self.vacuum(tid, keep_last=self.keep_last)
         return seq
 
     def _stats_dir(self, tid: TableId) -> str:
@@ -706,13 +742,6 @@ class SnapshotLakeSink(DataSink):
         """Relative paths of the parquet files currently ON DISK for a
         bucket (manifest bookkeeping diffs this before/after a write)."""
         d = os.path.join(self._data_dir(tid), f"{_BUCKET_COL}={bucket}")
-        if not os.path.isdir(d):
-            return set()
-        return {f"{_BUCKET_COL}={bucket}/{f}" for f in os.listdir(d)
-                if f.endswith(".parquet")}
-
-    def _delta_files_on_disk(self, tid: TableId, bucket: int) -> set[str]:
-        d = os.path.join(self._delta_dir(tid), f"{_BUCKET_COL}={bucket}")
         if not os.path.isdir(d):
             return set()
         return {f"{_BUCKET_COL}={bucket}/{f}" for f in os.listdir(d)
@@ -883,15 +912,19 @@ class SnapshotLakeSink(DataSink):
         spark = df.sparkSession
         pks = [k for k in schema.primary_keys if k in df.columns]
         names = [c.name for c in schema.columns if c.name in df.columns]
-        if not pks:
-            raise ValueError(
-                f"snapshot lake sink requires primary keys for {table_id}")
+        if not pks and self.mode == "mor":
+            raise ValueError(f"merge-on-read lake table {table_id} requires "
+                             "primary keys (its reads merge by key)")
         types = {c.name: c.data_type for c in schema.columns}
         casts = {f.name: F.col(f.name).cast(types[f.name])
                  for f in df.schema.fields
                  if types.get(f.name, f.dataType) != f.dataType}
         if casts:
             df = df.withColumns(casts)
+        if not pks:
+            self._write_append_commit(table_id, df, names, batch_id)
+            atomic_write(marker, "ok")
+            return
         if OP_COL in df.columns:
             final = latest_image(
                 df, pks, seq_col=SEQ_COL if SEQ_COL in df.columns else None,
@@ -911,6 +944,18 @@ class SnapshotLakeSink(DataSink):
             self._write_mor_commit(table_id, final, names, pks, batch_id)
             atomic_write(marker, "ok")
             return
+        prev_buckets: dict[str, list[str]] = self._manifest(table_id)["buckets"]
+        out_cols = names + [_BUCKET_COL]
+        if not prev_buckets:
+            # empty table: nothing to merge and no bucket to drop, so the
+            # staged write's buckets ARE the commit — no persist and no
+            # touched-bucket collect
+            self._commit(table_id, self._staged_write(
+                final.where(F.col(OP_COL) != "-D").select(*out_cols)
+                .repartition(F.col(_BUCKET_COL)), self._data_dir(table_id)),
+                batch_id)
+            atomic_write(marker, "ok")
+            return
         # persist: the touched-bucket collect and the file write are two
         # actions — unpersisted, a nondeterministic batch could write a
         # bucket the manifest never records (and vacuum would delete)
@@ -918,9 +963,6 @@ class SnapshotLakeSink(DataSink):
         try:
             touched = sorted(r[0] for r in
                              final.select(_BUCKET_COL).distinct().collect())
-            manifest = self._manifest(table_id)
-            prev_buckets: dict[str, list[str]] = manifest["buckets"]
-            out_cols = names + [_BUCKET_COL]
             upserts = final.where(F.col(OP_COL) != "-D").select(*out_cols)
             prev_files = [os.path.join(self._data_dir(table_id), p)
                           for b in touched
@@ -948,6 +990,22 @@ class SnapshotLakeSink(DataSink):
         finally:
             final.unpersist()
         atomic_write(marker, "ok")
+
+    def _write_append_commit(self, tid: TableId, df: DataFrame,
+                             names: list[str], batch_id) -> None:
+        """A table without a primary key appends its rows: -D/-U rows are
+        before-images that no key can retract, and appending them would
+        resurrect deleted rows as live data (the reference's upsert sinks
+        require a key for changelogs).  Each input partition lands in one
+        bucket, so the write adds one file per partition and no shuffle."""
+        if OP_COL in df.columns:
+            df = df.where(~F.col(OP_COL).isin("-D", "-U"))
+        rows = df.select(*names).withColumn(
+            _BUCKET_COL, F.spark_partition_id() % self.num_buckets)
+        added_map = self._staged_write(rows, self._data_dir(tid))
+        buckets = self._manifest(tid)["buckets"]
+        self._commit(tid, {b: buckets.get(b, []) + added_map.get(b, [])
+                           for b in set(buckets) | set(added_map)}, batch_id)
 
     def _write_mor_commit(self, tid: TableId, final: DataFrame,
                           names: list[str], pks: list[str], batch_id) -> None:

@@ -9,7 +9,8 @@ MetadataApplier executes the 7-event DDL algebra as SQLTask statements
 (same status as the lake sink): the public transactional-table semantics
 are pinned by tests, with the one divergence named below.
 
-- **data plane**: bucketed copy-on-write parquet PK-upsert with the
+- **data plane**: the engine's copy-on-write lake table
+  (:class:`.lakehouse.SnapshotLakeSink`, one snapshot kept) with the
   transactional-table layout invariants pinned in
   tests/test_sink_conformance (bucket count = the table's
   ``write.bucket.num``; routing a pure function of the PRIMARY KEY;
@@ -30,16 +31,14 @@ are pinned by tests, with the one divergence named below.
 
 from __future__ import annotations
 
-import os
-
-from .base import DataSink, MetadataApplier
+from .base import MetadataApplier
 from .ddl_spool import DdlSpoolPosition, is_replay, spool_ddl
 from .dialects import MaxComputeDialect
-from .parquet_sink import ParquetUpsertSink
+from .lakehouse import SnapshotLakeSink
 
 
 class _MaxComputeMetadataApplier(MetadataApplier):
-    """Renders the DDL spool AND evolves the parquet stand-in.  Replay
+    """Renders the DDL spool AND evolves the lake table.  Replay
     detection is the exact batch-scoped discipline of
     :mod:`.ddl_spool`: a replayed group (same batch, same ordinal, same
     digest) skips BOTH the spool and the data-plane apply — a replayed
@@ -47,15 +46,17 @@ class _MaxComputeMetadataApplier(MetadataApplier):
     while a genuine repeat (later batch, or a new group inside this one)
     applies and spools normally.  The data-plane effect runs BEFORE the
     spool append, so a crash between them replays into an idempotent
-    re-apply instead of a lost effect."""
+    re-apply instead of a lost effect.  The inner lake applier runs
+    without a batch ctx, so this spool check is the one TRUNCATE replay
+    guard on this path."""
 
     def __init__(self, sink: "MaxComputeSink"):
         self.sink = sink
         self.sql = MaxComputeDialect()
-        self._inner = sink._parquet.metadata_applier()
+        self._inner = SnapshotLakeSink.metadata_applier(sink)
 
     def apply_schema_change(self, table_id, event, evolved_schema) -> None:
-        tdir = self.sink.sink_root(table_id)
+        tdir = self.sink._table_dir(table_id)
         stmts = self.sql.ddl_sql(table_id.identifier(), event,
                                  evolved_schema)
         ordinal = self.sink._ddl_pos.next_ordinal(tdir, self.batch_ctx)
@@ -65,23 +66,17 @@ class _MaxComputeMetadataApplier(MetadataApplier):
         spool_ddl(tdir, stmts, self.batch_ctx, ordinal)
 
 
-class MaxComputeSink(DataSink):
+class MaxComputeSink(SnapshotLakeSink):
     """YAML ``type: maxcompute`` with a local ``path``; ``buckets-num``
     maps to the reference's MaxComputeOptions bucket count."""
 
     def __init__(self, path: str, num_buckets: int = 16):
-        self.root = path
-        self._parquet = ParquetUpsertSink(path, num_buckets=num_buckets)
+        super().__init__(path, num_buckets=num_buckets, keep_last=1)
         self._ddl_pos = DdlSpoolPosition()
 
     def begin_batch(self, batch_id) -> None:
+        super().begin_batch(batch_id)
         self._ddl_pos.reset()
 
     def metadata_applier(self) -> MetadataApplier:
         return _MaxComputeMetadataApplier(self)
-
-    def write(self, table_id, df, schema, batch_id) -> None:
-        self._parquet.write(table_id, df, schema, batch_id)
-
-    def sink_root(self, table_id) -> str:
-        return os.path.join(self.root, table_id.identifier())

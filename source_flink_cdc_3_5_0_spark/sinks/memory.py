@@ -6,7 +6,7 @@ state keyed by primary key and renders deterministic string snapshots used by
 golden tests.
 
 Driver-side by design (test sink, like the reference's). The scalable path is
-:mod:`.parquet_sink`.
+the lake table, :mod:`.lakehouse`.
 """
 
 from __future__ import annotations

@@ -12,7 +12,7 @@ continuous change capture with exactly-once sink application. On Spark:
 - exactly-once = Structured Streaming checkpoint (source offsets) + the
   sink's idempotence per (sink table, batch id scoped by source table) —
   on restart the last batch is re-delivered and skipped by the sink's
-  marker (see ParquetUpsertSink);
+  marker (see SnapshotLakeSink.write);
 - schema changes happen *between* micro-batches, the natural FlushEvent
   barrier (§3.3): before processing, each batch's decoded frame is checked
   against the registry's original schema and the evolution path runs first.

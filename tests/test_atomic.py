@@ -22,7 +22,6 @@ from source_flink_cdc_3_5_0_spark.common.atomic import atomic_write
 from source_flink_cdc_3_5_0_spark.operators.schema_evolution import \
     apply_schema_change_event
 from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
-from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import ParquetUpsertSink
 from source_flink_cdc_3_5_0_spark.sources.values import ValuesSource
 
 
@@ -86,8 +85,6 @@ def test_exclusive_never_overwrites(tmp_path):
 SPARK_DATA_PUBLISHES = {
     ("sinks/ddl_spool.py", "spool_batch"),
     ("sinks/lakehouse.py", "_staged_write"),
-    ("sinks/parquet_sink.py", "_merge"),
-    ("sinks/parquet_sink.py", "compact"),
 }
 
 
@@ -155,10 +152,6 @@ TORN = {
                   lambda s, spark: s._ensure_meta(TID)),
     "lake_marker": (SnapshotLakeSink, "_batch_0", _created,
                     lambda s, spark: s.write(TID, _batch(spark), S1, 0)),
-    "parquet_schema": (ParquetUpsertSink, "_schema.json", _created,
-                       _evolve),
-    "parquet_marker": (ParquetUpsertSink, "_batch_0", _created,
-                       lambda s, spark: s.write(TID, _batch(spark), S1, 0)),
 }
 
 

@@ -322,13 +322,15 @@ sink:
         assert sink.serialization == "canal-json"
 
     def test_lake_sink_stand_in_and_live_refusal(self, spark, tmp_path):
-        from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import ParquetUpsertSink
+        from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
 
         composer, pdef = self._compose(spark, f"""
 source: {{type: parquet, tables: '{{}}'}}
 sink: {{type: iceberg, path: {tmp_path}/wh}}
 """)
-        assert isinstance(composer._create_sink(pdef), ParquetUpsertSink)
+        sink = composer._create_sink(pdef)
+        assert isinstance(sink, SnapshotLakeSink)
+        assert (sink.mode, sink.keep_last) == ("cow", 1)
         composer, pdef = self._compose(spark, """
 source: {type: parquet, tables: '{}'}
 sink: {type: doris, fenodes: "fe:8030"}

@@ -717,7 +717,7 @@ def test_snapshot_binlog_stitch_no_duplicates(spark, tmp_path):
     from source_flink_cdc_3_5_0_spark.common.schema import Column, Schema
     from source_flink_cdc_3_5_0_spark.pipeline import (
         PipelineComposer, parse_yaml_pipeline)
-    from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import ParquetUpsertSink
+    from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
     from source_flink_cdc_3_5_0_spark.sources.mysql_binlog import (
         binlog_changes, watermark_seq)
     from pyspark.sql import types as T
@@ -749,7 +749,7 @@ source:
   checkpoint: {tmp_path}/ckpt
 sink: {{type: values}}
 """
-    sink = ParquetUpsertSink(str(tmp_path / "out"), num_buckets=2)
+    sink = SnapshotLakeSink(str(tmp_path / "out"), num_buckets=2, keep_last=1)
     pipe, raw, tables = PipelineComposer(spark).compose_streaming(
         parse_yaml_pipeline(yaml_text), sink=sink)
     tid = TableId.parse("inv.logs")

@@ -4,7 +4,6 @@ from pyspark.sql import Row, types as T
 
 from source_flink_cdc_3_5_0_spark.api import transform_table
 from source_flink_cdc_3_5_0_spark.common import (
-    AddColumnEvent,
     AlterColumnTypeEvent,
     Column,
     CreateTableEvent,
@@ -17,7 +16,6 @@ from source_flink_cdc_3_5_0_spark.operators.schema_evolution import (
     lenientize,
 )
 from source_flink_cdc_3_5_0_spark.pipeline import PipelineComposer, parse_yaml_pipeline
-from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import ParquetUpsertSink
 from source_flink_cdc_3_5_0_spark.sources.values import ValuesSource
 
 TID = TableId.parse("a.b.t")
@@ -35,49 +33,6 @@ def test_lenientize_does_not_contaminate_type_singletons():
     plain_alter = AlterColumnTypeEvent(TID, (("b", T.IntegerType()),))
     out = apply_schema_change_event(s, plain_alter)
     assert out.get_column("b").nullable is False
-
-
-def test_parquet_sink_preserves_new_column_after_evolution(spark, tmp_path):
-    """Finding: merge projected onto pre-evolution current.columns, dropping
-    newly added columns' data."""
-    schema = Schema.of(Column("id", T.IntegerType(), False), Column("v", T.StringType()),
-                       primary_keys=["id"])
-    sink = ParquetUpsertSink(str(tmp_path), num_buckets=2)
-    pdef = parse_yaml_pipeline("source: {type: values}\nsink: {type: values}\n")
-    PipelineComposer(spark).compose(pdef, source=ValuesSource([
-        CreateTableEvent(TID, schema),
-        DataChangeEvent.insert(TID, (1, "a")),
-        DataChangeEvent.insert(TID, (2, "b")),
-    ]), sink=sink).run()
-
-    sink2 = ParquetUpsertSink(str(tmp_path), num_buckets=2)
-    PipelineComposer(spark).compose(pdef, source=ValuesSource([
-        CreateTableEvent(TID, schema),
-        AddColumnEvent.last(TID, Column("extra", T.StringType())),
-        DataChangeEvent.insert(TID, (3, "c", "X")),
-        DataChangeEvent.update(TID, (1, "a", None), (1, "a2", "Y")),
-    ]), sink=sink2).run()
-
-    got = {r["id"]: (r["v"], r["extra"]) for r in sink2.read(spark, TID).collect()}
-    assert got == {1: ("a2", "Y"), 2: ("b", None), 3: ("c", "X")}
-
-
-def test_parquet_sink_string_pk_buckets(spark, tmp_path):
-    """Finding: string PKs cast to bigint -> NULL -> everything in bucket 0."""
-    import os
-
-    schema = Schema.of(Column("k", T.StringType(), False), Column("v", T.IntegerType()),
-                       primary_keys=["k"])
-    sink = ParquetUpsertSink(str(tmp_path), num_buckets=8)
-    pdef = parse_yaml_pipeline("source: {type: values}\nsink: {type: values}\n")
-    PipelineComposer(spark).compose(pdef, source=ValuesSource(
-        [CreateTableEvent(TID, schema)] +
-        [DataChangeEvent.insert(TID, (f"user_{i}", i)) for i in range(40)]
-    ), sink=sink).run()
-    data_dir = os.path.join(str(tmp_path), "a.b.t", "data")
-    buckets = [d for d in os.listdir(data_dir) if d.startswith("__bucket=")]
-    assert len(buckets) > 1, "string PKs must spread across buckets"
-    assert sink.read(spark, TID).count() == 40
 
 
 def test_filter_guard_inside_function_args(spark):

@@ -49,7 +49,7 @@ from source_flink_cdc_3_5_0_spark.sinks.dialects import DIALECTS, get_dialect
 from source_flink_cdc_3_5_0_spark.sinks.jdbc_sink import JdbcUpsertSink
 from source_flink_cdc_3_5_0_spark.sinks.kafka import KafkaChangelogSink
 from source_flink_cdc_3_5_0_spark.sinks.memory import MemorySink
-from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import ParquetUpsertSink
+from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
 from source_flink_cdc_3_5_0_spark.sources.values import ValuesSource
 
 T1 = TableId.parse("conf.db.t1")
@@ -111,7 +111,7 @@ def _rows_memory(sink, spark, tid, schema):
             for row in sink.state[tid].values()}
 
 
-def _rows_parquet(sink, spark, tid, schema):
+def _rows_read(sink, spark, tid, schema):
     names = [c.name for c in schema.columns]
     return {tuple(r[n] for n in names)
             for r in sink.read(spark, tid).collect()}
@@ -133,11 +133,13 @@ def test_memory_sink_conformance(spark):
 
 
 def test_parquet_sink_conformance(spark, tmp_path):
-    sink = ParquetUpsertSink(str(tmp_path / "lake"), num_buckets=4)
+    """The one-snapshot copy-on-write table ``type: parquet`` builds."""
+    sink = SnapshotLakeSink(str(tmp_path / "lake"), num_buckets=4,
+                            keep_last=1)
     _drive(spark, sink)
-    assert _rows_parquet(sink, spark, T1, S2) == MID_STATE
+    assert _rows_read(sink, spark, T1, S2) == MID_STATE
     _drive_tail(spark, sink)
-    assert _rows_parquet(sink, spark, T1, S2) == FINAL_STATE
+    assert _rows_read(sink, spark, T1, S2) == FINAL_STATE
     assert not os.path.exists(sink._table_dir(T2))
 
 
@@ -942,13 +944,13 @@ def test_maxcompute_sink_conformance(spark, tmp_path):
 
     sink = MaxComputeSink(str(tmp_path / "odps"), num_buckets=4)
     _drive(spark, sink)
-    assert _rows_parquet(sink._parquet, spark, T1, S2) == MID_STATE
+    assert _rows_read(sink, spark, T1, S2) == MID_STATE
     ddl = open(os.path.join(sink.root, T1.identifier(), "ddl.sql")).read()
     assert "create table if not exists" in ddl
     assert 'tblproperties ("transactional"="true")' in ddl
     assert "add columns (" in ddl
     _drive_tail(spark, sink)
-    assert _rows_parquet(sink._parquet, spark, T1, S2) == FINAL_STATE
+    assert _rows_read(sink, spark, T1, S2) == FINAL_STATE
 
 
 def test_maxcompute_ddl_spool_replay_idempotent(spark, tmp_path):
@@ -1052,7 +1054,7 @@ sink:
 
     s = sink_for(f"  path: {tmp_path / 'mc'}\n  buckets-num: '8'")
     assert isinstance(s, MaxComputeSink)
-    assert s._parquet.num_buckets == 8
+    assert s.num_buckets == 8 and s.keep_last == 1
     with pytest.raises(ValueError, match="environment-gated"):
         sink_for(f"  path: {tmp_path / 'mc'}\n  accessId: xyz")
 
@@ -1074,7 +1076,7 @@ def test_ddl_spool_truncate_load_truncate_keeps_both(spark, tmp_path):
     app.apply_schema_change(T1, CreateTableEvent(T1, S1), S1)
     app.apply_schema_change(T1, trunc, S1)
     sink.write(T1, batch, S1, batch_id=0)
-    assert _rows_parquet(sink._parquet, spark, T1, S1) == {(1, "a")}
+    assert _rows_read(sink, spark, T1, S1) == {(1, "a")}
 
     # crash-replay of batch b0 from a fresh process: the replayed
     # TRUNCATE must NOT wipe the rows the crashed run landed after it,
@@ -1085,13 +1087,13 @@ def test_ddl_spool_truncate_load_truncate_keeps_both(spark, tmp_path):
     app2.apply_schema_change(T1, CreateTableEvent(T1, S1), S1)
     app2.apply_schema_change(T1, trunc, S1)
     sink2.write(T1, batch, S1, batch_id=0)  # replayed batch: no-op
-    assert _rows_parquet(sink2._parquet, spark, T1, S1) == {(1, "a")}
+    assert _rows_read(sink2, spark, T1, S1) == {(1, "a")}
 
     # a REAL second truncate arrives in a LATER batch: applies + spools
     app3 = sink2.metadata_applier()
     app3.batch_ctx = "b1"
     app3.apply_schema_change(T1, trunc, S1)
-    assert _rows_parquet(sink2._parquet, spark, T1, S1) == set()
+    assert _rows_read(sink2, spark, T1, S1) == set()
     ddl = open(os.path.join(root, T1.identifier(), "ddl.sql")).read()
     assert ddl.count("truncate table") == 2
     assert ddl.count("create table") == 1
@@ -1141,13 +1143,13 @@ def test_ddl_spool_segmented_batch_shares_parent_ctx(spark, tmp_path):
 
     sink = MaxComputeSink(root, num_buckets=2)
     run_batch(sink)
-    assert _rows_parquet(sink._parquet, spark, T1, S1) == {(2, "b")}
+    assert _rows_read(sink, spark, T1, S1) == {(2, "b")}
 
     # crash-replay from a fresh process: every group is detected as a
     # replay (ordinals 0..2 under the SAME parent ctx), nothing re-wipes
     sink2 = MaxComputeSink(root, num_buckets=2)
     run_batch(sink2)
-    assert _rows_parquet(sink2._parquet, spark, T1, S1) == {(2, "b")}
+    assert _rows_read(sink2, spark, T1, S1) == {(2, "b")}
     ddl = open(os.path.join(root, T1.identifier(), "ddl.sql")).read()
     assert ddl.count("truncate table") == 2
     assert ddl.count("create table") == 1
@@ -1178,7 +1180,7 @@ def test_ddl_spool_same_process_redelivery_resets_ordinals(spark, tmp_path):
     app2.apply_schema_change(T1, CreateTableEvent(T1, S1), S1)
     app2.apply_schema_change(T1, trunc, S1)  # replay: must NOT wipe
     sink.write(T1, batch, S1, batch_id="stream_7s0")  # marker no-op
-    assert _rows_parquet(sink._parquet, spark, T1, S1) == {(1, "a")}
+    assert _rows_read(sink, spark, T1, S1) == {(1, "a")}
     ddl = open(os.path.join(root, T1.identifier(), "ddl.sql")).read()
     assert ddl.count("truncate table") == 1
 
@@ -1204,7 +1206,7 @@ def test_ddl_spool_no_batch_ctx_always_applies(spark, tmp_path):
     sink2 = MaxComputeSink(root, num_buckets=2)
     app2 = sink2.metadata_applier()
     app2.apply_schema_change(T1, trunc, S1)
-    assert _rows_parquet(sink2._parquet, spark, T1, S1) == set()
+    assert _rows_read(sink2, spark, T1, S1) == set()
     ddl = open(os.path.join(root, T1.identifier(), "ddl.sql")).read()
     assert ddl.count("truncate table") == 2
 

@@ -1,11 +1,13 @@
 """Differential sink testing: seeded-random changelog scripts through
-every stateful sink (memory golden, parquet upsert, lake cow, lake mor,
-jdbc/sqlite), asserting the IDENTICAL final state. Complements the fixed
-conformance script with randomized op interleavings, replays and
-truncates — the cheap cross-engine analog of the reference's e2e matrix.
-One more input routes two source tables into one sink table (an N:1
-route) through the pipeline, then replays the run.  The crash cases fail
-one control-file write mid-script and restart from the same directory."""
+every stateful sink (memory golden, lake cow, lake mor, jdbc/sqlite),
+asserting the IDENTICAL final state. Complements the fixed conformance
+script with randomized op interleavings, replays and truncates — the
+cheap cross-engine analog of the reference's e2e matrix.  One more input
+routes two source tables into one sink table (an N:1 route) through the
+pipeline, then replays the run.  The crash cases fail one control-file
+write, or the first move of a data publish, mid-script and restart from
+the same directory; the truncate case re-delivers a batch that TRUNCATEs
+and then inserts."""
 
 import os
 import random
@@ -23,12 +25,13 @@ from source_flink_cdc_3_5_0_spark.common import (
     atomic,
 )
 from source_flink_cdc_3_5_0_spark.common.events import TruncateTableEvent
+from source_flink_cdc_3_5_0_spark.operators.partitioning import \
+    portable_bucket_py
 from source_flink_cdc_3_5_0_spark.pipeline import (PipelineComposer,
                                                    parse_yaml_pipeline)
 from source_flink_cdc_3_5_0_spark.sinks.jdbc_sink import JdbcUpsertSink
 from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
 from source_flink_cdc_3_5_0_spark.sinks.memory import MemorySink
-from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import ParquetUpsertSink
 from source_flink_cdc_3_5_0_spark.sources.values import ValuesSource
 
 TID = TableId.parse("diff.db.t")
@@ -150,8 +153,6 @@ def test_all_sinks_agree_on_random_scripts(spark, tmp_path, script):
                        else _random_input(script))
     sinks = {
         "memory": (MemorySink(), _state_memory),
-        "parquet": (ParquetUpsertSink(str(tmp_path / "pq"), num_buckets=3),
-                    _state_read),
         "lake_cow": (SnapshotLakeSink(str(tmp_path / "cow"), num_buckets=3),
                      _state_read),
         "lake_mor": (SnapshotLakeSink(str(tmp_path / "mor"), num_buckets=3,
@@ -167,8 +168,18 @@ def test_all_sinks_agree_on_random_scripts(spark, tmp_path, script):
         assert st == expected, (name, st ^ expected)
 
 
+def _composer_sink(sink_type):
+    """The sink the pipeline composer builds for ``type: <sink_type>`` with
+    a ``path`` (and no other option) under ``root``."""
+    def make(root):
+        return PipelineComposer(None)._create_sink(parse_yaml_pipeline(
+            f"source: {{type: values}}\n"
+            f"sink: {{type: {sink_type}, path: '{root}'}}\n"))
+    return make
+
+
 CRASH_SINKS = {
-    "parquet": lambda root: ParquetUpsertSink(root, num_buckets=3),
+    "parquet": _composer_sink("parquet"),
     "lake_cow": lambda root: SnapshotLakeSink(root, num_buckets=3),
     "lake_mor": lambda root: SnapshotLakeSink(root, num_buckets=3,
                                               mode="mor"),
@@ -185,7 +196,8 @@ def _control_kind(path):
 
 
 @pytest.mark.parametrize("sink_name,kind", [
-    ("parquet", "_batch_"),
+    ("parquet", "_stats"), ("parquet", "_filelists"),
+    ("parquet", "_snapshots"), ("parquet", "_batch_"),
     ("lake_cow", "_stats"), ("lake_cow", "_filelists"),
     ("lake_cow", "_snapshots"), ("lake_cow", "_batch_"),
     ("lake_mor", "_filelists"), ("lake_mor", "_snapshots"),
@@ -221,6 +233,93 @@ def test_crash_at_control_write_then_redrive_converges(
     restarted = CRASH_SINKS[sink_name](root)
     _drive(spark, restarted, batches, replay_at)
     assert _state_read(restarted, spark) == expected, fired
+
+
+def _two_bucket_input(num_buckets):
+    """21 rows in two buckets, one of them holding id 3; batch 1 updates
+    id 3 alone, so a lost bucket would lose the rows it did not rewrite."""
+    b3 = portable_bucket_py(3, num_buckets)
+    other = next(portable_bucket_py(i, num_buckets) for i in range(4, 99)
+                 if portable_bucket_py(i, num_buckets) != b3)
+    ids = [i for i in range(10_000)
+           if portable_bucket_py(i, num_buckets) in (b3, other)][:21]
+    rows = {i: (i, f"v{i}", i) for i in ids}
+    batches = [("data", [DataChangeEvent.insert(TID, r)
+                         for r in rows.values()]),
+               ("data", [DataChangeEvent.update(TID, rows[3],
+                                                (3, "v3b", 33))])]
+    rows[3] = (3, "v3b", 33)
+    return batches, None, set(rows.values())
+
+
+@pytest.mark.parametrize("script", ["seed7", "two_buckets"])
+@pytest.mark.parametrize("sink_name", sorted(CRASH_SINKS))
+def test_crash_at_data_publish_then_redrive_converges(
+        spark, tmp_path, monkeypatch, sink_name, script):
+    """The first move of a data file into the table (``data/``, or
+    ``delta/`` for merge-on-read) at or after batch 1 fails; a fresh sink
+    then re-drives the whole script against the same directory and must
+    end in the crash-free state.  A publish that removes the old bucket
+    before moving the new one in loses the bucket's other rows here."""
+    root = str(tmp_path / sink_name)
+    sink = CRASH_SINKS[sink_name](root)
+    batches, replay_at, expected = (
+        _script(7) if script == "seed7"
+        else _two_bucket_input(sink.num_buckets))
+    tdir = os.path.join(root, TID.identifier())
+    publish_dirs = tuple(os.path.join(tdir, d) + os.sep
+                         for d in ("data", "delta"))
+    current, fired = [-1], []
+    real_write, real_rename = sink.write, os.rename
+
+    def write(tid, df, schema, batch_id):
+        current[0] = batch_id
+        real_write(tid, df, schema, batch_id)
+
+    def rename(src, dst, *a, **kw):
+        if (current[0] >= 1 and not fired
+                and str(dst).startswith(publish_dirs)):
+            fired.append(dst)
+            raise OSError("injected crash")
+        return real_rename(src, dst, *a, **kw)
+
+    monkeypatch.setattr(sink, "write", write)
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected crash"):
+        _drive(spark, sink, batches, replay_at)
+    monkeypatch.undo()
+    restarted = CRASH_SINKS[sink_name](root)
+    _drive(spark, restarted, batches, replay_at)
+    assert _state_read(restarted, spark) == expected, fired
+
+
+@pytest.mark.parametrize("sink_type", ["parquet", "doris", "maxcompute"])
+def test_redelivered_truncate_batch_keeps_its_rows(spark, tmp_path,
+                                                   sink_type):
+    """Batch 0 inserts id 1; batch 1 is TRUNCATE then insert id 2.  Batch
+    1 is delivered again in the same process and once more from a fresh
+    sink (a restart): the replayed TRUNCATE must not erase id 2, whose
+    write the batch marker skips."""
+    make = _composer_sink(sink_type)
+    root = str(tmp_path / sink_type)
+
+    def deliver(sink, bid, row, truncate=False):
+        sink.begin_batch(bid)
+        ap = sink.metadata_applier()
+        ap.batch_ctx = bid
+        if bid == 0:
+            ap.apply_schema_change(TID, CreateTableEvent(TID, SCHEMA), SCHEMA)
+        if truncate:
+            ap.apply_schema_change(TID, TruncateTableEvent(TID), SCHEMA)
+        df = ValuesSource._to_df(spark, SCHEMA,
+                                 [DataChangeEvent.insert(TID, row)])
+        sink.write(TID, df, SCHEMA, batch_id=bid)
+        return sorted(r["id"] for r in sink.read(spark, TID).collect())
+
+    sink = make(root)
+    assert deliver(sink, 0, (1, "a", 1)) == [1]
+    for s in (sink, sink, make(root)):
+        assert deliver(s, 1, (2, "b", 2), truncate=True) == [2]
 
 
 def test_memory_sink_write_loop_edges(spark):

@@ -235,8 +235,7 @@ def test_n_to_1_route_keeps_every_source_table_across_replay(spark, tmp_path):
     import glob
 
     from source_flink_cdc_3_5_0_spark.operators.route import RouteRule
-    from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import (
-        ParquetUpsertSink)
+    from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
 
     def rec(k):
         return json.dumps({
@@ -248,7 +247,7 @@ def test_n_to_1_route_keeps_every_source_table_across_replay(spark, tmp_path):
     (src / "b0.json").write_text("\n".join(rec(k) for k in range(6)))
     ckpt = str(tmp_path / "ckpt")
     root = str(tmp_path / "pq")
-    sink = ParquetUpsertSink(root, num_buckets=2)
+    sink = SnapshotLakeSink(root, num_buckets=2, keep_last=1)
     schema = Schema.of(Column("id", T.IntegerType(), False),
                        Column("v", T.StringType()), primary_keys=["id"])
 

@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 
 from source_flink_cdc_3_5_0_spark.pipeline import PipelineComposer, parse_yaml_pipeline
 from source_flink_cdc_3_5_0_spark.sinks.memory import MemorySink
-from source_flink_cdc_3_5_0_spark.sinks.parquet_sink import ParquetUpsertSink
+from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
 from source_flink_cdc_3_5_0_spark.sources.values import ValuesSource
 
 
@@ -59,8 +59,8 @@ def test_parquet_sink_compaction(spark, tmp_path):
     tid = TableId.parse("a.b.t")
     schema = Schema.of(Column("id", T.IntegerType(), False), Column("v", T.StringType()),
                        primary_keys=["id"])
-    sink = ParquetUpsertSink(str(tmp_path), num_buckets=2)
-    # several pipeline runs -> several file generations per bucket
+    sink = SnapshotLakeSink(str(tmp_path), num_buckets=2, keep_last=1)
+    # several pipeline runs -> several commits per bucket
     for gen in range(3):
         events = [CreateTableEvent(tid, schema)] + [
             DataChangeEvent.insert(tid, (i + gen * 10, f"g{gen}")) for i in range(4)]
