@@ -65,45 +65,9 @@ def parse_type(s: str) -> T.DataType:
     return T._parse_datatype_string(s)
 
 
-def _col_to_json(c: Column) -> dict:
-    return {"name": c.name, "type": c.data_type.simpleString(),
-            "nullable": c.nullable,
-            **({"comment": c.comment} if c.comment else {}),
-            **({"default": c.default_expr} if c.default_expr else {})}
-
-
 def _col_from_json(d: dict) -> Column:
     return Column(d["name"], parse_type(d["type"]),
                   d.get("nullable", True), d.get("comment"), d.get("default"))
-
-
-def schema_event_to_json(ev: SchemaChangeEvent) -> str:
-    tid = str(ev.table_id)
-    if isinstance(ev, CreateTableEvent):
-        body = {"type": "CREATE_TABLE", "table": tid,
-                "columns": [_col_to_json(c) for c in ev.schema.columns],
-                "primary_keys": list(ev.schema.primary_keys),
-                "partition_keys": list(ev.schema.partition_keys)}
-    elif isinstance(ev, AddColumnEvent):
-        body = {"type": "ADD_COLUMN", "table": tid,
-                "columns": [
-                    {**_col_to_json(c.column), "position": c.position.value,
-                     **({"anchor": c.existed_column_name} if c.existed_column_name else {})}
-                    for c in ev.added_columns]}
-    elif isinstance(ev, DropColumnEvent):
-        body = {"type": "DROP_COLUMN", "table": tid, "names": list(ev.dropped_column_names)}
-    elif isinstance(ev, RenameColumnEvent):
-        body = {"type": "RENAME_COLUMN", "table": tid, "mapping": dict(ev.name_mapping)}
-    elif isinstance(ev, AlterColumnTypeEvent):
-        body = {"type": "ALTER_COLUMN_TYPE", "table": tid,
-                "mapping": {k: v.simpleString() for k, v in ev.type_mapping}}
-    elif isinstance(ev, TruncateTableEvent):
-        body = {"type": "TRUNCATE_TABLE", "table": tid}
-    elif isinstance(ev, DropTableEvent):
-        body = {"type": "DROP_TABLE", "table": tid}
-    else:  # pragma: no cover
-        raise TypeError(f"unknown event {ev!r}")
-    return json.dumps({"ddl": body})
 
 
 def schema_events_from_json(s: str | dict) -> list[SchemaChangeEvent]:

@@ -145,17 +145,6 @@ def get_least_common_type(a: T.DataType, b: T.DataType) -> T.DataType:
     return STRING
 
 
-def get_least_common_types(types: list[T.DataType]) -> T.DataType:
-    """Fold :func:`get_least_common_type` over a list (``getLeastCommonType``
-    applied across N schemas during route-merge)."""
-    if not types:
-        raise ValueError("empty type list")
-    out = types[0]
-    for t in types[1:]:
-        out = get_least_common_type(out, t)
-    return out
-
-
 def is_type_compatible(current: T.DataType | None, upcoming: T.DataType) -> bool:
     """True if ``upcoming`` data can be stored in a ``current``-typed column
     without widening. Parity: ``SchemaMergingUtils.isDataTypeCompatible``."""
@@ -383,8 +372,6 @@ _ORACLE_TYPE_MAP: dict[str, T.DataType] = {
     "INTERVAL DAY TO SECOND": T.DayTimeIntervalType(),
 }
 
-_ORACLE_ZONED_TYPES = {"TIMESTAMP WITH TIME ZONE"}
-
 
 def oracle_type_to_spark(type_name: str, precision: int | None = None,
                          scale: int | None = None) -> T.DataType:
@@ -407,95 +394,6 @@ def oracle_type_to_spark(type_name: str, precision: int | None = None,
     if name in _ORACLE_TYPE_MAP:
         return _ORACLE_TYPE_MAP[name]
     raise ValueError(f"unmapped Oracle type: {type_name}")
-
-
-def oracle_type_is_zoned(type_name: str) -> bool:
-    n = " ".join(type_name.strip().upper().split())
-    if "(" in n:
-        head, _, tail = n.partition("(")
-        n = (head.strip() + " " + tail.split(")", 1)[1].strip()).strip()
-    return n in _ORACLE_ZONED_TYPES
-
-
-_SQLSERVER_TYPE_MAP: dict[str, T.DataType] = {
-    "CHAR": STRING, "NCHAR": STRING, "VARCHAR": STRING, "NVARCHAR": STRING,
-    "TEXT": STRING, "NTEXT": STRING, "XML": STRING,
-    "UNIQUEIDENTIFIER": STRING,
-    # Types.TINYINT/SMALLINT/INTEGER -> INT; BIGINT -> BIGINT
-    "TINYINT": INT, "SMALLINT": INT, "INT": INT, "INTEGER": INT,
-    "BIGINT": BIGINT,
-    "DATE": DATE,
-    "BIT": BOOLEAN,
-    # SqlServerTypeUtils.java:64-69 — FLOAT/REAL/DOUBLE take the DECIMAL
-    # path together with NUMERIC/DECIMAL (length, scale|0): the quirk that
-    # distinguishes this converter from every sibling
-    "TIME": STRING,  # no TIME type in Spark (same carry as MySQL/PG)
-    "DATETIME": TIMESTAMP_NTZ, "DATETIME2": TIMESTAMP_NTZ,
-    "SMALLDATETIME": TIMESTAMP_NTZ,
-    "DATETIMEOFFSET": TIMESTAMP_LTZ,  # Types.TIMESTAMP_WITH_TIMEZONE
-}
-
-_SQLSERVER_DECIMAL_NAMES = {"NUMERIC", "DECIMAL", "MONEY", "SMALLMONEY",
-                            "FLOAT", "REAL", "DOUBLE"}
-
-_SQLSERVER_ZONED_TYPES = {"DATETIMEOFFSET"}
-
-
-def sqlserver_type_to_spark(type_name: str, precision: int | None = None,
-                            scale: int | None = None) -> T.DataType:
-    """Map a SQL Server column type name to a Spark type
-    (SqlServerTypeUtils.convertFromColumn:47-84). MONEY/SMALLMONEY carry
-    their fixed (19,4)/(10,4) shapes when no explicit precision is given."""
-    name = " ".join(type_name.strip().upper().split())
-    if name in _SQLSERVER_DECIMAL_NAMES:
-        if precision is None:
-            if name == "MONEY":
-                return T.DecimalType(19, 4)
-            if name == "SMALLMONEY":
-                return T.DecimalType(10, 4)
-        return _decimal_or_clamp(precision, scale)
-    if name in ("BINARY", "VARBINARY", "IMAGE"):
-        return BINARY
-    if name in _SQLSERVER_TYPE_MAP:
-        return _SQLSERVER_TYPE_MAP[name]
-    raise ValueError(f"unmapped SQL Server type: {type_name}")
-
-
-def sqlserver_type_is_zoned(type_name: str) -> bool:
-    return " ".join(type_name.strip().upper().split()) in _SQLSERVER_ZONED_TYPES
-
-
-_DB2_TYPE_MAP: dict[str, T.DataType] = {
-    "CHAR": STRING, "CHARACTER": STRING, "VARCHAR": STRING,
-    "LONG VARCHAR": STRING, "CLOB": STRING, "DBCLOB": STRING,
-    "GRAPHIC": STRING, "VARGRAPHIC": STRING, "XML": STRING,
-    "BLOB": BINARY, "BINARY": BINARY, "VARBINARY": BINARY,
-    # Db2TypeUtils.java:55-58 — TINYINT/SMALLINT -> SMALLINT (not INT)
-    "TINYINT": SMALLINT, "SMALLINT": SMALLINT,
-    "INTEGER": INT, "INT": INT,
-    "BIGINT": BIGINT,
-    "FLOAT": FLOAT, "REAL": FLOAT,
-    "DOUBLE": DOUBLE, "DOUBLE PRECISION": DOUBLE,
-    "DATE": DATE,
-    "TIME": STRING,
-    "TIMESTAMP": TIMESTAMP_NTZ,
-}
-
-
-def db2_type_to_spark(type_name: str, precision: int | None = None,
-                      scale: int | None = None) -> T.DataType:
-    """Map a Db2 column type name to a Spark type
-    (Db2TypeUtils.convertFromColumn:44-82). DECFLOAT is carried as
-    DECIMAL(34, 0) — its wire precision — since Spark has no decfloat."""
-    name = " ".join(type_name.strip().upper().split())
-    if name in ("DECIMAL", "NUMERIC", "DEC", "NUM"):
-        return _decimal_or_clamp(precision, scale)
-    if name == "DECFLOAT":
-        return T.DecimalType(34, 0) if precision is None \
-            else _decimal_or_clamp(precision, scale)
-    if name in _DB2_TYPE_MAP:
-        return _DB2_TYPE_MAP[name]
-    raise ValueError(f"unmapped Db2 type: {type_name}")
 
 
 def hms_text(negative: bool, hours: int, minutes: int, seconds: int,

@@ -453,76 +453,6 @@ def extract_features(df: DataFrame, use_fake_decoder: bool = True,
     return df.mapInPandas(run, schema=_FEATURES_SCHEMA)
 
 
-_RESIZED_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("width", T.IntegerType(), False),
-    T.StructField("height", T.IntegerType(), False),
-    T.StructField("payload", T.BinaryType(), True),
-])
-
-
-def resize_images(df: DataFrame, target_w: int = 32, target_h: int = 32,
-                  use_fake_decoder: bool = True,
-                  decoder: str | None = None) -> DataFrame:
-    """Decode→resize→re-encode image rows via ``mapInPandas``.
-
-    Non-image rows are filtered JVM-side BEFORE the Python stage (predicate
-    stays in the scan, Python only sees image payloads). PPM (P6), PNG and
-    baseline JPEG payloads resize FOR REAL — nearest-neighbor index
-    sampling in numpy, re-encoded in the payload's own container
-    (``decoder='real'``/``'auto'``); undecodable payloads fall back to a
-    deterministic fake under ``'fake'``/``'auto'``."""
-    mode = decoder or ("fake" if use_fake_decoder else "real")
-    if mode not in ("fake", "real", "auto"):
-        raise ValueError(f"decoder must be fake|real|auto, got {mode!r}")
-    n_out = target_w * target_h * 3
-
-    def _fake_resize(payload) -> bytes | None:
-        if payload is None:
-            return None
-        seed = hashlib.md5(bytes(payload)).digest()
-        reps = (n_out + len(seed) - 1) // len(seed)
-        return (seed * reps)[:n_out]
-
-    def _resize(payload) -> bytes | None:
-        if payload is None:
-            return None
-        if mode != "fake":
-            raw = bytes(payload)
-            was_png = raw.startswith(_PNG_SIG)
-            was_jpeg = raw[:2] == b"\xFF\xD8"
-            img = _decode_image(raw)
-            if img is not None:
-                h, w = img.shape[:2]
-                ys = (np.arange(target_h) * h // target_h)
-                xs = (np.arange(target_w) * w // target_w)
-                small = img[ys][:, xs]
-                # re-encode in the payload's own container
-                if was_jpeg:
-                    from .jpeg import encode_jpeg
-                    return encode_jpeg(small)
-                return _encode_png(small) if was_png else _encode_ppm(small)
-            if mode == "real":
-                raise NotImplementedError(
-                    "payload is not decodable: PPM/PNG/baseline-JPEG resize "
-                    "for real (palette/16-bit/interlaced PNGs and "
-                    "progressive JPEGs are intentionally declined — "
-                    "re-encode to a baseline form); other formats need PIL "
-                    "(not installed) — use decoder='auto' to fall back")
-        return _fake_resize(payload)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "width": np.int32(target_w),
-                "height": np.int32(target_h),
-                "payload": pdf["payload"].map(_resize),
-            })
-
-    return df.where(F.col("kind") == "image").mapInPandas(run, schema=_RESIZED_SCHEMA)
-
-
 _FRAMES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("frame_idx", T.IntegerType(), False),

@@ -58,11 +58,6 @@ def hash_split_col(id_col: str = "doc_id") -> Column:
     )
 
 
-def hash_sample(df: DataFrame, id_col: str, keep_nibbles: tuple[str, ...] = ("0", "1")) -> DataFrame:
-    """Deterministic ~len(keep_nibbles)/16 sample — a filter, no shuffle."""
-    return df.where(hash_bucket_col(id_col).isin(*keep_nibbles))
-
-
 def _budget_expr(group_cols: list[str], budget) -> Column:
     """Per-row budget as a Column: an int applies to every group; a dict
     (single group column only) maps group values to budgets, with

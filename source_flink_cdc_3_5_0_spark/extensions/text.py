@@ -150,19 +150,6 @@ def fingerprint_sql(dialect: str, col: str = "text") -> str:
     return f"md5(regexp_replace(lower(trim({col})), {_lit(dialect, _WS_SPLIT)}, ' ', 'g'))"
 
 
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """All text-analysis columns at once (one codegen'd projection)."""
-    d = "spark"
-    return df.select(
-        "*",
-        F.expr(token_count_sql(d, text_col)).alias("token_count"),
-        F.expr(punct_ratio_sql(d, text_col)).alias("punct_ratio"),
-        F.expr(quality_score_sql(d, text_col)).alias("quality_score"),
-        F.expr(lang_id_sql(d, text_col)).alias("lang_pred"),
-        F.expr(fingerprint_sql(d, text_col)).alias("fingerprint"),
-    )
-
-
 def chunk_windows(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", window_tokens: int = 64,
                   stride: int | None = None) -> DataFrame:

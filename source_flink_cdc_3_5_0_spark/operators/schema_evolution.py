@@ -16,7 +16,7 @@ Catalyst ``select`` with casts/null-fills (:func:`coercion_select`).
 from __future__ import annotations
 
 import enum
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -103,12 +103,6 @@ def apply_schema_change_event(schema: Schema | None, event: SchemaChangeEvent) -
     if isinstance(event, DropTableEvent):
         return None
     raise TypeError(f"unknown schema change event: {event!r}")
-
-
-def apply_all(schema: Schema | None, events: Iterable[SchemaChangeEvent]) -> Schema | None:
-    for e in events:
-        schema = apply_schema_change_event(schema, e)
-    return schema
 
 
 # ---------------------------------------------------------------------------

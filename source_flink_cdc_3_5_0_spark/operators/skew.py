@@ -1,27 +1,20 @@
-"""Skew mitigation: salted aggregation and salted broadcast-side join.
+"""Skew mitigation: two-phase salted aggregation.
 
 At 100 TB a hot key (one table id dominating the changelog, one customer
-dominating orders) turns the PK shuffle into a straggler. Two standard
-remedies, packaged as engine operators:
-
-- **two-phase salted aggregation**: groupBy(key, salt) partial -> groupBy(key)
-  final. The first shuffle spreads a hot key over ``n_salts`` reducers; the
-  second is tiny (one row per (key, salt)). Works for any algebraic
-  aggregate (sum/count/min/max); avg = salted(sum)+salted(count).
-- **salted join**: explode the *small* side ``n_salts`` times with a salt
-  column, salt the big side with ``pmod(hash(...), n)`` — each hot-key
-  partition meets exactly one copy. For genuinely small dims prefer
-  ``F.broadcast`` (no shuffle at all); salting is for the
-  medium-sized-but-skewed case where broadcast won't fit.
+dominating orders) turns the PK shuffle into a straggler. The standard
+remedy: groupBy(key, salt) partial -> groupBy(key) final. The first
+shuffle spreads a hot key over ``n_salts`` reducers; the second is tiny
+(one row per (key, salt)). Works for any algebraic aggregate
+(sum/count/min/max); avg = salted(sum)+salted(count).
 
 AQE's skew-join handling (``spark.sql.adaptive.skewJoin.enabled``, on by
-default in our sessions) already splits oversized *sort-merge* partitions at
-runtime; these helpers cover aggregations and pre-AQE plan shapes.
+default in our sessions) already splits oversized *sort-merge* join
+partitions at runtime; this helper covers aggregations.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_agg(df: DataFrame, keys: list[str], aggs: dict[str, str],
@@ -57,14 +50,3 @@ def salted_agg(df: DataFrame, keys: list[str], aggs: dict[str, str],
     return partial.groupBy(*keys).agg(*final_exprs)
 
 
-def salted_join(big: DataFrame, small: DataFrame, on: list[str],
-                n_salts: int = 8, how: str = "inner") -> DataFrame:
-    """Equi-join with the small side replicated per salt so hot keys in
-    ``big`` spread across ``n_salts`` reducers."""
-    salted_big = big.withColumn(
-        "__salt", F.pmod(F.hash(*[F.col(k) for k in on], F.monotonically_increasing_id()),
-                         F.lit(n_salts)))
-    salted_small = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
-    out = salted_big.join(salted_small, on=on + ["__salt"], how=how)
-    return out.drop("__salt")

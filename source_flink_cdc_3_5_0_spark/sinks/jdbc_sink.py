@@ -47,11 +47,6 @@ _BUSY_TIMEOUT_MS = 60_000
 _SQLITE = SqliteDialect()
 
 
-def sqlite_type(dt: T.DataType) -> str:
-    """Spark type -> SQLite storage class (see SqliteDialect.type_name)."""
-    return _SQLITE.type_name(dt)
-
-
 def _quote(name: str) -> str:
     return _SQLITE.quote(name)
 

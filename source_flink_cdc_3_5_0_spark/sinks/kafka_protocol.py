@@ -273,14 +273,6 @@ def murmur2_bulk(keys: list) -> list[int]:
     return out
 
 
-def partition_for_key(key: bytes | None, num_partitions: int) -> int:
-    """DefaultPartitioner: murmur2 & 0x7fffffff mod partitions; a
-    keyless record here goes to 0 (the sink always keys records)."""
-    if key is None:
-        return 0
-    return (murmur2(key) & 0x7FFFFFFF) % num_partitions
-
-
 # ---------------------------------------------------------------------------
 # varints (zigzag) + primitive readers/writers
 # ---------------------------------------------------------------------------
@@ -1083,8 +1075,9 @@ class KafkaWireProducer:
         by_part: dict[int, list] = {}
         if partition is None:
             # default partitioner over the whole batch at once
-            # (murmur2_bulk, optimization r11); keyless records route
-            # to 0 like partition_for_key
+            # (murmur2_bulk): Kafka's DefaultPartitioner, murmur2 &
+            # 0x7fffffff mod partitions; keyless records route to 0 (the
+            # sink always keys records)
             hashes = murmur2_bulk([k for k, _v, _h in records
                                    if k is not None])
             it = iter(hashes)

@@ -738,15 +738,6 @@ class SnapshotLakeSink(DataSink):
             merged.update(self._load_shard(table_id, sh))
         return merged
 
-    def _bucket_files(self, tid: TableId, bucket: int) -> set[str]:
-        """Relative paths of the parquet files currently ON DISK for a
-        bucket (manifest bookkeeping diffs this before/after a write)."""
-        d = os.path.join(self._data_dir(tid), f"{_BUCKET_COL}={bucket}")
-        if not os.path.isdir(d):
-            return set()
-        return {f"{_BUCKET_COL}={bucket}/{f}" for f in os.listdir(d)
-                if f.endswith(".parquet")}
-
     # -- write path --------------------------------------------------------
     def _schema_pk_integral(self, schema: Schema) -> bool:
         """Whether the (single) PK is integral PER THE TABLE SCHEMA — the
@@ -906,6 +897,11 @@ class SnapshotLakeSink(DataSink):
         marker = os.path.join(tdir, f"_batch_{batch_id}")
         if os.path.exists(marker):
             return  # replayed batch
+        if self._manifest_raw(table_id).get("batch_id") == str(batch_id):
+            # committed, but the process died before the marker landed:
+            # a PK-less append would otherwise apply the batch twice
+            atomic_write(marker, "ok")
+            return
         os.makedirs(tdir, exist_ok=True)
         if not os.path.exists(self._schema_path(table_id)):
             self._write_schema(table_id, schema)

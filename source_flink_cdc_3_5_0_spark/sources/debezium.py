@@ -33,20 +33,6 @@ from ..sources.base import SEQ_COL
 _DEBEZIUM_OPS = {"c": "+I", "r": "+I", "u": "+U", "d": "-D"}
 
 
-def debezium_value_schema(payload: T.StructType) -> T.StructType:
-    return T.StructType([
-        T.StructField("before", payload, True),
-        T.StructField("after", payload, True),
-        T.StructField("op", T.StringType(), True),
-        T.StructField("ts_ms", T.LongType(), True),
-        T.StructField("source", T.StructType([
-            T.StructField("db", T.StringType(), True),
-            T.StructField("schema", T.StringType(), True),
-            T.StructField("table", T.StringType(), True),
-        ]), True),
-    ])
-
-
 def decode_dbz_envelope(raw: DataFrame, payload_schema: T.StructType,
                         value_col: str, *, source_fields: list[str],
                         meta_entries: list[tuple[str, str]],

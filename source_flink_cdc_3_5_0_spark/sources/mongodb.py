@@ -1,4 +1,4 @@
-"""MongoDB change-stream codec + sample-bucket snapshot splitter.
+"""MongoDB change-stream codec.
 
 Parity targets (reference `flink-cdc-connect/flink-cdc-source-connectors/
 flink-connector-mongodb-cdc`):
@@ -20,15 +20,6 @@ flink-connector-mongodb-cdc`):
 - **Envelope field names** — `internal/MongoDBEnvelope.java:47-85`
   (``_id._data`` resume token, ``clusterTime``, ``fullDocument``,
   ``documentKey``, ``operationType``, ``ns.db``/``ns.coll``).
-- **Sample-bucket splitter** — `source/assigners/splitters/
-  SampleBucketSplitStrategy.java:83-170`: collections whose key is not a
-  numeric range (ObjectId/UUID/string `_id`) are split by *sampling*: draw
-  ``numChunks x samplesPerChunk`` keys (full scan below a 102400-doc
-  threshold), `$bucketAuto` them into equal-count buckets, and emit
-  [sentinel-min, b0), [b0, b1) ... [bk, sentinel-max] splits — chunk sizes
-  then track the observed key distribution, not the key arithmetic. The
-  Spark mapping computes the equal-count cut points with a window rank over
-  the *sample only* (bounded control-plane) and returns `ChunkRange`s.
 
 Everything data-plane is built-in ``from_json`` + column expressions —
 JVM-side, codegen'd; no Python in the decode loop.
@@ -36,20 +27,15 @@ JVM-side, codegen'd; no Python in the decode loop.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..common.events import BEFORE_COL, META_COL, OP_COL
 from .base import SEQ_COL
-from .jdbc import ChunkRange
 
 #: operationType -> engine op (MongoDBConnectorDeserializationSchema switch).
 #: `update` with a null fullDocument and every collection-level type is
 #: dropped by the decoder, so no entry here.
 _MONGO_OPS = {"insert": "+I", "update": "+U", "replace": "+U", "delete": "-D"}
-
-#: document count below which the reference samples the whole collection
-#: (SampleBucketSplitStrategy.DEFAULT_SAMPLING_THRESHOLD).
-SAMPLING_THRESHOLD = 102400
 
 
 def mongo_changestream_schema(payload: T.StructType,
@@ -177,94 +163,6 @@ def decode_mongo_changestream(raw: DataFrame, payload_schema: T.StructType,
         seq.cast("bigint").alias(SEQ_COL),
     )
     return out.select("__row.*", OP_COL, BEFORE_COL, META_COL, SEQ_COL)
-
-
-def sample_bucket_chunks(df: DataFrame, key_col: str, *,
-                         size_in_bytes: int, chunk_size_mb: int = 64,
-                         doc_count: int | None = None,
-                         samples_per_chunk: int = 20,
-                         sampling_threshold: int = SAMPLING_THRESHOLD,
-                         assign_unbounded_chunk_first: bool = False,
-                         seed: int = 42) -> list[ChunkRange]:
-    """Split a collection into key ranges by sampling (SampleBucketSplitStrategy).
-
-    - whole collection smaller than one chunk -> single unbounded chunk
-      (SingleSplitStrategy, :86-89);
-    - ``numChunks = size/chunkSize + 1``; sample the whole key column below
-      ``sampling_threshold`` docs, else ``numChunks*samples_per_chunk`` keys
-      (:91-100);
-    - equal-count cut points over the sorted sample (the `$bucketAuto`
-      analog), emitted as [None, c0), [c0, c1) ... [ck, None) — the two
-      sentinel-bounded end splits match ChunkUtils.minLowerBoundOfId /
-      maxUpperBoundOfId (:129-160);
-    - ``assign_unbounded_chunk_first`` moves the trailing unbounded split to
-      the front (:163-167) — it is the one still growing under live writes,
-      so assigning it first shrinks the stream-backfill overlap window.
-
-    Scale posture: the only multi-row driver transfer is the cut-point
-    collect — O(numChunks) rows, never the sample itself; the sample's sort
-    is a Spark window over ``numChunks*samples_per_chunk`` rows (bounded by
-    the caller's chunk budget, same control-plane class as the JDBC chunk
-    metadata). Keys may be any orderable type (ObjectId hex strings, UUIDs,
-    ints) — ranges compare with Column ``<``/``>=``; use `chunk_filter` for
-    DataFrame predicates rather than ChunkRange.predicate's SQL rendering
-    when keys are strings.
-    """
-    chunk_bytes = chunk_size_mb * 1024 * 1024
-    if size_in_bytes < chunk_bytes:
-        return [ChunkRange(None, None)]
-    n = doc_count if doc_count is not None else df.count()
-    num_chunks = int(size_in_bytes // chunk_bytes) + 1
-    if n < sampling_threshold:
-        sampled = df.select(key_col)
-        m_expected = n
-    else:
-        m_expected = min(num_chunks * samples_per_chunk, n)
-        sampled = df.select(key_col).sample(
-            fraction=min(1.0, m_expected / n), seed=seed)
-    # equal-count cut points: rank the sample, keep exactly the rows at
-    # positions round(i*m/k), i=0..k (k buckets need k+1 bounds including
-    # sample min/max). Two bounded jobs over the sample: a count, then a
-    # rank-filter that ships only O(numChunks) rows to the driver.
-    sampled = sampled.where(F.col(key_col).isNotNull())
-    m = sampled.count()
-    if m == 0:
-        return [ChunkRange(None, None)]
-    k = min(num_chunks, m)
-    positions = sorted({max(1, round(i * m / k)) for i in range(k + 1)})
-    w = Window.orderBy(F.col(key_col))
-    cuts_df = (sampled
-               .select(F.col(key_col).alias("k"),
-                       F.row_number().over(w).alias("rn"))
-               .where(F.col("rn").isin(positions)))
-    bounds: list = []
-    for _, v in sorted((r["rn"], r["k"]) for r in cuts_df.collect()):
-        if not bounds or bounds[-1] != v:
-            bounds.append(v)
-    if not bounds:
-        return [ChunkRange(None, None)]
-    # sentinel-edge splits on BOTH ends are reference parity: the strategy
-    # emits chunks.size()+2 splits (firstSplit [minSentinel, bucket0.min)
-    # and lastSplit [lastBucket.max, maxSentinel], :129-165) — under live
-    # writes the edge splits catch keys outside the sampled range
-    chunks = [ChunkRange(None, bounds[0])]
-    chunks += [ChunkRange(bounds[i], bounds[i + 1])
-               for i in range(len(bounds) - 1)]
-    chunks.append(ChunkRange(bounds[-1], None))
-    if assign_unbounded_chunk_first:
-        chunks.insert(0, chunks.pop())
-    return chunks
-
-
-def chunk_filter(key: Column, chunk: ChunkRange) -> Column:
-    """Column predicate for one chunk — works for string/ObjectId keys where
-    ChunkRange.predicate's unquoted SQL rendering would not."""
-    cond = F.lit(True)
-    if chunk.start is not None:
-        cond = cond & (key >= F.lit(chunk.start))
-    if chunk.end is not None:
-        cond = cond & (key < F.lit(chunk.end))
-    return cond
 
 
 # ---------------------------------------------------------------------------

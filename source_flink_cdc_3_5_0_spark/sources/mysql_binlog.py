@@ -2075,17 +2075,6 @@ def record_seq(filename: str, pos: int, row: int, op: str) -> int:
              | min(row, (1 << 10) - 1)) << 1) | op_bit
 
 
-def watermark_seq(offset: BinlogOffset) -> int:
-    """``__seq`` high watermark for a snapshot captured at ``offset``:
-    stream records with seq at or below it are already reflected in the
-    snapshot (the whole event at the offset's end-position counts as
-    consumed). Feed to `StreamingPipeline.initial_load(stream_watermarks=)`
-    — the reference's snapshot-split high watermark
-    (`HybridSplitAssigner.java:53-110`) for the binlog stream."""
-    return record_seq(offset.filename or "", offset.position,
-                      (1 << 10) - 1, "+I")
-
-
 def _to_spark_value(ftype, v):
     """Wire cell -> the payload-schema field's Python value."""
 
@@ -2549,19 +2538,3 @@ def binlog_infer_tables(paths: list[str]
     return tables, pks
 
 
-def binlog_schema_events(paths: list[str]) -> list[dict]:
-    """Driver-side DDL extraction: binlog QUERY events in commit order.
-
-    DDL is rare control-plane data (the reference routes it through the
-    SchemaRegistry on the coordinator, never the data plane) — records are
-    {database, sql, file, pos, ts_sec, gtids} ready for the engine's
-    `common/ddl_parser`.
-    """
-    out: list[dict] = []
-    for p in sorted(paths, key=lambda s: _file_ordinal(s.rsplit("/", 1)[-1])):
-        with open(p, "rb") as fh:
-            data = fh.read()
-        fname = p.rsplit("/", 1)[-1]
-        out.extend(c for c in binlog_changes(data, fname)
-                   if c["kind"] == "ddl")
-    return out

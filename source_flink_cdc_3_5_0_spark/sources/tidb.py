@@ -13,14 +13,8 @@ key is the TiKV record key and whose values are TiDB-encoded rows:
   update-after from ``value``.  The handle (rowid) comes from
   `RowKey.decode(key)` and supplies the PK column when the PK is the
   integer handle (`pk_is_handle` tables store the PK only in the key).
-- **Snapshot decode** — `table/RowDataTiKVSnapshotEventDeserializationSchema
-  .java`: a region scan at a ts yields (key, value) pairs -> +I rows.
-- **Key-range splitter** — `table/utils/TableKeyRangeUtils.java:39-66`:
-  the signed-handle space is split evenly into `num` coprocessor ranges
-  (`delta = (MAX - (MIN+1)) / num`, boundary `i` at `MIN + delta*i`), the
-  first range starting at the table's min record key and the last ending
-  at the beyond-max key (`_r` prefix incremented to `_s`).
-  `isRecordKey` checks bytes 9:11 == ``_r`` (:72-74).
+- **Record keys** — `isRecordKey` (`table/utils/TableKeyRangeUtils.java
+  :72-74`) checks bytes 9:11 == ``_r``.
 
 The byte-level codecs the reference gets from the tikv-client jar
 (`org.tikv.common.codec.TableCodec/RowV2/RowDecoderV2`) are re-implemented
@@ -95,8 +89,6 @@ from .mysql_binlog import (decimal_bin_size, decode_newdecimal,
 
 _SIGN = 1 << 63
 _MASK = (1 << 64) - 1
-_I64_MIN = -(1 << 63)
-_I64_MAX = (1 << 63) - 1
 
 # ---------------------------------------------------------------------------
 # primitive codecs (tidb/util/codec/codec.go public semantics)
@@ -140,20 +132,6 @@ def encode_varint(v: int) -> bytes:
 def decode_varint(buf: bytes, pos: int) -> tuple[int, int]:
     uv, pos = decode_uvarint(buf, pos)
     return (uv >> 1) ^ -(uv & 1), pos
-
-
-def encode_comparable_bytes(data: bytes) -> bytes:
-    """Memcomparable byte groups: 8-byte chunks, marker ``0xFF - pad``."""
-    out = bytearray()
-    i = 0
-    while True:
-        group = data[i:i + 8]
-        pad = 8 - len(group)
-        out += group + b"\x00" * pad
-        out.append(0xFF - pad)
-        i += 8
-        if pad > 0:
-            return bytes(out)
 
 
 def decode_comparable_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
@@ -220,26 +198,6 @@ def decode_record_key(key: bytes) -> tuple[int, int]:
 def is_record_key(key: bytes) -> bool:
     """`TableKeyRangeUtils.isRecordKey`: bytes 9:11 are ``_r``."""
     return len(key) > 10 and key[9:11] == RECORD_PREFIX_SEP
-
-
-def table_key_ranges(table_id: int, num: int) -> list[tuple[bytes, bytes]]:
-    """Even handle-space split (`TableKeyRangeUtils.getTableKeyRanges`).
-
-    ``delta = (Long.MAX - (Long.MIN+1)) / num``; boundary ``i`` sits at
-    ``Long.MIN + delta*i``; the first range starts at the table's min
-    record key and the last ends at beyond-max (``_r`` bumped to ``_s``).
-    """
-    if num <= 0:
-        raise ValueError("Illegal value of num")
-    prefix = b"t" + encode_comparable_int(table_id)
-    min_key, beyond_max = prefix + b"_r", prefix + b"_s"
-    if num == 1:
-        return [(min_key, beyond_max)]
-    delta = (_I64_MAX - (_I64_MIN + 1)) // num
-    bound = lambda i: encode_record_key(table_id, _I64_MIN + delta * i)  # noqa: E731
-    return [(min_key if i == 0 else bound(i),
-             beyond_max if i == num - 1 else bound(i + 1))
-            for i in range(num)]
 
 
 # ---------------------------------------------------------------------------
@@ -743,22 +701,6 @@ def decode_tidb_kv(kv: DataFrame, table: TiTableInfo) -> DataFrame:
                 {n: pd.Series(cols[n], dtype=object) for n in names})
 
     return kv.mapInPandas(run, schema=schema)
-
-
-def decode_tidb_snapshot(kv: DataFrame, table: TiTableInfo,
-                         snapshot_ts: int | None = None) -> DataFrame:
-    """Region-scan (key, value) pairs at a ts -> +I rows (snapshot schema)."""
-    with_cols = kv
-    if "op_type" not in kv.columns:
-        with_cols = with_cols.withColumn("op_type", F.lit("PUT"))
-    if "old_value" not in kv.columns:
-        with_cols = with_cols.withColumn(
-            "old_value", F.lit(None).cast("binary"))
-    if "commit_ts" not in kv.columns:
-        with_cols = with_cols.withColumn(
-            "commit_ts", F.lit(snapshot_ts or 0).cast("long"))
-    return decode_tidb_kv(
-        with_cols.select(*[f.name for f in TIDB_KV_SCHEMA.fields]), table)
 
 
 def encode_tidb_kv(df: DataFrame, table: TiTableInfo, *,

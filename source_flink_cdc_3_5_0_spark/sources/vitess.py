@@ -1,18 +1,11 @@
-"""Vitess VStream source: VGTID vector offsets, shard-range routing,
+"""Vitess VStream source: VGTID vector offsets, shard-range algebra,
 reshard handling, and the VStream Debezium envelope.
 
 Parity targets (reference ``flink-cdc-connect/flink-cdc-source-connectors/
 flink-connector-vitess-cdc``):
 
-- **Builder surface + defaults** — `VitessSource.java:43-318`: port 15991,
-  decoding plugin ``decoderbufs``, connector name ``flink``, tablet type
-  RDONLY, gtid ``current``, ``stopOnReshard`` false, ``tombstonesOnDelete``
-  true, schema-name adjustment NONE; ``gtid`` must be set together with
-  ``shard`` (builder doc at :106-117). `VitessTableFactoryTest.java:146-171`
-  pins the table-factory variant (same defaults except schema adjustment
-  AVRO).
-- **Config enums** — `config/TabletType.java` (MASTER/REPLICA/RDONLY),
-  `config/SchemaAdjustmentMode.java` (AVRO/NONE).
+- **Stop-on-reshard** — `VitessSource.java` ``stopOnReshard``, default
+  false (see below).
 - **Wire behavior** the reference rides on (Debezium's public
   ``io.debezium.connector.vitess``): VTGate's VStream gRPC delivers one
   MySQL-style changelog PER SHARD; the resume position is a **VGTID — a
@@ -25,123 +18,17 @@ flink-connector-vitess-cdc``):
   shard set.
 
 Spark-first shape: the envelope decode is one ``from_json`` projection
-(JVM, codegen — no Python in the decode loop); shard routing over keyspace
-ids is a codegen'd CASE chain on binary comparisons; only the per-shard
-resume fold and reshard detection touch the driver, and both are O(shards)
-— control-plane, like the JDBC chunk metadata.
-
-Vindex note: ``binary``, ``binary_md5`` and Vitess's default ``hash``
-vindex are all real — ``hash`` is null-key DES over the big-endian uint64,
-implemented from the public FIPS 46-3 tables in `functions.des_vindex` and
-validated against the classic zero-key DES known-answer and the Vitess
-docs' keyspace-id examples.  ``binary_md5`` is the JVM/codegen routing
-path; ``hash`` routes through an Arrow-batched pandas UDF.
+(JVM, codegen — no Python in the decode loop); only the per-shard resume
+fold and reshard detection touch the driver, and both are O(shards) —
+control-plane, like the JDBC chunk metadata.
 """
 
 from __future__ import annotations
 
-import enum
-import hashlib
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, functions as F, types as T
-
-from ..common.events import META_COL
-from .base import SEQ_COL
-
-
-# ---------------------------------------------------------------------------
-# config surface (VitessSource.Builder / VitessTableFactory parity)
-# ---------------------------------------------------------------------------
-
-class TabletType(enum.Enum):
-    """config/TabletType.java — which tablet the VStream serves from."""
-
-    MASTER = "MASTER"
-    REPLICA = "REPLICA"
-    RDONLY = "RDONLY"
-
-
-class SchemaAdjustmentMode(enum.Enum):
-    """config/SchemaAdjustmentMode.java — schema-name sanitization."""
-
-    AVRO = "AVRO"
-    NONE = "NONE"
-
-
-@dataclass
-class VitessConfig:
-    """VitessSource.Builder parity (defaults pinned at VitessSource.java:
-    47-59; the table factory's only divergence is schema adjustment AVRO,
-    VitessTableFactoryTest.java:157)."""
-
-    hostname: str = None
-    keyspace: str = None
-    port: int = 15991
-    username: str | None = None
-    password: str | None = None
-    plugin_name: str = "decoderbufs"
-    name: str = "flink"
-    tablet_type: TabletType = TabletType.RDONLY
-    shard: str | None = None
-    gtid: str = "current"
-    stop_on_reshard: bool = False
-    tombstones_on_delete: bool = True
-    message_key_columns: tuple[str, ...] = ()
-    schema_name_adjustment: SchemaAdjustmentMode = SchemaAdjustmentMode.NONE
-    table_include_list: tuple[str, ...] = ()
-    table_exclude_list: tuple[str, ...] = ()
-    column_include_list: tuple[str, ...] = ()
-    column_exclude_list: tuple[str, ...] = ()
-    dbz_properties: dict = field(default_factory=dict)
-
-    @classmethod
-    def from_options(cls, options: dict) -> "VitessConfig":
-        """Table-factory option spelling (VitessTableFactory): kebab-case
-        keys, ``debezium.*`` passthrough, schema adjustment defaults AVRO."""
-        dbz = {k[len("debezium."):]: v for k, v in options.items()
-               if k.startswith("debezium.")}
-        return cls(
-            hostname=options.get("hostname"),
-            keyspace=options.get("keyspace"),
-            port=int(options.get("port", 15991)),
-            username=options.get("username"),
-            password=options.get("password"),
-            plugin_name=options.get("decoding.plugin.name", "decoderbufs"),
-            name=options.get("name", "flink"),
-            tablet_type=TabletType(options.get("tablet-type", "RDONLY")),
-            shard=options.get("shard"),
-            gtid=options.get("gtid", "current"),
-            stop_on_reshard=str(options.get(
-                "stop-on-reshard", "false")).lower() == "true",
-            tombstones_on_delete=str(options.get(
-                "tombstones-on-delete", "true")).lower() == "true",
-            schema_name_adjustment=SchemaAdjustmentMode(
-                options.get("schema-name-adjustment", "AVRO")),
-            dbz_properties=dbz,
-        )
-
-    def validate(self) -> None:
-        """VitessValidator analog (delegating checks the connector would
-        reject: required endpoints, gtid/shard pairing, enum values)."""
-        if not self.hostname:
-            raise ValueError("hostname is required (VTGate VStream server)")
-        if not self.keyspace:
-            raise ValueError("keyspace is required")
-        if not (0 < int(self.port) < 65536):
-            raise ValueError("port out of range: %r" % (self.port,))
-        if self.gtid not in ("current", "") and self.shard is None:
-            # VitessSource.java:106-117 — a pinned GTID is per-shard
-            raise ValueError(
-                "gtid %r requires an explicit shard (a GTID position names "
-                "one shard's stream)" % self.gtid)
-        if self.plugin_name != "decoderbufs":
-            raise ValueError(
-                "unsupported decoding plugin %r (reference supports "
-                "decoderbufs)" % self.plugin_name)
+from pyspark.sql import DataFrame, functions as F, types as T
 
 
 # ---------------------------------------------------------------------------
@@ -200,25 +87,6 @@ class ShardRange:
         return not (lo_clear or hi_clear)
 
 
-def shards_tile(shards: list[str]) -> bool:
-    """True iff the shard set partitions the keyspace-id space — contiguous,
-    non-overlapping, from -inf to +inf (what a healthy keyspace serves)."""
-    ranges = sorted(ShardRange.parse(s) for s in shards)
-    if not ranges or ranges[0].start != b"" or ranges[-1].end != b"":
-        return False
-    return all(a.end == b.start and a.end != b""
-               for a, b in zip(ranges, ranges[1:]))
-
-
-def shard_for(keyspace_id: bytes, shards: list[str]) -> str:
-    """The one shard owning ``keyspace_id`` (raises if the set doesn't)."""
-    owners = [s for s in shards if ShardRange.parse(s).contains(keyspace_id)]
-    if len(owners) != 1:
-        raise ValueError("keyspace id %s owned by %d shards of %r"
-                         % (keyspace_id.hex(), len(owners), shards))
-    return owners[0]
-
-
 def _tiles(parent: ShardRange, children: list[ShardRange]) -> bool:
     """True iff ``children`` (sorted) tile ``parent``'s range exactly."""
     return bool(children
@@ -226,116 +94,6 @@ def _tiles(parent: ShardRange, children: list[ShardRange]) -> bool:
                 and children[-1].end == parent.end
                 and all(a.end == b.start
                         for a, b in zip(children, children[1:])))
-
-
-def detect_reshard(old_shards: list[str],
-                   new_shards: list[str]) -> dict[str, list[str]]:
-    """Shard transitions between two serving sets, ``{parent: [children]}``
-    where the parent's range equals the union of the children's ranges.
-    A SPLIT maps an old parent to new children; a MERGE maps a new parent
-    to old children (direction is recoverable from set membership).
-    Returns {} ONLY when the sets are identical; any disappearance or
-    appearance not explained by a clean transition raises — a silent {}
-    must never mean 'half the keyspace lost coverage'."""
-    old_set, new_set = set(old_shards), set(new_shards)
-    gone = sorted(ShardRange.parse(s) for s in old_set - new_set)
-    added = sorted(ShardRange.parse(s) for s in new_set - old_set)
-    out: dict[str, list[str]] = {}
-    used_added: set[str] = set()
-    used_gone: set[str] = set()
-    for parent in gone:  # splits
-        children = sorted(c for c in added if parent.covers(c))
-        if _tiles(parent, children):
-            out[parent.name] = [c.name for c in children]
-            used_added |= {c.name for c in children}
-            used_gone.add(parent.name)
-    for parent in added:  # merges
-        if parent.name in used_added:
-            continue
-        children = sorted(g for g in gone
-                          if g.name not in used_gone and parent.covers(g))
-        if _tiles(parent, children):
-            out[parent.name] = [c.name for c in children]
-            used_gone |= {c.name for c in children}
-            used_added.add(parent.name)
-    unexplained = ([g.name for g in gone if g.name not in used_gone]
-                   + [a.name for a in added if a.name not in used_added])
-    if unexplained:
-        raise ValueError(
-            "shard set change is not a clean reshard: %r -> %r "
-            "(unexplained: %r)"
-            % (sorted(old_set), sorted(new_set), sorted(unexplained)))
-    return out
-
-
-# ---------------------------------------------------------------------------
-# vindexes (keyspace-id functions)
-# ---------------------------------------------------------------------------
-
-def keyspace_id(value, vindex: str = "binary_md5") -> bytes:
-    """Compute a row's keyspace id with a named Vitess vindex.
-
-    ``binary_md5`` (md5 digest of the key bytes), ``binary`` (the key bytes
-    themselves), and Vitess's default ``hash`` — null-key DES over the
-    big-endian uint64, implemented for real from the FIPS 46-3 tables in
-    `functions.des_vindex` (validated against the classic zero-key DES KAT
-    and the Vitess docs' keyspace-id examples)."""
-    if vindex == "hash":
-        from ..functions.des_vindex import vitess_hash
-
-        if not isinstance(value, int):
-            raise TypeError("the 'hash' vindex applies to integer keys, "
-                            "got %r" % type(value).__name__)
-        return vitess_hash(value)
-    raw = (value if isinstance(value, (bytes, bytearray))
-           else str(value).encode("utf-8"))
-    if vindex == "binary_md5":
-        return hashlib.md5(bytes(raw)).digest()
-    if vindex == "binary":
-        return bytes(raw)
-    raise ValueError("unknown vindex %r" % vindex)
-
-
-def keyspace_id_col(key: Column, vindex: str = "binary_md5") -> Column:
-    """Column form of `keyspace_id`.  ``binary_md5``/``binary`` are JVM-side
-    (codegen'd md5/unhex — no Python); the ``hash`` vindex has no built-in
-    DES so it runs as an Arrow-batched pandas UDF — prefer binary_md5 when
-    the routing column is on the 100-TB path."""
-    if vindex == "hash":
-        from ..functions.des_vindex import vitess_hash
-
-        # the key crosses into Python as a STRING: an Arrow int64 batch
-        # that contains any null becomes a float64 pandas Series, and
-        # float64 silently rounds keys >= 2^53 — string round-trip keeps
-        # 64-bit keys exact in every batch
-        @F.pandas_udf("binary")
-        def _vhash(s: pd.Series) -> pd.Series:
-            return s.map(lambda n: None if pd.isna(n) else vitess_hash(int(n)))
-
-        return _vhash(key.cast("long").cast("string"))
-    raw = key.cast("binary")
-    if vindex == "binary_md5":
-        return F.unhex(F.md5(raw))
-    if vindex == "binary":
-        return raw
-    raise ValueError("vindex %r has no column form" % vindex)
-
-
-def shard_col(ksid: Column, shards: list[str]) -> Column:
-    """Route keyspace ids to shard names JVM-side: a CASE chain of binary
-    comparisons (Spark compares BinaryType lexicographically unsigned —
-    the same order the prefix bounds are defined in).  O(shards) whens,
-    codegen'd; at 100 TB the routing is pure whole-stage compute."""
-    expr = F.lit(None).cast("string")
-    for s in sorted(shards, key=lambda s: ShardRange.parse(s)):
-        r = ShardRange.parse(s)
-        cond = F.lit(True)
-        if r.start:
-            cond = cond & (ksid >= F.lit(r.start))
-        if r.end:
-            cond = cond & (ksid < F.lit(r.end))
-        expr = F.when(cond, F.lit(s)).otherwise(expr)
-    return expr
 
 
 # ---------------------------------------------------------------------------
@@ -475,8 +233,7 @@ def decode_vstream(raw: DataFrame, payload_schema: T.StructType,
     fallback, zoned-timestamp side channels) are shared with
     `decode_debezium` via `decode_dbz_envelope` — only the ``source``
     block differs: VStream carries keyspace/shard/vgtid instead of
-    db/schema (kept in ``__meta`` so the per-shard resume fold and reshard
-    policy can read them).  Tombstones (the null-value record after a
+    db/schema (kept in ``__meta``).  Tombstones (the null-value record after a
     delete when ``tombstones_on_delete``) parse to op-less rows and are
     dropped — they exist for Kafka log compaction, not the changelog."""
     from .debezium import decode_dbz_envelope
@@ -491,45 +248,33 @@ def decode_vstream(raw: DataFrame, payload_schema: T.StructType,
     )
 
 
-def _positions_agg(df: DataFrame, shard: Column, keyspace: Column,
-                   vgtid: Column, seq: Column) -> list:
-    """The shared per-(shard, keyspace) last-position aggregation.  ``seq``
-    breaks ties with (length, lexicographic) on the vgtid string — a
-    shard's GTID set only grows, so on the file path (where ``seq`` is
-    millisecond ``ts_ms`` and same-ms ties are common) the longer/later
-    spelling is the later position; without this, max_by could regress the
-    resume point inside one millisecond.  O(shards) rows collected — the
-    same control-plane class as Kafka offset commits."""
-    return (df
+def _raw_shard_positions(raw: DataFrame, value_col: str) -> list:
+    """Per-(shard, keyspace) last position straight off RAW VStream JSON —
+    the streaming runner's offset fold, which must not depend on any
+    table's payload schema (one pass over the whole micro-batch covers
+    every table).
+
+    ``ts_ms`` orders events, with ties broken by (length, lexicographic)
+    on the vgtid string — a shard's GTID set only grows, so when same-ms
+    ties occur the longer/later spelling is the later position; without
+    this, max_by could regress the resume point inside one millisecond.
+    O(shards) rows collected — the same control-plane class as Kafka
+    offset commits."""
+    v = F.col(value_col)
+    shard = F.get_json_object(v, "$.source.shard")
+    vgtid = F.get_json_object(v, "$.source.vgtid")
+    seq = F.get_json_object(v, "$.ts_ms").cast("long")
+    return (raw
             .where(shard.isNotNull())
             .groupBy(shard.alias("shard"),
                      # a missing source.keyspace must not fork a None group
                      # alongside the real keyspaces (unsortable state keys,
                      # bypassed reshard policy) — normalize to ""
-                     F.coalesce(keyspace, F.lit("")).alias("keyspace"))
+                     F.coalesce(F.get_json_object(v, "$.source.keyspace"),
+                                F.lit("")).alias("keyspace"))
             .agg(F.max_by(vgtid, F.struct(seq, F.length(vgtid), vgtid))
                  .alias("vgtid"))
             .collect())
-
-
-def _shard_positions(decoded: DataFrame) -> list:
-    """`_positions_agg` over a DECODED micro-batch (``__meta`` map)."""
-    return _positions_agg(
-        decoded, F.col(META_COL)["shard"], F.col(META_COL)["keyspace"],
-        F.col(META_COL)["vgtid"], F.col(SEQ_COL))
-
-
-def _raw_shard_positions(raw: DataFrame, value_col: str) -> list:
-    """`_positions_agg` straight off RAW VStream JSON — the streaming
-    runner's offset fold, which must not depend on any table's payload
-    schema (one pass over the whole micro-batch covers every table)."""
-    v = F.col(value_col)
-    return _positions_agg(
-        raw,
-        F.get_json_object(v, "$.source.shard"),
-        F.get_json_object(v, "$.source.keyspace"),
-        F.get_json_object(v, "$.source.vgtid"),
-        F.get_json_object(v, "$.ts_ms").cast("long"))
 
 
 def _fold_positions(rows: list, start: Vgtid,
@@ -562,13 +307,6 @@ def _fold_positions(rows: list, start: Vgtid,
             continue  # never regress below the running state
         out = out.advance(ks, r["shard"], pos)
     return out
-
-
-def batch_vgtid(decoded: DataFrame, start: Vgtid) -> Vgtid:
-    """Fold a decoded micro-batch into the resume VGTID: per (keyspace,
-    shard), the ``source.vgtid`` of that shard's LAST event (by ``__seq``)
-    replaces the shard's position."""
-    return _fold_positions(_shard_positions(decoded), start)
 
 
 def _classify_new_shards(known_shards: list[str], new: list[str]):
@@ -617,68 +355,6 @@ def _classify_new_shards(known_shards: list[str], new: list[str]):
             "shard(s) %r appeared without a clean parent split or merge "
             "from %r" % (orphan, sorted(known_shards)))
     return splits, merged_children, claimed, still_pending, discovered
-
-
-@dataclass
-class ReshardDecision:
-    """Outcome of `apply_reshard_policy` for one micro-batch."""
-
-    df: DataFrame                  # events to process this batch
-    shards: list[str]              # serving shard set after the batch
-    stopped: bool = False          # stop_on_reshard fired
-    resume_vgtid: Vgtid | None = None  # resumable position when stopped
-    pending: tuple[str, ...] = ()  # split children whose siblings are quiet
-
-
-def apply_reshard_policy(decoded: DataFrame, known_shards: list[str],
-                         start: Vgtid, *, stop_on_reshard: bool = False,
-                         pending: tuple[str, ...] = (),
-                         keyspace: str | None = None) -> ReshardDecision:
-    """VitessSource's ``stopOnReshard`` semantics over one decoded
-    micro-batch — the single-keyspace DataFrame wrapper around the same
-    `advance_stream_state` transition the streaming runner persists
-    (one implementation; this API only adds the DataFrame plumbing).
-
-    ``stop_on_reshard=True`` HALTS: the returned ``df`` is EMPTY — nothing
-    from the boundary batch is processed, so the resumable VGTID is the
-    last COMMITTED position with completed-split children inheriting their
-    parent's entry; the caller re-delivers the whole batch after the
-    restart that adopts the children (replay-idempotent sinks absorb any
-    overlap).  ``False`` (default) adopts the new serving set — split
-    children (with quiet siblings deferring via ``pending``), merge
-    parents, and late-discovered non-overlapping shards — and processes
-    everything."""
-    rows = _shard_positions(decoded)
-    if keyspace is None:
-        kss = sorted({r["keyspace"] for r in rows if r["keyspace"]})
-        if len(kss) > 1:
-            raise ValueError(
-                "batch spans keyspaces %r: pass keyspace= to scope "
-                "known_shards" % kss)
-        keyspace = kss[0] if kss else ""
-    state = VitessStreamState(
-        vgtid=start,
-        serving=((keyspace, tuple(known_shards)),),
-        pending=tuple((keyspace, s) for s in pending))
-    res, halt = advance_stream_state(rows, state,
-                                     stop_on_reshard=stop_on_reshard)
-    out_pending = tuple(sorted(s for ks, s in res.pending
-                               if ks == keyspace))
-    if halt:
-        # informational resume vector: completed-split children inherit
-        # the parent's COMMITTED entry (the state itself stays untouched —
-        # the caller re-delivers the batch after restart, and the adopt
-        # path performs the real surgery then)
-        seen = sorted({r["shard"] for r in rows})
-        new = sorted((set(seen) | set(pending)) - set(known_shards))
-        splits = _classify_new_shards(list(known_shards), new)[0]
-        return ReshardDecision(
-            df=decoded.limit(0), shards=list(known_shards), stopped=True,
-            resume_vgtid=start.reshard(splits, keyspace=keyspace),
-            pending=out_pending)
-    return ReshardDecision(
-        df=decoded, shards=list(res.serving_map().get(keyspace, ())),
-        resume_vgtid=None, pending=out_pending)
 
 
 # ---------------------------------------------------------------------------

@@ -1,3 +1,3 @@
-from .materialize import latest_image, materialize_changelog
+from .materialize import latest_image
 
-__all__ = ["latest_image", "materialize_changelog"]
+__all__ = ["latest_image"]

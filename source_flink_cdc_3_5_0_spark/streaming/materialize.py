@@ -151,8 +151,3 @@ def changelog_normalize(df: DataFrame, pk_cols: list[str], seq_col: str,
     return rest.unionByName(ub).unionByName(ua)
 
 
-def materialize_changelog(df: DataFrame, pk_cols: list[str], seq_col: str) -> DataFrame:
-    """Current-state view of a changelog DataFrame (drops envelope)."""
-    out = latest_image(df, pk_cols, seq_col)
-    drop = [c for c in (OP_COL, seq_col, "__before", "__meta") if c in out.columns]
-    return out.drop(*drop)

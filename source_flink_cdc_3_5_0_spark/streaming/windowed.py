@@ -1,34 +1,23 @@
-"""Event-time windowed aggregation + custom stateful operators.
+"""Event-time windowed aggregation.
 
-The reference is a CDC tool, but its streams feed exactly these shapes
-downstream; on Spark they're first-class Structured Streaming citizens:
+The reference is a CDC tool, but its streams feed exactly this shape
+downstream; on Spark it is a first-class Structured Streaming citizen:
+``windowed_counts`` runs tumbling/sliding event-time windows with a
+watermark bounding state for late data (``withWatermark`` + ``F.window``).
+The SAME code path works on a batch DataFrame (no watermark needed), which
+is what lets a DuckDB oracle check the streaming query's semantics.
 
-- ``windowed_counts``: tumbling/sliding event-time windows with a watermark
-  bounding state for late data (``withWatermark`` + ``F.window``). The SAME
-  code path works on a batch DataFrame (no watermark needed), which is what
-  lets a DuckDB oracle check the streaming query's semantics.
-- ``stateful_latest``: per-key latest-image maintenance as an
-  ``applyInPandasWithState`` operator — the streaming analog of
-  ``streaming/materialize.latest_image`` with explicit keyed state
-  (GroupStateTimeout.NoTimeout): each micro-batch emits the new latest row
-  for every key it touched, state carries (seq, row) across batches.
-
-State sizing at 100 TB: watermarks bound window state to
-(watermark horizon / slide) windows per key; ``stateful_latest`` state is
-one row per key — both shuffle once on their keys and scale with executors
-(state lives in the state store, partitioned by the same keys).
+State sizing at 100 TB: the watermark bounds window state to
+(watermark horizon / slide) windows per key; the aggregation shuffles once
+on its keys and scales with executors (state lives in the state store,
+partitioned by the same keys).
 """
 
 from __future__ import annotations
 
-import json
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from ..sources.base import SEQ_COL
 
 
 def windowed_counts(df: DataFrame, ts_col: str = "ts",
@@ -54,77 +43,3 @@ def windowed_counts(df: DataFrame, ts_col: str = "ts",
     )
 
 
-def dedup_stream(df: DataFrame, keys: Sequence[str], ts_col: str = "ts",
-                 watermark: str = "1 hour") -> DataFrame:
-    """Drop redelivered events by key — the at-least-once → effectively-once
-    shim in front of any sink (Kafka redelivery, source retry, replayed
-    micro-batch). Streaming input uses ``dropDuplicatesWithinWatermark``:
-    per-key state is EVICTED once the watermark passes it, so state is
-    bounded by (horizon × key rate) instead of growing with the stream —
-    the only dedup configuration that survives an unbounded stream. The
-    trade: a redelivery arriving more than ``watermark`` after the original
-    is NOT deduplicated (its state was evicted) — size the watermark to the
-    source's redelivery horizon. Batch input uses plain ``dropDuplicates``,
-    which dedups globally; which duplicate survives is unspecified in both
-    modes."""
-    if df.isStreaming:
-        return df.withWatermark(ts_col, watermark) \
-            .dropDuplicatesWithinWatermark(list(keys))
-    return df.dropDuplicates(list(keys))
-
-
-_LATEST_STATE_SCHEMA = T.StructType([
-    T.StructField("seq", T.LongType()),
-    T.StructField("row_json", T.StringType()),
-])
-
-
-def stateful_latest(stream: DataFrame, schema: T.StructType,
-                    key_cols: Sequence[str],
-                    seq_col: str = SEQ_COL) -> DataFrame:
-    """Per-key latest image via ``applyInPandasWithState``.
-
-    ``schema``: the physical row schema (output schema; must be a subset of
-    the stream's columns + ``seq_col``). Each micro-batch emits, per touched
-    key, the row with the highest ``seq_col`` seen so far (ties: later batch
-    wins) — a keyed-state changelog materializer. State is (seq, row-JSON):
-    schema-agnostic, one entry per key.
-    """
-    out_names = [f.name for f in schema.fields]
-
-    def update(key: tuple, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        best_seq, best_row = None, None
-        if state.exists:
-            best_seq, row_json = state.get
-            best_row = json.loads(row_json)
-        for pdf in pdfs:
-            # rows with a null/unparseable seq can't be ordered — drop them
-            # rather than crash the query (astype('int64') raises on NaN)
-            seqs = pd.to_numeric(pdf[seq_col], errors="coerce")
-            pdf = pdf[seqs.notna()]
-            if len(pdf) == 0:
-                continue
-            idx = seqs[seqs.notna()].astype("int64").idxmax()
-            seq = int(seqs.loc[idx])
-            if best_seq is None or seq >= best_seq:
-                best_seq = seq
-                best_row = {n: pdf[n].loc[idx] for n in out_names}
-                best_row = {k: (None if pd.isna(v) else
-                                v.item() if hasattr(v, "item") else
-                                str(v) if isinstance(v, pd.Timestamp) else v)
-                            for k, v in best_row.items()}
-        if best_row is not None:
-            state.update((best_seq, json.dumps(best_row, default=str)))
-            yield pd.DataFrame([best_row], columns=out_names)
-
-    return (
-        stream.groupBy(*[F.col(k) for k in key_cols])
-        .applyInPandasWithState(
-            update,
-            outputStructType=schema,
-            stateStructType=_LATEST_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )

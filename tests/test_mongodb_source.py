@@ -1,9 +1,9 @@
-"""MongoDB change-stream codec, ChangelogNormalize, sample-bucket splitter.
+"""MongoDB change-stream codec and ChangelogNormalize.
 
 Reference parity: flink-connector-mongodb-cdc —
 MongoDBConnectorDeserializationSchema.java:125-170 (upsert decode),
 MongoDBConnectorFullChangelogDeserializationSchema.java:60-130 (pre/post
-images), SampleBucketSplitStrategy.java:83-170 (sample splits).
+images).
 """
 
 import json
@@ -14,9 +14,8 @@ from pyspark.sql import functions as F, types as T
 
 from source_flink_cdc_3_5_0_spark.common.events import BEFORE_COL, META_COL, OP_COL
 from source_flink_cdc_3_5_0_spark.sources.base import SEQ_COL
-from source_flink_cdc_3_5_0_spark.sources.jdbc import ChunkRange
 from source_flink_cdc_3_5_0_spark.sources.mongodb import (
-    chunk_filter, decode_mongo_changestream, sample_bucket_chunks,
+    decode_mongo_changestream,
 )
 from source_flink_cdc_3_5_0_spark.streaming.materialize import (
     changelog_normalize, latest_image,
@@ -195,60 +194,6 @@ def test_normalize_then_materialize_equals_direct(spark):
     via_norm = {(r["_id"], r["qty"]) for r in latest_image(
         changelog_normalize(df, ["_id"], SEQ_COL), ["_id"], SEQ_COL).collect()}
     assert via_norm == direct
-
-
-def test_sample_bucket_single_chunk_small_collection(spark):
-    df = spark.range(100).withColumnRenamed("id", "_id")
-    chunks = sample_bucket_chunks(df, "_id", size_in_bytes=1_000_000,
-                                  chunk_size_mb=64)
-    assert chunks == [ChunkRange(None, None)]
-
-
-def test_sample_bucket_chunks_cover_and_balance(spark):
-    n = 20_000
-    df = spark.range(n).select((F.col("id") * 7 % 1_000_003).alias("_id"))
-    # size 5 chunks' worth -> numChunks = 6; below threshold -> full sample
-    chunks = sample_bucket_chunks(
-        df, "_id", size_in_bytes=5 * 64 * 1024 * 1024, chunk_size_mb=64)
-    assert chunks[0].start is None and chunks[-1].end is None
-    # contiguous, ordered
-    for a, b in zip(chunks, chunks[1:]):
-        assert a.end == b.start
-    # every row in exactly one chunk
-    total = sum(df.where(chunk_filter(F.col("_id"), c)).count()
-                for c in chunks)
-    assert total == n
-    # interior chunks hold roughly equal counts (full sampling -> near exact)
-    inner = [df.where(chunk_filter(F.col("_id"), c)).count()
-             for c in chunks[1:-1]]
-    assert inner and max(inner) - min(inner) <= n // len(inner)
-
-
-def test_sample_bucket_string_keys_and_unbounded_first(spark):
-    df = spark.range(5000).select(
-        F.concat(F.lit("oid"), F.lpad(F.col("id").cast("string"), 8, "0")
-                 ).alias("_id"))
-    chunks = sample_bucket_chunks(
-        df, "_id", size_in_bytes=3 * 64 * 1024 * 1024, chunk_size_mb=64,
-        assign_unbounded_chunk_first=True)
-    assert chunks[0].end is None  # trailing unbounded split moved first
-    assert sum(df.where(chunk_filter(F.col("_id"), c)).count()
-               for c in chunks) == 5000
-
-
-def test_sampled_path_above_threshold(spark):
-    n = 4000
-    df = spark.range(n).withColumnRenamed("id", "_id")
-    chunks = sample_bucket_chunks(
-        df, "_id", size_in_bytes=4 * 64 * 1024 * 1024, chunk_size_mb=64,
-        sampling_threshold=1000, samples_per_chunk=50)
-    assert sum(df.where(chunk_filter(F.col("_id"), c)).count()
-               for c in chunks) == n
-    counts = [df.where(chunk_filter(F.col("_id"), c)).count()
-              for c in chunks[1:-1]]
-    # sampled cut points: balance within 3x of ideal
-    ideal = n / len(chunks)
-    assert all(c < 3 * ideal for c in counts)
 
 
 def test_changelog_normalize_with_state_across_batches(spark):

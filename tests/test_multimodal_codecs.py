@@ -1,6 +1,6 @@
 """Real multimodal codecs (no PIL/ffmpeg): PPM image + 16-bit-PCM WAV
-decode with EXACT expected values, the real nearest-neighbor resize
-round-trip, and the auto-fallback contract for unparseable formats."""
+decode with EXACT expected values, and the auto-fallback contract for
+unparseable formats."""
 
 import io
 import wave
@@ -14,7 +14,6 @@ from source_flink_cdc_3_5_0_spark.extensions.multimodal import (
     _decode_wav,
     _encode_ppm,
     extract_features,
-    resize_images,
 )
 
 
@@ -77,19 +76,6 @@ def test_real_audio_features_exact(spark):
         MEDIA_SCHEMA)
     row = extract_features(df, decoder="real").collect()[0]
     assert np.allclose(row["feature"], [amp / 32768.0] * 16, atol=1e-6)
-
-
-def test_real_resize_nearest_neighbor_exact(spark):
-    """Downscale 8x8 -> 2x2 by nearest-neighbor: output pixels must be the
-    exact sampled sources (indices floor(i*8/2) = 0 and 4)."""
-    payload, arr = make_ppm(8, 8, lambda x, y: (x * 30, y * 30, 128))
-    df = spark.createDataFrame(
-        [(3, "image", bytearray(payload), "image/x-portable-pixmap",
-          8, 8, None)], MEDIA_SCHEMA)
-    out = resize_images(df, target_w=2, target_h=2, decoder="real").collect()[0]
-    got = _decode_ppm(bytes(out["payload"]))
-    assert np.array_equal(got, arr[[0, 4]][:, [0, 4]])
-    assert (out["width"], out["height"]) == (2, 2)
 
 
 def test_auto_falls_back_fake_real_raises(spark):
@@ -320,25 +306,6 @@ class TestPngCodec:
         payload = _encode_png(img, filter_type=4)
         feats = _real_decode_features(payload)
         assert feats == _image_features(img)
-
-    def test_resize_images_real_png_path(self, spark):
-        import numpy as np
-
-        from source_flink_cdc_3_5_0_spark.extensions.multimodal import (
-            _decode_png, _encode_png, resize_images)
-
-        img = self._img()
-        rows = [(1, "image", bytearray(_encode_png(img, filter_type=2)))]
-        df = spark.createDataFrame(
-            rows, "media_id bigint, kind string, payload binary")
-        out = resize_images(df, target_w=4, target_h=4,
-                            decoder="real").collect()
-        assert len(out) == 1
-        small = _decode_png(bytes(out[0]["payload"]))
-        assert small is not None and small.shape == (4, 4, 3)
-        ys = (np.arange(4) * 13 // 4)
-        xs = (np.arange(4) * 9 // 4)
-        assert np.array_equal(small, img[ys][:, xs])
 
 
 class TestPngFuzz:

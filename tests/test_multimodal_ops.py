@@ -1,47 +1,15 @@
-"""Multimodal decode-stage plumbing: resize and frame-sampling mapInPandas
-ops (extensions/multimodal.py). The codecs are documented stubs; what these
-tests pin is the Spark-side contract — schemas, JVM-side kind filtering,
-1:N row explosion bounds, determinism of the fake decode."""
-
-import hashlib
+"""Multimodal decode-stage plumbing: frame-sampling mapInPandas
+ops (extensions/multimodal.py). What these tests pin is the Spark-side
+contract — schemas, 1:N row explosion bounds, and the gated real
+decoders."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from source_flink_cdc_3_5_0_spark.extensions.multimodal import (
-    resize_images,
+    extract_features,
     sample_frames,
     synthetic_media,
 )
-
-
-def test_resize_images_only_and_fixed_payload(spark):
-    media = synthetic_media(spark, n=48)
-    out = resize_images(media, target_w=8, target_h=8)
-    rows = out.collect()
-    # only image rows (i % 3 == 0) survive, each with a 8*8*3-byte payload
-    assert sorted(r.media_id for r in rows) == [i for i in range(48) if i % 3 == 0]
-    assert all(r.width == 8 and r.height == 8 for r in rows)
-    assert all(len(r.payload) == 8 * 8 * 3 for r in rows)
-
-
-def test_resize_deterministic(spark):
-    media = synthetic_media(spark, n=9)
-    a = {r.media_id: bytes(r.payload) for r in resize_images(media, 4, 4).collect()}
-    b = {r.media_id: bytes(r.payload) for r in resize_images(media, 4, 4).collect()}
-    assert a == b
-
-
-def test_resize_kind_filter_is_jvm_side(spark):
-    """The kind filter must run BEFORE the Python stage (scan-side), not
-    inside it — audio/video payloads never cross the Arrow boundary."""
-    plan = resize_images(synthetic_media(spark, n=9))._jdf.queryExecution() \
-        .executedPlan().toString()
-    py_at = plan.find("MapInPandas")
-    filter_at = plan.find("Filter")
-    assert py_at != -1 and filter_at != -1
-    # child operators print BELOW their parent: filter must be deeper
-    assert filter_at > py_at, plan
 
 
 def test_sample_frames_counts_and_stride(spark):
@@ -72,7 +40,7 @@ def test_real_decoder_paths_are_gated(spark):
     frame sampling (test_multimodal_codecs / test_jpeg_codec pin values);
     what stays environment-gated raises inside the worker: real-mode
     frame sampling over a non-AVI container (MP4 needs ffmpeg) and
-    real-mode resize over a format the resizer can't re-encode."""
+    real-mode feature extraction over a payload it can't decode."""
     from source_flink_cdc_3_5_0_spark.extensions.multimodal import MEDIA_SCHEMA
     mp4 = spark.createDataFrame(
         [(1, "video", bytearray(b"\x00\x00\x00 ftypmp42 opaque"),
@@ -83,7 +51,7 @@ def test_real_decoder_paths_are_gated(spark):
         [(1, "image", bytearray(b"\xff\xd8\xff jpeg-ish"), "image/jpeg",
           2, 2, None)], MEDIA_SCHEMA)
     with pytest.raises(Exception):
-        resize_images(truncated_jpeg, use_fake_decoder=False).collect()
+        extract_features(truncated_jpeg, use_fake_decoder=False).collect()
 
 
 class TestMp4FfmpegPath:

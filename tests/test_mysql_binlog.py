@@ -24,7 +24,7 @@ from source_flink_cdc_3_5_0_spark.sources.mysql_binlog import (
     MYSQL_TYPE_SET, MYSQL_TYPE_SHORT, MYSQL_TYPE_STRING, MYSQL_TYPE_TIME2,
     MYSQL_TYPE_TIMESTAMP2, MYSQL_TYPE_TINY, MYSQL_TYPE_VARCHAR,
     MYSQL_TYPE_YEAR, TABLE_MAP_EVENT, UPDATE_ROWS_EVENT, WRITE_ROWS_EVENT,
-    binlog_changes, binlog_schema_events, decimal_bin_size,
+    binlog_changes, decimal_bin_size,
     decode_binlog, decode_newdecimal, decode_time2, encode_newdecimal,
     encode_time2, read_binlog_files, record_seq, _read_lenc, _write_lenc)
 
@@ -719,7 +719,7 @@ def test_snapshot_binlog_stitch_no_duplicates(spark, tmp_path):
         PipelineComposer, parse_yaml_pipeline)
     from source_flink_cdc_3_5_0_spark.sinks.lakehouse import SnapshotLakeSink
     from source_flink_cdc_3_5_0_spark.sources.mysql_binlog import (
-        binlog_changes, watermark_seq)
+        binlog_changes, record_seq)
     from pyspark.sql import types as T
     import json
 
@@ -756,7 +756,9 @@ sink: {{type: values}}
     pipe.register_table(tid, Schema.of(Column("id", T.LongType(), False),
                                        Column("name", T.StringType())))
     pipe.initial_load({"inv.logs": snap},
-                      stream_watermarks={"inv.logs": watermark_seq(capture)})
+                      stream_watermarks={"inv.logs": record_seq(
+                          capture.filename, capture.position,
+                          (1 << 10) - 1, "+I")})
     q = pipe.start(raw, tables)
     q.awaitTermination(120)
     rows = sorted((r["id"], r["name"])
@@ -983,23 +985,6 @@ sink: {{type: values}}
     off2 = pipe2.binlog_offset()
     assert off2.filename == "mysql-bin.000002"
     assert off1.compare(off2) == -1  # the persisted offset advanced
-
-
-def test_binlog_schema_events_across_rotation(tmp_path):
-    tmap = _wide_table()
-    w1 = BinlogWriter()
-    w1.query("CREATE TABLE users (id INT PRIMARY KEY)", "shop")
-    w1.rotate("mysql-bin.000002")
-    w2 = BinlogWriter()
-    w2.query("ALTER TABLE users ADD COLUMN email VARCHAR(64)", "shop")
-    # write out of lexical order to prove ordinal sorting
-    (tmp_path / "mysql-bin.000002").write_bytes(w2.getvalue())
-    (tmp_path / "mysql-bin.000001").write_bytes(w1.getvalue())
-    ddl = binlog_schema_events([str(tmp_path / "mysql-bin.000002"),
-                                str(tmp_path / "mysql-bin.000001")])
-    assert [d["sql"].split()[0] for d in ddl] == ["CREATE", "ALTER"]
-    assert ddl[0]["file"] == "mysql-bin.000001"
-    assert tmap.table_id == 108  # keep flake8 happy about the import
 
 
 def test_unknown_event_types_tolerated():

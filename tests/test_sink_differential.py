@@ -5,8 +5,8 @@ script with randomized op interleavings, replays and truncates — the
 cheap cross-engine analog of the reference's e2e matrix.  One more input
 routes two source tables into one sink table (an N:1 route) through the
 pipeline, then replays the run.  The crash cases fail one control-file
-write, or the first move of a data publish, mid-script and restart from
-the same directory; the truncate case re-delivers a batch that TRUNCATEs
+write, or the first or second move of a data publish, mid-script and
+restart from the same directory; the truncate case re-delivers a batch that TRUNCATEs
 and then inserts."""
 
 import os
@@ -39,6 +39,7 @@ SCHEMA = Schema.of(Column("id", T.IntegerType(), False),
                    Column("v", T.StringType()),
                    Column("n", T.LongType()),
                    primary_keys=["id"])
+NOPK_SCHEMA = Schema.of(*SCHEMA.columns)
 
 
 def _script(seed, n_batches=4, ops_per_batch=8):
@@ -80,22 +81,32 @@ def _script(seed, n_batches=4, ops_per_batch=8):
     return batches, replay_at, set(state.values())
 
 
-def _drive(spark, sink, batches, replay_at):
+def _drive(spark, sink, batches, replay_at, schema=SCHEMA):
     ap = sink.metadata_applier()
-    ap.apply_schema_change(TID, CreateTableEvent(TID, SCHEMA), SCHEMA)
+    ap.apply_schema_change(TID, CreateTableEvent(TID, schema), schema)
     bid = 0
     for kind, events in batches:
         if kind == "truncate":
-            ap.apply_schema_change(TID, TruncateTableEvent(TID), SCHEMA)
+            ap.apply_schema_change(TID, TruncateTableEvent(TID), schema)
             continue
         seq = [DataChangeEvent(e.table_id, e.op, e.before, e.after,
                                e.meta + (("__seq", str(i)),))
                for i, e in enumerate(events)]
-        df = ValuesSource._to_df(spark, SCHEMA, seq)
-        sink.write(TID, df, SCHEMA, batch_id=bid)
+        df = ValuesSource._to_df(spark, schema, seq)
+        sink.write(TID, df, schema, batch_id=bid)
         if bid == replay_at:
-            sink.write(TID, df, SCHEMA, batch_id=bid)  # replay no-op
+            sink.write(TID, df, schema, batch_id=bid)  # replay no-op
         bid += 1
+
+
+def _append_input():
+    """Three insert-only batches for a table without a primary key, which
+    the lake sink appends: a batch applied twice shows as duplicate rows
+    (a set comparison would hide them)."""
+    batches = [("data", [DataChangeEvent.insert(TID, (b * 10 + i, f"a{b}", b))
+                         for i in range(n)])
+               for b, n in enumerate((2, 3, 2))]
+    return batches, 0, sorted(e.after for _, evs in batches for e in evs)
 
 
 def _random_input(seed):
@@ -140,6 +151,11 @@ def _state_memory(sink, spark):
 def _state_read(sink, spark):
     return {(r["id"], r["v"], r["n"])
             for r in sink.read(spark, TID).collect()}
+
+
+def _rows_read(sink, spark):
+    return sorted((r["id"], r["v"], r["n"])
+                  for r in sink.read(spark, TID).collect())
 
 
 def _state_jdbc(sink, spark):
@@ -201,17 +217,22 @@ def _control_kind(path):
     ("lake_cow", "_stats"), ("lake_cow", "_filelists"),
     ("lake_cow", "_snapshots"), ("lake_cow", "_batch_"),
     ("lake_mor", "_filelists"), ("lake_mor", "_snapshots"),
-    ("lake_mor", "_batch_"),
+    ("lake_mor", "_batch_"), ("lake_cow_nopk", "_batch_"),
 ])
 def test_crash_at_control_write_then_redrive_converges(
         spark, tmp_path, monkeypatch, sink_name, kind):
     """The seed-7 script crashes at the first control-file write of one
     kind at or after batch 1; a fresh sink then re-drives the whole
     script against the same directory and must end in the crash-free
-    state."""
-    batches, replay_at, expected = _script(7)
+    state.  ``lake_cow_nopk`` appends to a table without a primary key,
+    where a crash between the commit and its replay marker must not
+    apply the batch twice on the re-drive."""
+    nopk = sink_name == "lake_cow_nopk"
+    batches, replay_at, expected = _append_input() if nopk else _script(7)
+    schema, read = (NOPK_SCHEMA, _rows_read) if nopk else (SCHEMA,
+                                                           _state_read)
     root = str(tmp_path / sink_name)
-    sink = CRASH_SINKS[sink_name](root)
+    sink = CRASH_SINKS["lake_cow" if nopk else sink_name](root)
     current, fired = [-1], []
     real_write, real_publish = sink.write, atomic._publish
 
@@ -228,11 +249,11 @@ def test_crash_at_control_write_then_redrive_converges(
     monkeypatch.setattr(sink, "write", write)
     monkeypatch.setattr(atomic, "_publish", publish)
     with pytest.raises(OSError, match="injected crash"):
-        _drive(spark, sink, batches, replay_at)
+        _drive(spark, sink, batches, replay_at, schema)
     monkeypatch.undo()
-    restarted = CRASH_SINKS[sink_name](root)
-    _drive(spark, restarted, batches, replay_at)
-    assert _state_read(restarted, spark) == expected, fired
+    restarted = CRASH_SINKS["lake_cow" if nopk else sink_name](root)
+    _drive(spark, restarted, batches, replay_at, schema)
+    assert read(restarted, spark) == expected, fired
 
 
 def _two_bucket_input(num_buckets):
@@ -252,15 +273,21 @@ def _two_bucket_input(num_buckets):
     return batches, None, set(rows.values())
 
 
-@pytest.mark.parametrize("script", ["seed7", "two_buckets"])
+@pytest.mark.parametrize("script,nth", [
+    pytest.param("seed7", 1, id="seed7"),
+    pytest.param("two_buckets", 1, id="two_buckets"),
+    pytest.param("seed7", 2, id="seed7-second_move"),
+])
 @pytest.mark.parametrize("sink_name", sorted(CRASH_SINKS))
 def test_crash_at_data_publish_then_redrive_converges(
-        spark, tmp_path, monkeypatch, sink_name, script):
-    """The first move of a data file into the table (``data/``, or
-    ``delta/`` for merge-on-read) at or after batch 1 fails; a fresh sink
-    then re-drives the whole script against the same directory and must
-    end in the crash-free state.  A publish that removes the old bucket
-    before moving the new one in loses the bucket's other rows here."""
+        spark, tmp_path, monkeypatch, sink_name, script, nth):
+    """The ``nth`` move of a data file into the table (``data/``, or
+    ``delta/`` for merge-on-read) within one write at or after batch 1
+    fails; a fresh sink then re-drives the whole script against the same
+    directory and must end in the crash-free state.  A publish that
+    removes the old bucket before moving the new one in loses the
+    bucket's other rows here; a crash on the second move leaves a file
+    already published that no snapshot names."""
     root = str(tmp_path / sink_name)
     sink = CRASH_SINKS[sink_name](root)
     batches, replay_at, expected = (
@@ -269,18 +296,20 @@ def test_crash_at_data_publish_then_redrive_converges(
     tdir = os.path.join(root, TID.identifier())
     publish_dirs = tuple(os.path.join(tdir, d) + os.sep
                          for d in ("data", "delta"))
-    current, fired = [-1], []
+    current, moves, fired = [-1], [0], []
     real_write, real_rename = sink.write, os.rename
 
     def write(tid, df, schema, batch_id):
-        current[0] = batch_id
+        current[0], moves[0] = batch_id, 0
         real_write(tid, df, schema, batch_id)
 
     def rename(src, dst, *a, **kw):
         if (current[0] >= 1 and not fired
                 and str(dst).startswith(publish_dirs)):
-            fired.append(dst)
-            raise OSError("injected crash")
+            moves[0] += 1
+            if moves[0] == nth:
+                fired.append(dst)
+                raise OSError("injected crash")
         return real_rename(src, dst, *a, **kw)
 
     monkeypatch.setattr(sink, "write", write)

@@ -4,14 +4,14 @@ from decimal import Decimal
 
 import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import Row, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from source_flink_cdc_3_5_0_spark.common.types import (
     STRING,
     get_least_common_type,
     is_type_compatible,
 )
-from source_flink_cdc_3_5_0_spark.operators.skew import salted_agg, salted_join
+from source_flink_cdc_3_5_0_spark.operators.skew import salted_agg
 
 SCALAR_TYPES = [
     T.StringType(), T.BooleanType(), T.BinaryType(),
@@ -67,13 +67,6 @@ class TestSkewOperators:
                       "s": "sum(v)", "c": "count(*)", "mn": "min(v)", "mx": "max(v)",
                   }, n_salts=7).collect()}
         assert plain == salted
-
-    def test_salted_join_matches_plain(self, spark):
-        big = spark.range(0, 5000).select((F.col("id") % 5).alias("k"), F.col("id").alias("v"))
-        small = spark.createDataFrame([Row(k=i, name=f"n{i}") for i in range(5)])
-        plain = big.join(small, on=["k"]).count()
-        salted = salted_join(big, small, on=["k"], n_salts=4).count()
-        assert plain == salted == 5000
 
     def test_salted_agg_two_shuffles(self, spark):
         df = spark.range(0, 100).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))

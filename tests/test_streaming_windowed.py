@@ -1,13 +1,11 @@
-"""Event-time windowed aggregation (watermark) + applyInPandasWithState
-latest-image operator."""
+"""Event-time windowed aggregation (watermark) and session windows."""
 
 import json
 import os
 
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
-from source_flink_cdc_3_5_0_spark.streaming.windowed import (
-    stateful_latest, windowed_counts)
+from source_flink_cdc_3_5_0_spark.streaming.windowed import windowed_counts
 
 
 def test_windowed_counts_stream_equals_batch(spark, tmp_path):
@@ -36,159 +34,6 @@ def test_windowed_counts_stream_equals_batch(spark, tmp_path):
     q.awaitTermination(120)
     got = sorted(tuple(r) for r in spark.table("win_counts").collect())
     assert got == expected and len(got) > 0
-
-
-def test_stateful_latest_across_batches(spark, tmp_path):
-    """applyInPandasWithState keeps per-key state across micro-batches:
-    batch 2's higher-seq row supersedes batch 1's."""
-    src = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-    ])
-
-    def write_file(fname, rows):
-        with open(os.path.join(src, fname), "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "id LONG, name STRING, __seq LONG").json(src)
-        out = stateful_latest(stream, schema, key_cols=["id"])
-        emitted: dict = {}
-
-        def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                emitted[r["id"]] = r["name"]
-
-        q = (out.writeStream.foreachBatch(sink)
-             .outputMode("update").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return emitted
-
-    write_file("b1.jsonl", [
-        {"id": 1, "name": "a", "__seq": 1},
-        {"id": 1, "name": "b", "__seq": 2},
-        {"id": 2, "name": "x", "__seq": 1},
-    ])
-    got = run_once()
-    assert got == {1: "b", 2: "x"}
-
-    # second run: new file, state restored from checkpoint — id=1 updates,
-    # id=2 untouched (not re-emitted in update mode), id=3 appears
-    write_file("b2.jsonl", [
-        {"id": 1, "name": "c", "__seq": 5},
-        {"id": 3, "name": "z", "__seq": 1},
-    ])
-    got = run_once()
-    assert got.get(1) == "c" and got.get(3) == "z"
-
-
-def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join (streaming/joins.py): the
-    availableNow streaming run must equal the identical batch-mode join —
-    purchases pick up same-user clicks within the 30-min lookback."""
-    from source_flink_cdc_3_5_0_spark.streaming.joins import (
-        stream_stream_interval_join)
-
-    src = str(tmp_path / "ssj")
-    os.makedirs(src)
-    rows = []
-    for i in range(60):
-        rows.append({"event_id": i, "ts": f"2024-01-01 0{i % 6}:{10 + i % 45}:00",
-                     "user_id": i % 5,
-                     "event_type": "purchase" if i % 3 == 0 else "click",
-                     "value": float(i)})
-    with open(os.path.join(src, "a.jsonl"), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    schema = "event_id LONG, ts STRING, user_id LONG, event_type STRING, value DOUBLE"
-
-    def split(df):
-        df = df.withColumn("ts", F.to_timestamp("ts"))
-        purchases = (df.where(F.col("event_type") == "purchase")
-                     .select("user_id", F.col("ts").alias("p_ts"),
-                             F.col("event_id").alias("p_id")))
-        clicks = (df.where(F.col("event_type") == "click")
-                  .select("user_id", F.col("ts").alias("c_ts"),
-                          F.col("event_id").alias("c_id")))
-        return stream_stream_interval_join(
-            purchases, clicks, on=["user_id"], left_ts="p_ts", right_ts="c_ts",
-            lookback="30 minutes", watermark="2 hours")
-
-    batch = split(spark.read.schema(schema).json(src))
-    expected = sorted(tuple(r) for r in batch.collect())
-    assert len(expected) > 0  # non-degenerate fixture
-
-    q = (split(spark.readStream.schema(schema).json(src))
-         .writeStream.format("memory").queryName("ssj_out")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(tuple(r) for r in spark.table("ssj_out").collect())
-    assert got == expected
-
-
-def test_dedup_stream_drops_redelivered_events(spark, tmp_path):
-    """dropDuplicatesWithinWatermark path: redelivered event_ids across two
-    micro-batch files collapse to one row per key, matching the batch-mode
-    key set."""
-    from source_flink_cdc_3_5_0_spark.streaming.windowed import dedup_stream
-
-    src = str(tmp_path / "dd")
-    os.makedirs(src)
-    batch1 = [{"event_id": i, "ts": f"2024-01-01 00:{10 + i}:00", "value": float(i)}
-              for i in range(20)]
-    # file 2 redelivers half of file 1 (same ids, same ts) plus new ids
-    batch2 = [dict(r) for r in batch1[::2]] + [
-        {"event_id": 100 + i, "ts": f"2024-01-01 00:{30 + i}:00", "value": 1.0}
-        for i in range(5)]
-    for fname, rows in (("a.jsonl", batch1), ("b.jsonl", batch2)):
-        with open(os.path.join(src, fname), "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-    schema = "event_id LONG, ts STRING, value DOUBLE"
-
-    def prep(df):
-        return dedup_stream(df.withColumn("ts", F.to_timestamp("ts")),
-                            keys=["event_id"], watermark="2 hours")
-
-    batch_keys = sorted(r.event_id for r in
-                        prep(spark.read.schema(schema).json(src)).collect())
-
-    q = (prep(spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).json(src))
-         .writeStream.format("memory").queryName("dd_out")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(r.event_id for r in spark.table("dd_out").collect())
-    assert got == batch_keys == sorted({r["event_id"] for r in batch1 + batch2})
-
-
-def test_stream_stream_join_guards_and_outer_keys(spark):
-    """Review regressions: colliding non-key columns are rejected upfront;
-    outer joins keep the real key from whichever side matched."""
-    import pytest as _pytest
-    from source_flink_cdc_3_5_0_spark.streaming.joins import (
-        stream_stream_interval_join)
-
-    l = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 1.0)], "k LONG, l_ts STRING, value DOUBLE"
-    ).withColumn("l_ts", F.to_timestamp("l_ts"))
-    r = spark.createDataFrame(
-        [(2, "2024-01-01 09:59:00", 2.0)], "k LONG, r_ts STRING, value DOUBLE"
-    ).withColumn("r_ts", F.to_timestamp("r_ts"))
-    with _pytest.raises(ValueError, match="value"):
-        stream_stream_interval_join(l, r, on=["k"], left_ts="l_ts", right_ts="r_ts")
-
-    r2 = r.withColumnRenamed("value", "r_value")
-    out = stream_stream_interval_join(
-        l, r2, on=["k"], left_ts="l_ts", right_ts="r_ts", how="full_outer")
-    keys = sorted(row.k for row in out.collect())
-    assert keys == [1, 2]  # unmatched RIGHT row keeps its key (coalesce)
 
 
 def test_sample_frames_null_duration(spark):

@@ -1,8 +1,8 @@
 """TiKV/TiDB codec + raw-KV changelog decode (sources/tidb.py).
 
 Reference parity: flink-connector-tidb-cdc (RowDataTiKVChangeEvent
-DeserializationSchema.java op switch, TableKeyRangeUtils.java splits) with
-the byte formats from TiDB's public row-format RFC and codec.go.
+DeserializationSchema.java op switch) with the byte formats from TiDB's
+public row-format RFC and codec.go.
 """
 
 import datetime
@@ -18,13 +18,27 @@ from source_flink_cdc_3_5_0_spark.sources.tidb import (
     CODEC_VER, TIDB_KV_SCHEMA, TiTableInfo, decode_comparable_bytes,
     decode_comparable_float, decode_comparable_int, decode_record_key,
     decode_row, decode_row_v1, decode_row_v2, decode_tidb_kv,
-    decode_tidb_snapshot, decode_uvarint, decode_varint,
-    encode_comparable_bytes, encode_comparable_float, encode_comparable_int,
-    encode_record_key, encode_row_v1, encode_row_v2, encode_tidb_kv,
-    encode_uvarint, encode_varint, is_record_key, pack_mysql_time,
-    table_key_ranges, ti_column, unpack_mysql_time)
+    decode_uvarint, decode_varint, encode_comparable_float,
+    encode_comparable_int, encode_record_key, encode_row_v1, encode_row_v2,
+    encode_tidb_kv, encode_uvarint, encode_varint, is_record_key,
+    pack_mysql_time, ti_column, unpack_mysql_time)
 
 I64 = st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1)
+
+
+def encode_comparable_bytes(data: bytes) -> bytes:
+    """Memcomparable byte groups: 8-byte chunks, marker ``0xFF - pad`` —
+    the writer side of `decode_comparable_bytes`."""
+    out = bytearray()
+    i = 0
+    while True:
+        group = data[i:i + 8]
+        pad = 8 - len(group)
+        out += group + b"\x00" * pad
+        out.append(0xFF - pad)
+        i += 8
+        if pad > 0:
+            return bytes(out)
 
 
 def table():
@@ -127,26 +141,6 @@ class TestRecordKeys:
         assert not is_record_key(b"t" + b"\0" * 8 + b"_i" + b"\0" * 8)
         with pytest.raises(ValueError):
             decode_record_key(b"m" + b"\0" * 18)
-
-    def test_table_key_ranges_match_reference_arithmetic(self):
-        # TableKeyRangeUtils.java:46-66: delta = (MAX - (MIN+1)) / num
-        num, tid = 4, 42
-        ranges = table_key_ranges(tid, num)
-        assert len(ranges) == num
-        prefix = b"t" + encode_comparable_int(tid)
-        assert ranges[0][0] == prefix + b"_r"           # createMin
-        assert ranges[-1][1] == prefix + b"_s"          # createBeyondMax
-        delta = ((1 << 63) - 1 - (-(1 << 63) + 1)) // num
-        for i in range(1, num):
-            bound = -(1 << 63) + delta * i
-            assert ranges[i][0] == encode_record_key(tid, bound)
-            assert ranges[i - 1][1] == ranges[i][0]
-
-    def test_single_range_and_bad_num(self):
-        (lo, hi), = table_key_ranges(7, 1)
-        assert lo.endswith(b"_r") and hi.endswith(b"_s")
-        with pytest.raises(ValueError):
-            table_key_ranges(7, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -304,14 +298,11 @@ class TestSparkDecode:
 
     def test_snapshot_decode(self, spark):
         t = small_table()
-        kv = spark.createDataFrame(
-            [(encode_record_key(9, h), encode_row_v2(t, {"v": h * 2,
-                                                         "s": str(h)}))
-             for h in range(4)],
-            T.StructType([T.StructField("key", T.BinaryType()),
-                          T.StructField("value", T.BinaryType())]))
-        out = decode_tidb_snapshot(kv, t, snapshot_ts=777) \
-            .orderBy("id").collect()
+        kv = kv_df(spark, [
+            ("PUT", encode_record_key(9, h),
+             encode_row_v2(t, {"v": h * 2, "s": str(h)}), None, 777)
+            for h in range(4)])
+        out = decode_tidb_kv(kv, t).orderBy("id").collect()
         assert [r[OP_COL] for r in out] == ["+I"] * 4
         assert [(r["id"], r["v"]) for r in out] == [(h, h * 2)
                                                     for h in range(4)]
@@ -459,15 +450,10 @@ def test_incremental_snapshot_stitch_over_tikv_chunks(spark):
             image = img(h, ts)
             if image is not None:
                 kv_rows.append(
-                    (encode_record_key(9, h),
+                    ("PUT", encode_record_key(9, h),
                      encode_row_v2(t, {k: v for k, v in image.items()
-                                       if k != "id"})))
-        snap_parts.append(decode_tidb_snapshot(
-            spark.createDataFrame(
-                kv_rows,
-                T.StructType([T.StructField("key", T.BinaryType()),
-                              T.StructField("value", T.BinaryType())])),
-            t, snapshot_ts=ts))
+                                       if k != "id"}), None, ts))
+        snap_parts.append(decode_tidb_kv(kv_df(spark, kv_rows), t))
         marks.append(ChunkWatermarks(ChunkRange(lo, hi), 0, ts))
 
     snapshot = snap_parts[0]
@@ -485,33 +471,6 @@ def test_incremental_snapshot_stitch_over_tikv_chunks(spark):
                 expect[h] = (image["v"], image["s"])
     got = {r["id"]: (r["v"], r["s"]) for r in out.collect()}
     assert got == expect
-
-
-class TestKeyRangeProperties:
-    @given(st.integers(min_value=1, max_value=64),
-           st.integers(min_value=1, max_value=(1 << 48)))
-    @settings(max_examples=60, deadline=None)
-    def test_ranges_partition_key_space(self, num, tid):
-        """Ranges tile the record-key space: contiguous, non-overlapping,
-        first starts at the table's min record key, last ends beyond-max —
-        every possible record key falls in exactly one range."""
-        ranges = table_key_ranges(tid, num)
-        assert len(ranges) == num
-        prefix = b"t" + encode_comparable_int(tid)
-        assert ranges[0][0] == prefix + b"_r"
-        assert ranges[-1][1] == prefix + b"_s"
-        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-            assert hi1 == lo2          # contiguous, no gap or overlap
-            assert lo1 < hi1           # non-empty, memcomparable order
-        assert ranges[-1][0] < ranges[-1][1]
-
-    @given(st.integers(min_value=2, max_value=64), I64)
-    @settings(max_examples=80, deadline=None)
-    def test_every_handle_lands_in_exactly_one_range(self, num, handle):
-        ranges = table_key_ranges(7, num)
-        key = encode_record_key(7, handle)
-        hits = [i for i, (lo, hi) in enumerate(ranges) if lo <= key < hi]
-        assert len(hits) == 1
 
 
 # ---------------------------------------------------------------------------

@@ -94,13 +94,12 @@ def test_canal_decode_roundtrip(spark):
     assert upd["__before"]["v"] == "x"
 
 
-# --- legacy connector type mappings (oracle / sqlserver / db2) ---------------
-# Parity: OracleTypeUtils.java:44-90, SqlServerTypeUtils.java:47-84,
-# Db2TypeUtils.java:44-82.
+# --- legacy connector type mapping (oracle) ----------------------------------
+# Parity: OracleTypeUtils.java:44-90.
 
 def test_oracle_type_mapping():
-    from source_flink_cdc_3_5_0_spark.common.types import (
-        oracle_type_is_zoned, oracle_type_to_spark as m)
+    from source_flink_cdc_3_5_0_spark.common.types import \
+        oracle_type_to_spark as m
     assert m("VARCHAR2") == T.StringType()
     assert m("NCLOB") == T.StringType()
     assert m("BLOB") == T.BinaryType()
@@ -121,12 +120,10 @@ def test_oracle_type_mapping():
     # Oracle DATE carries time-of-day to the second; the JDBC driver reports
     # it as Types.TIMESTAMP, so the reference (and we) map it to an instant
     assert m("DATE") == T.TimestampNTZType()
-    # all three timestamp forms map to an instant; zoned flag on the TZ form
+    # all three timestamp forms map to an instant
     assert m("TIMESTAMP") == T.TimestampNTZType()
     assert m("TIMESTAMP(6) WITH TIME ZONE") == T.TimestampType()
     assert m("TIMESTAMP WITH LOCAL TIME ZONE") == T.TimestampType()
-    assert oracle_type_is_zoned("TIMESTAMP(3) WITH TIME ZONE")
-    assert not oracle_type_is_zoned("TIMESTAMP WITH LOCAL TIME ZONE")
     # INTERVALYM / INTERVALDS -> Spark's interval types; the catalog's
     # embedded precisions must not affect the mapping (the reference
     # switches on jdbcType, OracleTypeUtils.java:79-82)
@@ -138,44 +135,3 @@ def test_oracle_type_mapping():
     import pytest as _pytest
     with _pytest.raises(ValueError):
         m("SDO_GEOMETRY")  # unsupported -> raise (reference default arm)
-
-
-def test_sqlserver_type_mapping():
-    from source_flink_cdc_3_5_0_spark.common.types import (
-        sqlserver_type_is_zoned, sqlserver_type_to_spark as m)
-    assert m("NVARCHAR") == T.StringType()
-    assert m("UNIQUEIDENTIFIER") == T.StringType()
-    assert m("TINYINT") == T.IntegerType()
-    assert m("BIGINT") == T.LongType()
-    # the distinctive quirk: FLOAT/REAL ride the DECIMAL path with the
-    # column's declared (length, scale|0) — SqlServerTypeUtils.java:64-69
-    assert m("FLOAT", 53, 0) == T.DecimalType(38, 0)  # >38 clamps
-    assert m("FLOAT", 24, 0) == T.DecimalType(24, 0)
-    assert m("REAL", 24, 0) == T.DecimalType(24, 0)
-    assert m("MONEY") == T.DecimalType(19, 4)
-    assert m("SMALLMONEY") == T.DecimalType(10, 4)
-    assert m("DATETIME2") == T.TimestampNTZType()
-    assert m("DATETIMEOFFSET") == T.TimestampType()
-    assert sqlserver_type_is_zoned("DATETIMEOFFSET")
-    assert m("IMAGE") == T.BinaryType()
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        m("SQL_VARIANT")
-
-
-def test_db2_type_mapping():
-    from source_flink_cdc_3_5_0_spark.common.types import db2_type_to_spark as m
-    assert m("VARGRAPHIC") == T.StringType()
-    assert m("DBCLOB") == T.StringType()
-    # TINYINT/SMALLINT -> SMALLINT, not INT (Db2TypeUtils.java:55-58)
-    assert m("TINYINT") == T.ShortType()
-    assert m("SMALLINT") == T.ShortType()
-    assert m("INTEGER") == T.IntegerType()
-    assert m("REAL") == T.FloatType()
-    assert m("DOUBLE") == T.DoubleType()
-    assert m("DECIMAL", 12, 3) == T.DecimalType(12, 3)
-    assert m("DECFLOAT") == T.DecimalType(34, 0)
-    assert m("TIMESTAMP") == T.TimestampNTZType()
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        m("DATALINK")

@@ -5,12 +5,13 @@ getLeastCommonType / mergeDecimalType / mergeTimestampType / numeric
 precision semantics, re-expressed over Spark types.
 """
 
+import functools
+
 import pytest
 from pyspark.sql import types as T
 
 from source_flink_cdc_3_5_0_spark.common.types import (
     get_least_common_type,
-    get_least_common_types,
     is_type_compatible,
     merge_decimal,
     merge_timestamp,
@@ -79,9 +80,12 @@ def test_timestamp_merge():
 
 
 def test_fold_across_many():
-    assert get_least_common_types([TINYINT, SMALLINT, INT]) == INT
-    assert get_least_common_types([INT, BIGINT, DOUBLE]) == DOUBLE
-    assert get_least_common_types([INT, STRING, DOUBLE]) == STRING
+    """Route-merge folds the pairwise rule across N schemas."""
+    def fold(types):
+        return functools.reduce(get_least_common_type, types)
+    assert fold([TINYINT, SMALLINT, INT]) == INT
+    assert fold([INT, BIGINT, DOUBLE]) == DOUBLE
+    assert fold([INT, STRING, DOUBLE]) == STRING
 
 
 def test_compatibility():

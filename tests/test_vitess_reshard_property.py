@@ -30,10 +30,20 @@ from hypothesis import given, settings, strategies as st
 
 from source_flink_cdc_3_5_0_spark.sources.vitess import (
     RETIRE_WINDOW, ShardRange, VitessStreamState, advance_stream_state,
-    gtid_covers, shards_tile,
+    gtid_covers,
 )
 
 KS = "shop"
+
+
+def shards_tile(shards: list[str]) -> bool:
+    """True iff the shard set partitions the keyspace-id space — contiguous,
+    non-overlapping, from -inf to +inf (what a healthy keyspace serves)."""
+    ranges = sorted(ShardRange.parse(s) for s in shards)
+    if not ranges or ranges[0].start != b"" or ranges[-1].end != b"":
+        return False
+    return all(a.end == b.start and a.end != b""
+               for a, b in zip(ranges, ranges[1:]))
 
 
 def vgtid_json(positions):

@@ -1,25 +1,24 @@
-"""Vitess VStream source: config parity, shard-range algebra, VGTID vector
-offsets, envelope decode, reshard policy, and the streaming e2e path.
+"""Vitess VStream source: shard-range algebra, VGTID vector offsets,
+envelope decode, the runner's VGTID fold and reshard policy, and the
+streaming e2e path.
 
-Reference pins: VitessSource.java builder defaults, VitessTableFactoryTest
-option spellings/defaults, config/TabletType.java,
-config/SchemaAdjustmentMode.java; wire behavior is Debezium's public
-vitess connector (per-shard VGTID vector, source.keyspace/shard/vgtid)."""
+Wire behavior is Debezium's public vitess connector (per-shard VGTID
+vector, source.keyspace/shard/vgtid)."""
 
+import hashlib
 import json
 
 import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 
 from source_flink_cdc_3_5_0_spark.common.events import BEFORE_COL, META_COL, OP_COL
 from source_flink_cdc_3_5_0_spark.sources.base import SEQ_COL
 from source_flink_cdc_3_5_0_spark.sources.vitess import (
-    ReshardDecision, SchemaAdjustmentMode, ShardGtid, ShardRange, TabletType,
-    Vgtid, VitessConfig, apply_reshard_policy, batch_vgtid, decode_vstream,
-    detect_reshard, gtid_covers, keyspace_id, keyspace_id_col, shard_col,
-    shard_for, shards_tile,
+    ShardGtid, ShardRange, Vgtid, VitessStreamState, decode_vstream,
+    fold_vstream_batch, gtid_covers,
 )
+from tests.test_vitess_reshard_property import shards_tile
 
 PAYLOAD = T.StructType([
     T.StructField("id", T.LongType()),
@@ -44,53 +43,6 @@ def ev(op, shard, gtid_pos, after=None, before=None, ts=0,
                    "vgtid": vgtid_json(sorted(positions.items()),
                                        keyspace=keyspace)},
     })
-
-
-# ---------------------------------------------------------------------------
-# config surface
-# ---------------------------------------------------------------------------
-
-class TestConfig:
-    def test_builder_defaults(self):
-        """VitessSource.java:47-59 defaults."""
-        c = VitessConfig(hostname="vtgate", keyspace="shop")
-        assert (c.port, c.plugin_name, c.name) == (15991, "decoderbufs",
-                                                   "flink")
-        assert c.tablet_type is TabletType.RDONLY
-        assert c.gtid == "current" and c.shard is None
-        assert c.stop_on_reshard is False and c.tombstones_on_delete is True
-        assert c.schema_name_adjustment is SchemaAdjustmentMode.NONE
-        c.validate()
-
-    def test_table_factory_defaults_and_options(self):
-        """VitessTableFactoryTest testCommonProperties/testOptionalProperties:
-        factory default schema adjustment is AVRO; debezium.* passes through;
-        tablet-type parses."""
-        c = VitessConfig.from_options(
-            {"hostname": "localhost", "keyspace": "myDB"})
-        assert c.schema_name_adjustment is SchemaAdjustmentMode.AVRO
-        assert c.tablet_type is TabletType.RDONLY and c.port == 15991
-        c2 = VitessConfig.from_options({
-            "hostname": "localhost", "keyspace": "myDB", "port": "5444",
-            "tablet-type": "MASTER", "username": "flinkuser",
-            "password": "flinkpw", "debezium.snapshot.mode": "never"})
-        assert c2.port == 5444 and c2.tablet_type is TabletType.MASTER
-        assert c2.dbz_properties == {"snapshot.mode": "never"}
-
-    def test_validation(self):
-        with pytest.raises(ValueError, match="hostname"):
-            VitessConfig(keyspace="k").validate()
-        with pytest.raises(ValueError, match="keyspace"):
-            VitessConfig(hostname="h").validate()
-        # builder doc: gtid has to be set together with shard
-        with pytest.raises(ValueError, match="shard"):
-            VitessConfig(hostname="h", keyspace="k",
-                         gtid="MySQL56/u:1-5").validate()
-        VitessConfig(hostname="h", keyspace="k", gtid="MySQL56/u:1-5",
-                     shard="-80").validate()
-        with pytest.raises(ValueError, match="plugin"):
-            VitessConfig(hostname="h", keyspace="k",
-                         plugin_name="wal2json").validate()
 
 
 # ---------------------------------------------------------------------------
@@ -127,101 +79,13 @@ class TestShardRanges:
     @settings(max_examples=100, deadline=None)
     def test_random_tilings_route_uniquely(self, cuts, key):
         """Any cut-point set tiles the space, and every keyspace id —
-        binary_md5 of a random key — lands in exactly ONE shard
-        (shard_for raises otherwise)."""
+        binary_md5 of a random key — lands in exactly ONE shard."""
         bounds = [""] + ["%02x" % c for c in sorted(cuts)] + [""]
         shards = ["%s-%s" % (a, b) for a, b in zip(bounds, bounds[1:])]
-        if shards == ["-"]:  # ShardRange.parse("-") spelling
-            shards = ["-"]
         assert shards_tile(shards)
-        ksid = keyspace_id(key)  # md5 -> 16 bytes
-        owner = shard_for(ksid, shards)  # raises unless exactly one
-        assert ShardRange.parse(owner).contains(ksid)
-
-    def test_detect_reshard_split_and_merge(self):
-        m = detect_reshard(["-80", "80-"], ["-40", "40-80", "80-"])
-        assert m == {"-80": ["-40", "40-80"]}
-        # merge: parent is the NEW shard, children the old ones it replaces
-        assert detect_reshard(["-40", "40-80", "80-"],
-                              ["-80", "80-"]) == {"-80": ["-40", "40-80"]}
-        # identical sets are the ONLY silent-{} case
-        assert detect_reshard(["-80", "80-"], ["80-", "-80"]) == {}
-        with pytest.raises(ValueError, match="not a clean reshard"):
-            detect_reshard(["-80", "80-"], ["-40", "50-80", "80-"])
-        # coverage loss / unexplained overlap must raise, never return {}
-        with pytest.raises(ValueError, match="not a clean reshard"):
-            detect_reshard(["-80", "80-"], ["-80"])
-        with pytest.raises(ValueError, match="not a clean reshard"):
-            detect_reshard(["-80", "80-"], ["-80", "80-", "c0-"])
-        # simultaneous split + merge in one transition
-        both = detect_reshard(["-40", "40-80", "80-"],
-                              ["-80", "80-c0", "c0-"])
-        assert both == {"-80": ["-40", "40-80"], "80-": ["80-c0", "c0-"]}
-
-    def test_vindexes(self):
-        import hashlib
-        assert keyspace_id(b"k1") == hashlib.md5(b"k1").digest()
-        assert keyspace_id("k1") == keyspace_id(b"k1")
-        assert keyspace_id(b"\x01\x02", vindex="binary") == b"\x01\x02"
-        with pytest.raises(TypeError):
-            keyspace_id(b"x", vindex="hash")  # integer keys only
-
-    def test_hash_vindex_des(self):
-        """The default Vitess `hash` vindex = null-key DES: pinned against
-        the classic zero-key DES known-answer AND the keyspace-id examples
-        from the public Vitess sharding docs."""
-        from source_flink_cdc_3_5_0_spark.functions.des_vindex import (
-            des_encrypt_zero_key,
-        )
-
-        assert des_encrypt_zero_key(b"\x00" * 8).hex() == "8ca64de9c1b123a7"
-        assert keyspace_id(1, vindex="hash").hex() == "166b40b44aba4bd6"
-        assert keyspace_id(2, vindex="hash").hex() == "06e7ea22ce92708f"
-        assert keyspace_id(3, vindex="hash").hex() == "4eb190c9a2fa169c"
-        # uint64 wraparound: negative keys hash as their two's complement
-        assert keyspace_id(-1, vindex="hash") \
-            == keyspace_id((1 << 64) - 1, vindex="hash")
-        with pytest.raises(ValueError):
-            des_encrypt_zero_key(b"\x00" * 7)
-
-
-def test_jvm_shard_router_matches_python(spark):
-    """`shard_col` (codegen CASE over binary compares) routes identically
-    to the Python `shard_for` for md5 keyspace ids."""
-    shards = ["-40", "40-80", "80-c0", "c0-"]
-    keys = [("k%d" % i,) for i in range(64)]
-    df = spark.createDataFrame(keys, "k STRING").select(
-        "k", shard_col(keyspace_id_col(F.col("k")), shards).alias("shard"))
-    got = {r["k"]: r["shard"] for r in df.collect()}
-    for (k,) in keys:
-        assert got[k] == shard_for(keyspace_id(k), shards), k
-
-
-def test_hash_vindex_column_matches_python(spark):
-    """The pandas-UDF `hash` vindex column agrees with the scalar DES path
-    (and therefore with real Vitess `hash` routing)."""
-    shards = ["-80", "80-"]
-    df = spark.createDataFrame([(n,) for n in range(1, 33)], "n LONG")
-    out = df.select(
-        "n", shard_col(keyspace_id_col(F.col("n"), vindex="hash"),
-                       shards).alias("shard"))
-    for r in out.collect():
-        assert r["shard"] == shard_for(
-            keyspace_id(r["n"], vindex="hash"), shards), r["n"]
-
-
-def test_hash_vindex_column_exact_above_2_53_with_nulls(spark):
-    """A null in the Arrow batch used to flip the int64 series to float64,
-    silently rounding keys >= 2^53 to the wrong keyspace id. Keys now cross
-    as strings, so >2^53 keys route identically with and without a null
-    neighbor."""
-    big = [(1 << 60) + 1, (1 << 63) - 1, (1 << 53) + 1]
-    df = spark.createDataFrame([(n,) for n in big] + [(None,)], "n LONG")
-    got = {r["n"]: r["k"] for r in df.select(
-        "n", keyspace_id_col(F.col("n"), vindex="hash").alias("k")).collect()}
-    assert got[None] is None
-    for n in big:
-        assert got[n] == keyspace_id(n, vindex="hash"), n
+        ksid = hashlib.md5(key).digest()
+        owners = [s for s in shards if ShardRange.parse(s).contains(ksid)]
+        assert len(owners) == 1, owners
 
 
 # ---------------------------------------------------------------------------
@@ -294,28 +158,41 @@ def test_decode_vstream_ops_and_meta(spark):
     assert json.loads(out[2][META_COL]["vgtid"])[0]["shard"] == "80-"
 
 
+def _fold(spark, lines, start, known=None, **kw):
+    """One raw micro-batch through the runner's VGTID fold, from a state
+    serving ``known`` (or first contact when None)."""
+    schema = ("value STRING, offset LONG" if len(lines[0]) == 2
+              else "value STRING")
+    state = VitessStreamState(
+        vgtid=start,
+        serving=(("shop", tuple(known)),) if known is not None else ())
+    return fold_vstream_batch(spark.createDataFrame(lines, schema), "value",
+                              state, **kw)
+
+
 def test_batch_vgtid_resume_fold(spark):
+    """Per (keyspace, shard), the batch's LAST event replaces the shard's
+    position; a shard silent this batch keeps its prior position."""
     start = Vgtid.current("shop", ["-80", "80-"])
     lines = [(ev("c", "-80", "u1:1-%d" % i,
                  after={"id": i, "name": "x", "qty": i}, ts=i), i)
              for i in (1, 2, 3)]
     lines += [(ev("c", "80-", "u2:1-7",
                   after={"id": 99, "name": "y", "qty": 0}, ts=50), 10)]
-    raw = spark.createDataFrame(lines, "value STRING, offset LONG")
-    resumed = batch_vgtid(decode_vstream(raw, PAYLOAD), start)
-    assert resumed.position("-80") == "u1:1-3"   # LAST event by __seq
-    assert resumed.position("80-") == "u2:1-7"
-    # a shard silent this batch keeps its prior position
+    resumed, halt = _fold(spark, lines, start, ["-80", "80-"])
+    assert not halt
+    assert resumed.vgtid.position("-80") == "u1:1-3"   # LAST event
+    assert resumed.vgtid.position("80-") == "u2:1-7"
     start2 = start.advance("shop", "c0-", "u3:1-4")
-    assert batch_vgtid(decode_vstream(raw, PAYLOAD),
-                       start2).position("c0-") == "u3:1-4"
+    resumed2, _ = _fold(spark, lines, start2, ["-80", "80-"])
+    assert resumed2.vgtid.position("c0-") == "u3:1-4"
 
 
 # ---------------------------------------------------------------------------
 # reshard policy
 # ---------------------------------------------------------------------------
 
-def _reshard_batch(spark):
+def _reshard_batch():
     pre = [
         (ev("c", "-80", "u1:1-10", after={"id": 1, "name": "a", "qty": 1},
             ts=10), 0),
@@ -328,36 +205,30 @@ def _reshard_batch(spark):
         (ev("c", "40-80", "u4:1-5", after={"id": 3, "name": "d", "qty": 4},
             ts=21), 3),
     ]
-    return spark.createDataFrame(pre + post, "value STRING, offset LONG")
+    return pre + post
 
 
 def test_stop_on_reshard_true_halts_with_resumable_vgtid(spark):
     """Halt semantics: NOTHING of the boundary batch is processed (the
-    caller re-delivers it after the restart that adopts the children), so
-    the resume vector is the last COMMITTED position — children inherit
-    the parent's pre-boundary entry, not anything folded from the
-    unprocessed batch."""
+    runner re-delivers it after the restart that adopts the children), so
+    the persisted state is the last COMMITTED one, marked stopped."""
     start = (Vgtid.current("shop", ["-80", "80-"])
              .advance("shop", "-80", "u1:1-9")
              .advance("shop", "80-", "u2:1-19"))
-    decoded = decode_vstream(_reshard_batch(spark), PAYLOAD)
-    d = apply_reshard_policy(decoded, ["-80", "80-"], start,
-                             stop_on_reshard=True)
-    assert d.stopped and d.shards == ["-80", "80-"]
-    assert d.df.count() == 0  # boundary batch held for re-delivery
-    assert d.resume_vgtid.shards() == ["-40", "40-80", "80-"]
-    assert d.resume_vgtid.position("-40") == "u1:1-9"
-    assert d.resume_vgtid.position("40-80") == "u1:1-9"
-    assert d.resume_vgtid.position("80-") == "u2:1-19"
+    state, halt = _fold(spark, _reshard_batch(), start, ["-80", "80-"],
+                        stop_on_reshard=True)
+    assert halt and state.stopped
+    assert state.shards == ("-80", "80-")
+    assert state.vgtid == start  # resumable: nothing advanced
 
 
 def test_stop_on_reshard_false_adopts_new_serving_set(spark):
     start = Vgtid.current("shop", ["-80", "80-"])
-    decoded = decode_vstream(_reshard_batch(spark), PAYLOAD)
-    d = apply_reshard_policy(decoded, ["-80", "80-"], start)
-    assert not d.stopped
-    assert d.shards == ["-40", "40-80", "80-"]
-    assert sorted(r["id"] for r in d.df.collect()) == [1, 2, 3, 9]
+    state, halt = _fold(spark, _reshard_batch(), start, ["-80", "80-"])
+    assert not halt and not state.stopped
+    assert state.shards == ("-40", "40-80", "80-")
+    assert state.vgtid.position("-40") == "u3:1-2"
+    assert state.vgtid.position("-80") is None  # split parent retired
 
 
 def test_reshard_rejects_orphan_shard(spark):
@@ -366,36 +237,29 @@ def test_reshard_rejects_orphan_shard(spark):
     start = Vgtid.current("shop", ["-80", "80-"])
     rows = [(ev("c", "70-90", "u5:1", after={"id": 4, "name": "e", "qty": 1},
                 ts=1), 0)]
-    decoded = decode_vstream(
-        spark.createDataFrame(rows, "value STRING, offset LONG"), PAYLOAD)
     with pytest.raises(ValueError, match="clean parent split or merge"):
-        apply_reshard_policy(decoded, ["-80", "80-"], start)
+        _fold(spark, rows, start, ["-80", "80-"])
 
 
 def test_reshard_partial_split_defers_instead_of_crashing(spark):
     """A micro-batch that sees only ONE child of a split (sibling quiet)
-    must not kill the stream: the child is reported ``pending`` and the
+    must not kill the stream: the child is carried ``pending`` and the
     serving set is unchanged; when the sibling shows up in a later batch
     the split completes via the carried ``pending``."""
     start = Vgtid.current("shop", ["-80", "80-"])
     rows1 = [(ev("c", "-40", "u3:1-2", after={"id": 2, "name": "c", "qty": 3},
                  ts=20), 0)]
-    d1 = apply_reshard_policy(
-        decode_vstream(spark.createDataFrame(
-            rows1, "value STRING, offset LONG"), PAYLOAD),
-        ["-80", "80-"], start)
-    assert not d1.stopped
-    assert d1.shards == ["-80", "80-"]          # not adopted yet
-    assert d1.pending == ("-40",)
-    assert d1.df.count() == 1                   # event still processed
+    s1, halt = _fold(spark, rows1, start, ["-80", "80-"])
+    assert not halt
+    assert s1.shards == ("-80", "80-")          # not adopted yet
+    assert s1.pending == (("shop", "-40"),)
     rows2 = [(ev("c", "40-80", "u4:1-5",
                  after={"id": 3, "name": "d", "qty": 4}, ts=21), 0)]
-    d2 = apply_reshard_policy(
-        decode_vstream(spark.createDataFrame(
-            rows2, "value STRING, offset LONG"), PAYLOAD),
-        d1.shards, start, pending=d1.pending)
-    assert d2.shards == ["-40", "40-80", "80-"]  # split completed
-    assert d2.pending == ()
+    s2, _ = fold_vstream_batch(
+        spark.createDataFrame(rows2, "value STRING, offset LONG"), "value",
+        s1)
+    assert s2.shards == ("-40", "40-80", "80-")  # split completed
+    assert s2.pending == ()
 
 
 def test_reshard_merge_adopted_and_stop_mode_survives(spark):
@@ -411,24 +275,21 @@ def test_reshard_merge_adopted_and_stop_mode_survives(spark):
         (ev("c", "80-", "u3:1-9", after={"id": 6, "name": "n", "qty": 2},
             ts=31), 1),
     ]
-    decoded = decode_vstream(
-        spark.createDataFrame(rows, "value STRING, offset LONG"), PAYLOAD)
-    d = apply_reshard_policy(decoded, ["-40", "40-80", "80-"], start)
-    assert not d.stopped
-    assert d.shards == ["-80", "80-"]           # merge adopted
-    d2 = apply_reshard_policy(decoded, ["-40", "40-80", "80-"], start,
-                              stop_on_reshard=True)
-    assert d2.stopped and d2.shards == ["-40", "40-80", "80-"]
-    assert d2.df.count() == 0  # batch held for post-restart re-delivery
+    known = ["-40", "40-80", "80-"]
+    state, halt = _fold(spark, rows, start, known)
+    assert not halt
+    assert state.shards == ("-80", "80-")       # merge adopted
+    s2, halt2 = _fold(spark, rows, start, known, stop_on_reshard=True)
+    assert halt2 and s2.stopped and s2.shards == tuple(known)
     # merge children keep their own (old-shard) resumable positions
-    assert d2.resume_vgtid.position("-40") == "u1:1-5"
-    assert d2.resume_vgtid.position("40-80") == "u2:1-7"
+    assert s2.vgtid.position("-40") == "u1:1-5"
+    assert s2.vgtid.position("40-80") == "u2:1-7"
 
 
 def test_batch_vgtid_same_millisecond_tiebreak(spark):
-    """File-path ``__seq`` is millisecond ts_ms; two positions in the same
-    ms must fold to the LATER GTID (length+lex tiebreak on the vgtid), not
-    an arbitrary max_by pick — including across a digit-count boundary
+    """File-path order is millisecond ts_ms; two positions in the same ms
+    must fold to the LATER GTID (length+lex tiebreak on the vgtid), not an
+    arbitrary max_by pick — including across a digit-count boundary
     (1-9 -> 1-10)."""
     rows = [(ev("c", "-80", "u1:1-9", after={"id": 1, "name": "a", "qty": 1},
                 ts=77),),
@@ -436,10 +297,9 @@ def test_batch_vgtid_same_millisecond_tiebreak(spark):
                 ts=77),),
             (ev("c", "-80", "u1:1-5", after={"id": 3, "name": "c", "qty": 3},
                 ts=77),)]
-    raw = spark.createDataFrame(rows, "value STRING")  # no offset column
     start = Vgtid.current("shop", ["-80", "80-"])
-    folded = batch_vgtid(decode_vstream(raw, PAYLOAD), start)
-    assert folded.position("-80", "shop") == "u1:1-10"
+    folded, _ = _fold(spark, rows, start, ["-80", "80-"])
+    assert folded.vgtid.position("-80", "shop") == "u1:1-10"
 
 
 def test_decode_vstream_zoned_timestamp_side_channel(spark):
@@ -473,9 +333,8 @@ def test_batch_vgtid_fold_never_regresses_on_gap_fill(spark):
     start = Vgtid(()).advance("shop", "-80", "u1:1-7")
     rows = [(ev("c", "-80", "u1:1-5:7",
                 after={"id": 1, "name": "a", "qty": 1}, ts=77),)]
-    raw = spark.createDataFrame(rows, "value STRING")
-    folded = batch_vgtid(decode_vstream(raw, PAYLOAD), start)
-    assert folded.position("-80", "shop") == "u1:1-7"  # clamp held
+    folded, _ = _fold(spark, rows, start)
+    assert folded.vgtid.position("-80", "shop") == "u1:1-7"  # clamp held
 
 
 def test_vgtid_keyspace_isolation():
@@ -495,12 +354,10 @@ def test_no_reshard_is_passthrough(spark):
     start = Vgtid.current("shop", ["-80", "80-"])
     rows = [(ev("c", "-80", "u1:1", after={"id": 1, "name": "a", "qty": 1},
                 ts=1), 0)]
-    decoded = decode_vstream(
-        spark.createDataFrame(rows, "value STRING, offset LONG"), PAYLOAD)
-    d = apply_reshard_policy(decoded, ["-80", "80-"], start)
-    assert isinstance(d, ReshardDecision)
-    assert not d.stopped and d.shards == ["-80", "80-"]
-    assert d.df.count() == 1
+    state, halt = _fold(spark, rows, start, ["-80", "80-"])
+    assert not halt and not state.stopped
+    assert state.shards == ("-80", "80-")
+    assert state.vgtid.position("-80") == "u1:1"
 
 
 # ---------------------------------------------------------------------------
