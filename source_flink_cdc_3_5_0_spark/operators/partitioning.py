@@ -1,12 +1,16 @@
-"""Primary-key hash partitioning before sink writes.
+"""Hash partitioning before sink writes, by a sink-supplied key.
 
 Parity target: ``RegularPrePartitionOperator`` + ``EventPartitioner``
 (flink-cdc-runtime/.../partitioning/RegularPrePartitionOperator.java:86-121):
 every DataChangeEvent is hashed on (tableId, primary key) so all changes of
 one key land in the same sink subtask (ordering + upsert correctness); schema
-and flush events are broadcast to all partitions.
+and flush events are broadcast to all partitions.  The reference lets a sink
+plug in its own function (``HashFunctionProvider``); here a sink's
+``DataSink.partition_key`` names the column its write clusters by (the lake
+sink's ``__bucket``), so the pre-partition exchange is the only one the
+write needs.  Sinks without one get the primary-key hash.
 
-Spark-first: ``df.repartition(n, *pk_cols)`` is the native equivalent (hash
+Spark-first: ``df.repartition(n, *cols)`` is the native equivalent (hash
 shuffle on key columns); there is nothing to broadcast because schema changes
 are driver-side. The operator also exposes a *deterministic, dialect-portable*
 bucket expression (multiplicative hashing) used by oracle-checked tests —
@@ -27,15 +31,24 @@ from ..common.schema import Schema
 _KNUTH_32 = 2654435761
 
 
-def pk_repartition(df: DataFrame, schema: Schema, num_partitions: int | None = None) -> DataFrame:
-    """Hash-repartition a changelog DataFrame by its primary key columns.
+def pk_repartition(df: DataFrame, schema: Schema, num_partitions: int | None = None,
+                   key: tuple[str, Column] | None = None) -> DataFrame:
+    """Hash-repartition a changelog DataFrame before its sink write.
 
-    Falls back to all columns if the table declares no PK (same effect as the
-    reference hashing the whole row).
+    ``key`` is the sink's own partition key, a (column name, expression)
+    pair (``DataSink.partition_key``): the column is added to the frame and
+    the frame hashes by it alone.  Without one the frame hashes by its
+    primary key columns, or by all columns if the table declares no PK
+    (same effect as the reference hashing the whole row).
     """
-    keys = [c for c in schema.primary_keys if c in df.columns] or [
-        c.name for c in schema.columns if c.name in df.columns
-    ]
+    if key is not None:
+        name, expr = key
+        df = df.withColumn(name, expr)
+        keys = [name]
+    else:
+        keys = [c for c in schema.primary_keys if c in df.columns] or [
+            c.name for c in schema.columns if c.name in df.columns
+        ]
     cols = [F.col(k) for k in keys]
     if num_partitions:
         return df.repartition(num_partitions, *cols)

@@ -340,7 +340,9 @@ class PipelineExecution:
                 transformed, evolved,
                 keep_extra=(OP_COL, META_COL, SEQ_COL) + tz_extras)
             write_schema = evolved
-            partitioned = pk_repartition(coerced, write_schema, self.parallelism)
+            partitioned = pk_repartition(
+                coerced, write_schema, self.parallelism,
+                key=self.sink.partition_key(sink_tid, coerced, write_schema))
             self.sink.write(sink_tid, partitioned, write_schema, data_batch_id)
 
     # -- driver loop ------------------------------------------------------

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import abc
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..common.events import SchemaChangeEvent
 from ..common.schema import Schema
@@ -50,6 +50,16 @@ class DataSink(abc.ABC):
     @abc.abstractmethod
     def metadata_applier(self) -> MetadataApplier:
         ...
+
+    def partition_key(self, table_id: TableId, df: DataFrame,
+                      schema: Schema) -> tuple[str, Column] | None:
+        """The column this sink's write clusters ``df`` by, as (name,
+        expression), or None to take the primary-key hash (the default).
+        The pipeline's pre-partition step adds the column and hashes by it
+        (``HashFunctionProvider`` parity), so a sink whose files are laid
+        out by its own function needs no second exchange; its ``write``
+        then receives the column with the frame."""
+        return None
 
     @abc.abstractmethod
     def write(self, table_id: TableId, df: DataFrame, schema: Schema, batch_id: int) -> None:

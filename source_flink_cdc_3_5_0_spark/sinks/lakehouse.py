@@ -80,6 +80,16 @@ _EXISTS_DEFAULT = "EXISTS_DEFAULT"  # parquet reader's missing-column value
 _UNSET = object()  # "not passed" sentinel (None is a meaningful value)
 
 
+def _opaque_long(value: int):
+    """``value`` as a bigint column that generated code references
+    instead of inlining.  A long literal is compiled into the generated
+    class, so commits that differ only in their sequence would each
+    compile new code; an array literal is passed to the class as an
+    object, and the non-foldable index keeps constant folding from
+    turning the lookup back into an inlined long."""
+    return F.array(F.lit(value).cast("bigint"))[F.spark_partition_id() * 0]
+
+
 class CommitConflictError(RuntimeError):
     """A concurrent writer committed the same snapshot sequence first
     (Iceberg's CommitFailedException).  The failed commit wrote only
@@ -572,8 +582,10 @@ class SnapshotLakeSink(DataSink):
         # SHARDED (Iceberg manifest-list shape): each commit writes ONE
         # immutable shard holding only its NEW files' footer stats and
         # carries the previous shard list forward by reference — commit
-        # control-plane is O(new files), never O(all live files), which
-        # is what keeps a million-file table's commits flat
+        # WRITES are O(new files), never O(all live files), which is what
+        # keeps a million-file table's commits flat.  A commit that
+        # replaces base files also reads the carried shards (cached per
+        # sink) to drop the ones whose files all left the table
         prev = self._manifest(tid) if self.snapshots(tid) else {}
         prev_shards = list(prev.get("stats_shards") or [])
         # a file listed in the PREVIOUS manifest is covered by its shard
@@ -603,12 +615,14 @@ class SnapshotLakeSink(DataSink):
                     except Exception:
                         st = {"rows": 0, "cols": {}}  # unreadable: no prune
                 new_entries[rel] = st
-        if live and not (live & covered):
-            # full rewrite (compaction / truncate+reload): nothing from
-            # the old shard chain is still live, so RESET the list — the
-            # shard-ref growth is bounded by commits since the last full
-            # compaction instead of table lifetime
-            prev_shards = []
+        if buckets != prev.get("buckets", {}):
+            # some base file left the table: drop every shard that no
+            # longer covers a live file, so the chain is bounded by the
+            # live files instead of growing by one shard per commit.  A
+            # commit that keeps the base buckets (every MoR commit) reads
+            # no shard.
+            prev_shards = [sh for sh in prev_shards
+                           if live & self._load_shard(tid, sh).keys()]
         import uuid as _uuid
 
         if new_entries:
@@ -767,6 +781,17 @@ class SnapshotLakeSink(DataSink):
                   for k in pks]).cast("bigint"))
         return portable_bucket_expr(key, self.num_buckets)
 
+    def partition_key(self, table_id: TableId, df: DataFrame,
+                      schema: Schema):
+        """``__bucket`` for a keyed table, in either mode: the pipeline
+        pre-partitions by it, so the one exchange serves the write's
+        per-key dedup and its bucket-partitioned files (see :meth:`write`).
+        A table without a key appends with no shuffle and takes none."""
+        pks = [k for k in schema.primary_keys if k in df.columns]
+        if not pks:
+            return None
+        return _BUCKET_COL, self._bucket_of(df, pks, schema)
+
     def _table_schema(self, tid: TableId) -> Schema:
         if not os.path.exists(self._schema_path(tid)):
             raise ValueError(f"{tid}: no table schema at "
@@ -889,7 +914,15 @@ class SnapshotLakeSink(DataSink):
         the table schema: the batch's columns are cast to ``schema``'s
         types first, because reads declare that schema instead of
         inferring one from the files.  A table written before any
-        metadata applier ran gets ``schema`` as its sidecar."""
+        metadata applier ran gets ``schema`` as its sidecar.
+
+        A frame that arrives with ``__bucket`` was pre-partitioned by
+        :meth:`partition_key` (the pipeline's pre-partition step): the
+        per-key dedup windows over ``(__bucket, pk)``, which that hash
+        partitioning already satisfies, and the write adds no exchange of
+        its own.  Other frames are bucketed and shuffled here.  A write
+        that adds no file and changes no bucket commits no snapshot; its
+        replay marker is still written."""
         from ..streaming.materialize import latest_image
 
         self._ensure_meta(table_id)
@@ -921,14 +954,19 @@ class SnapshotLakeSink(DataSink):
             self._write_append_commit(table_id, df, names, batch_id)
             atomic_write(marker, "ok")
             return
+        pre = _BUCKET_COL in df.columns
+
+        def bucketed(frame: DataFrame) -> DataFrame:
+            return frame if pre else frame.repartition(F.col(_BUCKET_COL))
+        if not pre:
+            df = df.withColumn(_BUCKET_COL, self._bucket_of(df, pks, schema))
         if OP_COL in df.columns:
             final = latest_image(
-                df, pks, seq_col=SEQ_COL if SEQ_COL in df.columns else None,
+                df, [_BUCKET_COL] + pks,
+                seq_col=SEQ_COL if SEQ_COL in df.columns else None,
                 keep_delete_marker=True)
         else:
             final = df.withColumn(OP_COL, F.lit("+I"))
-        final = final.withColumn(_BUCKET_COL,
-                                 self._bucket_of(final, pks, schema))
         if self.mode == "mor":
             # single-pass commit (optimization r11, guide §2.4/§5): the
             # staged write's added_map IS the touched-bucket set, so the
@@ -937,7 +975,8 @@ class SnapshotLakeSink(DataSink):
             # and the write consistent — the manifest is derived from the
             # files actually written, so it matches them by construction
             # even for a nondeterministic batch
-            self._write_mor_commit(table_id, final, names, pks, batch_id)
+            self._write_mor_commit(table_id, bucketed, final, names,
+                                   batch_id)
             atomic_write(marker, "ok")
             return
         prev_buckets: dict[str, list[str]] = self._manifest(table_id)["buckets"]
@@ -946,10 +985,11 @@ class SnapshotLakeSink(DataSink):
             # empty table: nothing to merge and no bucket to drop, so the
             # staged write's buckets ARE the commit — no persist and no
             # touched-bucket collect
-            self._commit(table_id, self._staged_write(
-                final.where(F.col(OP_COL) != "-D").select(*out_cols)
-                .repartition(F.col(_BUCKET_COL)), self._data_dir(table_id)),
-                batch_id)
+            added_map = self._staged_write(bucketed(
+                final.where(F.col(OP_COL) != "-D").select(*out_cols)),
+                self._data_dir(table_id))
+            if added_map:
+                self._commit(table_id, added_map, batch_id)
             atomic_write(marker, "ok")
             return
         # persist: the touched-bucket collect and the file write are two
@@ -970,11 +1010,10 @@ class SnapshotLakeSink(DataSink):
                 merged = (current.join(final.select(*pks), on=pks,
                                        how="left_anti")
                           .unionByName(upserts, allowMissingColumns=True))
+                merged = merged.repartition(F.col(_BUCKET_COL))
             else:
-                merged = upserts
-            added_map = self._staged_write(
-                merged.repartition(F.col(_BUCKET_COL)),
-                self._data_dir(table_id))
+                merged = bucketed(upserts)
+            added_map = self._staged_write(merged, self._data_dir(table_id))
             new_buckets = dict(prev_buckets)
             for b in touched:
                 added = added_map.get(str(b), [])
@@ -982,7 +1021,8 @@ class SnapshotLakeSink(DataSink):
                     new_buckets[str(b)] = added  # bucket REPLACED by commit
                 else:
                     new_buckets.pop(str(b), None)  # all rows deleted
-            self._commit(table_id, new_buckets, batch_id)
+            if new_buckets != prev_buckets:
+                self._commit(table_id, new_buckets, batch_id)
         finally:
             final.unpersist()
         atomic_write(marker, "ok")
@@ -999,24 +1039,28 @@ class SnapshotLakeSink(DataSink):
         rows = df.select(*names).withColumn(
             _BUCKET_COL, F.spark_partition_id() % self.num_buckets)
         added_map = self._staged_write(rows, self._data_dir(tid))
+        if not added_map:
+            return
         buckets = self._manifest(tid)["buckets"]
         self._commit(tid, {b: buckets.get(b, []) + added_map.get(b, [])
                            for b in set(buckets) | set(added_map)}, batch_id)
 
-    def _write_mor_commit(self, tid: TableId, final: DataFrame,
-                          names: list[str], pks: list[str], batch_id) -> None:
+    def _write_mor_commit(self, tid: TableId, bucketed, final: DataFrame,
+                          names: list[str], batch_id) -> None:
         """Append-only delta commit: the batch's final images (row kind +
         commit sequence) land as new files under ``delta/``; base buckets
         and every previous delta file are carried forward untouched — the
         commit never reads or rewrites existing data (O(batch) at any
-        table size)."""
+        table size).  ``bucketed`` shuffles the rows by bucket unless the
+        frame arrived pre-partitioned."""
         manifest = self._manifest(tid)
         seq = manifest["seq"] + 1
         delta_cols = names + [OP_COL, _BUCKET_COL]
         rows = (final.select(*delta_cols)
-                .withColumn(_COMMIT_SEQ, F.lit(seq).cast("bigint")))
-        added_map = self._staged_write(
-            rows.repartition(F.col(_BUCKET_COL)), self._delta_dir(tid))
+                .withColumn(_COMMIT_SEQ, _opaque_long(seq)))
+        added_map = self._staged_write(bucketed(rows), self._delta_dir(tid))
+        if not added_map:
+            return
         deltas = {k: list(v) for k, v in
                   (manifest.get("deltas") or {}).items()}
         # touched buckets = exactly the buckets the staged write produced
@@ -1405,12 +1449,14 @@ class SnapshotLakeSink(DataSink):
         # a racing winner's manifest referencing deleted files)
         dropped: set[str] = set()
         dropped_delta: set[str] = set()
+        dropped_stats: set[str] = set()
         for s in drop:
             m = self._manifest(table_id, s)
             for files in m["buckets"].values():
                 dropped.update(files)
             for files in (m.get("deltas") or {}).values():
                 dropped_delta.update(files)
+            dropped_stats.update(m.get("stats_shards") or [])
         removed = 0
         import time as _time
 
@@ -1434,16 +1480,20 @@ class SnapshotLakeSink(DataSink):
             os.remove(os.path.join(self._snap_dir(table_id), f"{s}.json"))
         # stats + file-list shards referenced by NO retained manifest
         # (incl. orphans from lost commit races) go with the expired
-        # snapshots
+        # snapshots.  A stats shard an expired snapshot referenced goes at
+        # once, like its data files (stats shard names are unique per
+        # commit, so no in-flight commit can be writing it); content-
+        # addressed file-list shards wait out the grace, because a commit
+        # may re-reference an existing one
         live_stats: set[str] = set()
         live_filelists: set[str] = set()
         for s in keep:
             raw = self._manifest_raw(table_id, s)
             live_stats.update(raw.get("stats_shards") or [])
             live_filelists.update((raw.get("file_shards") or {}).values())
-        for sdir, live_set in ((self._stats_dir(table_id), live_stats),
-                               (self._filelist_dir(table_id),
-                                live_filelists)):
+        for sdir, live_set, expired in (
+                (self._stats_dir(table_id), live_stats, dropped_stats),
+                (self._filelist_dir(table_id), live_filelists, set())):
             for f in os.listdir(sdir) if os.path.isdir(sdir) else []:
                 full = os.path.join(sdir, f)
                 # age grace: an in-flight commit writes its shards BEFORE
@@ -1451,7 +1501,8 @@ class SnapshotLakeSink(DataSink):
                 # reap them as orphans (Iceberg's orphan-file cleanup uses
                 # the same age-threshold discipline)
                 if (f.endswith(".json") and f not in live_set
-                        and now - os.path.getmtime(full) > 3600):
+                        and (f in expired
+                             or now - os.path.getmtime(full) > 3600)):
                     os.remove(full)
         return removed
 

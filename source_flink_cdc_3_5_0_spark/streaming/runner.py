@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ..common.atomic import atomic_write
 from ..common.events import CreateTableEvent
@@ -59,7 +60,11 @@ _get = F.get_json_object
 class Envelope:
     """Where one serialization keeps a record's coordinates, and how its
     rows decode. Paths are JSON paths into the raw value; ``None`` means the
-    format has no such coordinate."""
+    format has no such coordinate.  The db, schema and table paths are
+    dotted field paths (``$.a.b``): they become the routing struct's
+    fields.  Routing, the enriched batch and mid-stream discovery all
+    derive from these paths (a mismatch between them silently drops
+    events)."""
 
     db: str
     schema: str | None
@@ -74,17 +79,44 @@ class Envelope:
     # resumable vector offset and honours stop-on-reshard
     vgtid: bool = False
 
-    def probes(self, value_col: str) -> tuple[Column, Column, Column, Column]:
-        """(db, schema, table, image) probes — the ONE place that knows the
-        envelope's layout; both the routing projection (`enrich_batch`)
-        and mid-stream discovery derive from it (a probe mismatch between
-        them silently drops events)."""
-        v = F.col(value_col)
+    def routing_schema(self) -> T.StructType:
+        """The narrow struct ONE ``from_json`` per record parses for
+        routing: ``ddl`` plus the envelope's db, schema and table paths,
+        nested as the paths are (Debezium: ``ddl STRING, source
+        STRUCT<db, schema, table>``).  Every leaf is a STRING, which keeps
+        a non-string token's raw JSON text, as ``get_json_object`` does;
+        a non-object parent or a malformed record reads null."""
+        tree: dict = {}
+        for path in ("$.ddl", self.db, self.schema, self.table):
+            if path is None:
+                continue
+            *parents, leaf = path[2:].split(".")
+            node = tree
+            for part in parents:
+                node = node.setdefault(part, {})
+            node[leaf] = None
 
+        def struct(node: dict) -> T.StructType:
+            return T.StructType([
+                T.StructField(k, T.StringType() if v is None else struct(v))
+                for k, v in node.items()])
+        return struct(tree)
+
+    def routing_columns(self, parsed: str) -> dict[str, Column]:
+        """The enriched routing columns, read from the column named
+        ``parsed`` (a :meth:`routing_schema` struct)."""
         def at(path):
-            return _get(v, path) if path else F.lit(None).cast("string")
-        return (at(self.db), at(self.schema), at(self.table),
-                F.coalesce(*[at(p) for p in self.image]))
+            return (F.col(f"{parsed}.{path[2:]}") if path
+                    else F.lit(None).cast("string"))
+        return {"__is_ddl": at("$.ddl").isNotNull(),
+                "__src_db": at(self.db),
+                "__src_schema": at(self.schema),
+                "__src_tbl": at(self.table)}
+
+    def image_probe(self, value_col: str) -> Column:
+        """The record's row image as JSON text (mid-stream discovery
+        infers a new table's schema from it)."""
+        return F.coalesce(*[_get(F.col(value_col), p) for p in self.image])
 
 
 _DBZ_IMAGE = ("$.after", "$.before")
@@ -382,15 +414,17 @@ class StreamingPipeline:
     def _discover_new_tables(self, data_df: DataFrame, tables: dict[str, Schema],
                              value_col: str) -> None:
         """Register tables first seen in this batch (P8 parallel-metadata
-        path): distinct (db, table) pairs are extracted JVM-side; payload
+        path): distinct (db, table) pairs are read from the enriched
+        ``__src_*`` columns (no second parse of the raw JSON); payload
         schemas are inferred by Spark's JSON reader over that table's
         after-images only (one driver-side inference per NEW table, not per
         batch)."""
         env = ENVELOPES[self.serialization]
-        db_p, schema_p, tbl_p, payload_p = env.probes(value_col)
+        db_c, schema_c, tbl_c = (F.col("__src_db"), F.col("__src_schema"),
+                                 F.col("__src_tbl"))
         pairs = (
-            data_df.select(db_p.alias("db"), schema_p.alias("schema"),
-                           tbl_p.alias("table"))
+            data_df.select(db_c.alias("db"), schema_c.alias("schema"),
+                           tbl_c.alias("table"))
             .where(F.col("table").isNotNull()).distinct().collect()
         )
         for r in pairs:
@@ -411,11 +445,12 @@ class StreamingPipeline:
                 tables[str(tid)] = known
                 continue
             mine = data_df.where(
-                (tbl_p == tid.table_name)
-                & db_p.eqNullSafe(F.lit(r["db"]))
-                & schema_p.eqNullSafe(F.lit(r["schema"]))
+                (tbl_c == tid.table_name)
+                & db_c.eqNullSafe(F.lit(r["db"]))
+                & schema_c.eqNullSafe(F.lit(r["schema"]))
             )
-            after_json = mine.select(payload_p.alias("payload")) \
+            after_json = mine.select(
+                env.image_probe(value_col).alias("payload")) \
                 .where(F.col("payload").isNotNull())
             if not after_json.head(1):
                 # first sighting carries no image (a MongoDB delete ships
@@ -448,23 +483,26 @@ class StreamingPipeline:
     @staticmethod
     def enrich_batch(batch_df: DataFrame, value_col: str,
                      serialization: str) -> DataFrame:
-        """ONE projection computing every per-row JSON probe the micro-batch
-        loop needs (__is_ddl flag + (db, table) routing columns).  The
-        caller persists the result, so the JSON path extraction runs exactly
-        once per row at cache-fill time; the DDL collect and every
-        per-table slice are then column filters over the cached projection
-        — a single pass over the raw batch instead of one scan for DDL plus
-        re-extraction per registered table."""
-        db_p, schema_p, tbl_p, _ = ENVELOPES[serialization].probes(value_col)
-        is_ddl = F.get_json_object(F.col(value_col), "$.ddl").isNotNull()
+        """ONE projection computing every per-row routing column the
+        micro-batch loop needs (__is_ddl flag + (db, schema, table)), from
+        ONE parse per record: a ``from_json`` of the envelope's narrow
+        routing struct (:meth:`Envelope.routing_schema`).  The parsed
+        struct is a column of its own projection, so the optimizer keeps
+        one ``from_json`` instead of inlining it into each routing column.
+        The caller persists the result, so the parse runs once per row at
+        cache-fill time; the DDL collect and every per-table slice are
+        then column filters over the cached projection, and only each
+        table's own slice is decoded in full."""
+        env = ENVELOPES[serialization]
         # BOTH namespace coordinates ride the projection (round-9 review:
         # collapsing them with coalesce cross-contaminated two schemas
         # that share a table name on real Debezium streams, where db AND
         # schema are both set)
-        return (batch_df.withColumn("__is_ddl", is_ddl)
-                .withColumn("__src_db", db_p)
-                .withColumn("__src_schema", schema_p)
-                .withColumn("__src_tbl", tbl_p))
+        return (batch_df
+                .withColumn("__route", F.from_json(F.col(value_col),
+                                                   env.routing_schema()))
+                .withColumns(env.routing_columns("__route"))
+                .drop("__route"))
 
     @staticmethod
     def _tid_match(tid: TableId):

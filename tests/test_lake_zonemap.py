@@ -100,24 +100,67 @@ class TestZoneMaps:
 
     def test_vacuum_reclaims_unreferenced_shards_after_grace(
             self, spark, tmp_path):
+        """A stats shard no snapshot references (an in-flight commit's,
+        or a lost commit race's) survives vacuum's one-hour grace; the
+        shard of an EXPIRED snapshot goes at once, like its data files."""
         import time
 
         sink, tid, schema, ev = _mk(spark, tmp_path)
-        sink.compact(spark, tid)  # full rewrite: chain reset, old shard dead
         sdir = sink._stats_dir(tid)
-        assert len(os.listdir(sdir)) == 2
-        sink.vacuum(tid, keep_last=1)
-        # young unreferenced shard survives the in-flight-commit grace
-        assert len(os.listdir(sdir)) == 2
-        for f in os.listdir(sdir):
-            old = time.time() - 7200
-            os.utime(os.path.join(sdir, f), (old, old))
+        [first] = sink._manifest(tid)["stats_shards"]
+        orphan = os.path.join(sdir, "s9_0_inflight.json")
+        with open(orphan, "w") as f:
+            f.write("{}")
+        sink.compact(spark, tid)  # full rewrite: chain reset, old shard dead
+        assert first in os.listdir(sdir) and len(os.listdir(sdir)) == 3
         sink.vacuum(tid, keep_last=1)
         live = set(sink._manifest(tid).get("stats_shards") or [])
+        # the expired snapshot's shard is gone; the young orphan survives
+        # the in-flight-commit grace
+        assert set(os.listdir(sdir)) == live | {"s9_0_inflight.json"}
+        old = time.time() - 7200
+        os.utime(orphan, (old, old))
+        sink.vacuum(tid, keep_last=1)
         assert set(os.listdir(sdir)) == live
         # pruning still works off the shards after vacuum
         sink._shard_cache.clear()
         assert sink.read(spark, tid).count() == ev.count()
+
+    def test_keep_one_table_bounds_its_stats_shards(self, spark, tmp_path):
+        """A keep-one copy-on-write table (the default ``path`` sink):
+        32 buckets, 64 rows, then 40 single-row update commits.  Every
+        shard the head carries still covers a live file, so the chain is
+        bounded by the live files instead of growing by one shard per
+        commit, and ``_stats/`` holds exactly the head's shards."""
+        from pyspark.sql import types as T
+
+        from source_flink_cdc_3_5_0_spark.common.schema import Column
+
+        tid = TableId.parse("lake.db.kv")
+        schema = Schema.of(Column("id", T.LongType(), False),
+                           Column("v", T.StringType()), primary_keys=["id"])
+        sink = SnapshotLakeSink(str(tmp_path / "kv"), num_buckets=32,
+                                keep_last=1)
+        sink.metadata_applier().apply_schema_change(
+            tid, CreateTableEvent(tid, schema), schema)
+
+        def commit(rows, bid):
+            df = spark.createDataFrame(rows, "id long, v string")
+            sink.write(tid, attach_envelope(df, "+U", seq=bid), schema,
+                       batch_id=bid)
+        commit([(k, "v0") for k in range(64)], 0)
+        for i in range(40):
+            commit([((i * 7) % 64, f"u{i}")], i + 1)
+        m = sink._manifest(tid)
+        live = {p for fs in m["buckets"].values() for p in fs}
+        shards = m["stats_shards"]
+        assert all(live & sink._load_shard(tid, sh).keys() for sh in shards)
+        assert len(shards) <= len(live) <= 32
+        assert set(os.listdir(sink._stats_dir(tid))) == set(shards)
+        assert live <= set(sink.file_stats(tid))
+        got = dict(sink.read(spark, tid, filters=[("id", "=", 14)])
+                   .select("id", "v").collect())
+        assert got == {14: "u2"}
 
     def test_commit_writes_only_touched_filelist_shards(
             self, spark, tmp_path):

@@ -652,3 +652,107 @@ def test_wire_decoder_plan_shapes(spark):
     assert pe.count("MapInPandas") == 1, pe
     assert len(re.findall(r"\bExchange\b", pe)) == 2, pe
     assert "BatchEvalPython" not in pe, pe
+
+
+def _steady_mor_rounds(spark, root, monkeypatch, value_type, n_rounds=3):
+    """Drive ``n_rounds`` Debezium micro-batches (50 keys each, the same
+    shape every round) through the composer into a merge-on-read lake
+    table; per round, return (Spark jobs, Janino compiles, the plan of the
+    frame the commit wrote).  ``value_type`` is the payload column's type:
+    one no other test writes keeps code compiled by earlier tests out of
+    the compile count (generated code knows types, not column names)."""
+    import json
+    import os
+
+    from source_flink_cdc_3_5_0_spark.pipeline import (PipelineComposer,
+                                                       parse_yaml_pipeline)
+    from source_flink_cdc_3_5_0_spark.sinks import lakehouse
+
+    pdef = parse_yaml_pipeline(f"""
+source:
+  type: debezium-file
+  path: {root}/in
+  checkpoint: {root}/ckpt
+  tables: '{json.dumps({"db.t": f"id BIGINT, v {value_type}"})}'
+  primary-keys: '{json.dumps({"db.t": ["id"]})}'
+sink:
+  type: paimon
+  path: {root}/sink
+  snapshots: true
+  changelog-mode: mor
+""")
+    os.makedirs(f"{root}/in")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    plans = []
+    staged_write = lakehouse.SnapshotLakeSink._staged_write
+
+    def recording(self, df, dest_dir):
+        plans.append(plan_of(df))
+        return staged_write(self, df, dest_dir)
+
+    monkeypatch.setattr(lakehouse.SnapshotLakeSink, "_staged_write",
+                        recording)
+    out = []
+    for rnd in range(n_rounds):
+        with open(f"{root}/in/r{rnd}.json", "w") as f:
+            for i in range(50):
+                f.write(json.dumps({
+                    "op": "u" if rnd else "c", "ts_ms": rnd * 100 + i,
+                    "before": None,
+                    "after": {"id": i, "v": rnd * 1000 + i},
+                    "source": {"db": "db", "table": "t"}}) + "\n")
+        compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+        pipe, raw, tables = PipelineComposer(spark).compose_streaming(pdef)
+        q = pipe.start(raw, tables)
+        q.awaitTermination()
+        assert q.exception() is None, q.exception()
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+            str(q.runId))
+        out.append((len(jobs),
+                    codegen.METRIC_COMPILATION_TIME().getCount() - compiles,
+                    plans[-1]))
+    return out
+
+
+def test_steady_mor_micro_batch_one_exchange_per_commit(spark, tmp_path,
+                                                        monkeypatch):
+    """The lake sink supplies the pre-partition key (``__bucket``), so the
+    composer's one exchange serves both the per-key dedup window and the
+    bucket-partitioned write: a steady micro-batch runs 3 jobs (the
+    cache-filling DDL collect, the shuffle map stage, the write), not 4,
+    and the commit plan holds exactly one Exchange, on ``__bucket``."""
+    import re
+
+    rounds = _steady_mor_rounds(spark, tmp_path, monkeypatch, "STRING")
+    for jobs, _compiles, plan in rounds[1:]:
+        assert jobs == 3, (jobs, plan)
+        exchanges = re.findall(r"\bExchange\b.*", plan)
+        assert len(exchanges) == 1, plan
+        assert "hashpartitioning(__bucket" in exchanges[0], plan
+
+
+def test_second_mor_commit_compiles_no_code(spark, tmp_path, monkeypatch):
+    """A commit's ``__commit_seq`` reaches generated code as a reference,
+    not an inlined long, so a later commit of the same shape in a warm
+    session hits the codegen cache: 0 Janino compiles."""
+    rounds = _steady_mor_rounds(spark, tmp_path, monkeypatch,
+                                "DECIMAL(11, 3)")
+    assert [c for _j, c, _p in rounds[1:]] == [0, 0], rounds
+
+
+def test_enriched_projection_parses_each_record_once(spark):
+    """The routing projection reads ddl, db, schema and table from ONE
+    ``from_json`` of the envelope's narrow routing struct: the optimized
+    plan of the enriched batch holds exactly one JSON parse and no
+    ``get_json_object`` probe."""
+    from source_flink_cdc_3_5_0_spark.streaming.runner import (
+        ENVELOPES, StreamingPipeline)
+
+    raw = spark.createDataFrame([('{"source": {"db": "d", "table": "t"}}',)],
+                                "value string")
+    for serialization in ENVELOPES:
+        enriched = StreamingPipeline.enrich_batch(raw, "value",
+                                                  serialization)
+        plan = enriched._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json(") == 1, (serialization, plan)
+        assert "get_json_object" not in plan, (serialization, plan)

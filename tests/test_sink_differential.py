@@ -81,6 +81,14 @@ def _script(seed, n_batches=4, ops_per_batch=8):
     return batches, replay_at, set(state.values())
 
 
+def _batch_df(spark, schema, events):
+    """One script batch as a changelog frame, sequenced in script order."""
+    seq = [DataChangeEvent(e.table_id, e.op, e.before, e.after,
+                           e.meta + (("__seq", str(i)),))
+           for i, e in enumerate(events)]
+    return ValuesSource._to_df(spark, schema, seq)
+
+
 def _drive(spark, sink, batches, replay_at, schema=SCHEMA):
     ap = sink.metadata_applier()
     ap.apply_schema_change(TID, CreateTableEvent(TID, schema), schema)
@@ -89,10 +97,7 @@ def _drive(spark, sink, batches, replay_at, schema=SCHEMA):
         if kind == "truncate":
             ap.apply_schema_change(TID, TruncateTableEvent(TID), schema)
             continue
-        seq = [DataChangeEvent(e.table_id, e.op, e.before, e.after,
-                               e.meta + (("__seq", str(i)),))
-               for i, e in enumerate(events)]
-        df = ValuesSource._to_df(spark, schema, seq)
+        df = _batch_df(spark, schema, events)
         sink.write(TID, df, schema, batch_id=bid)
         if bid == replay_at:
             sink.write(TID, df, schema, batch_id=bid)  # replay no-op
@@ -385,3 +390,109 @@ def test_memory_sink_write_loop_edges(spark):
         "v STRING, n LONG, __op STRING, __seq LONG")
     sink2.write(TID, df2, SCHEMA, batch_id=0)
     assert sink2.state[TID] == {(None,): {"id": None, "v": "x", "n": 1}}
+
+
+def _composed(spark, sink, schema, yaml=""):
+    """A pipeline execution composed around ``sink`` with TID registered;
+    ``yaml`` adds pipeline / transform sections."""
+    pdef = parse_yaml_pipeline(
+        "source: {type: values}\nsink: {type: values}\n" + yaml)
+    exe = PipelineComposer(spark).compose(
+        pdef, source=ValuesSource([CreateTableEvent(TID, schema)]),
+        sink=sink)
+    exe.run()
+    return exe
+
+
+def _drive_composed(spark, exe, batches, replay_at, schema=SCHEMA,
+                    after_write=lambda: None, first_bid=0):
+    """``_drive`` through the composer's data path (transform, coercion,
+    the sink-keyed pre-partition, then the sink write): one write per
+    script batch, the ``replay_at`` batch delivered twice."""
+    from source_flink_cdc_3_5_0_spark.sources.base import ChangeBatch
+
+    bid = first_bid
+    for kind, events in batches:
+        if kind == "truncate":
+            exe.batches_run = f"t{bid}"
+            exe._handle_schema_events(
+                ChangeBatch(TID, [TruncateTableEvent(TID)], None))
+            continue
+        df = _batch_df(spark, schema, events)
+        for _ in range(2 if bid == replay_at else 1):
+            exe.batches_run = bid
+            exe._process_data(ChangeBatch(TID, [], df))
+            after_write()
+        bid += 1
+
+
+@pytest.mark.parametrize("script", [7, 23, 91])
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_pre_partition_is_configuration_invariant(spark, tmp_path, mode,
+                                                  script):
+    """The random scripts through the composer's lake sink, which
+    pre-partitions by its own ``__bucket``, under ``pipeline.parallelism``
+    unset and 3 and ``spark.sql.shuffle.partitions`` 1 and 7: every
+    combination ends in the scripted state, and every commit writes one
+    file per bucket it touches (a bucket split over tasks would write
+    one per task)."""
+    batches, replay_at, expected = _script(script)
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    for parallelism in (None, 3):
+        for partitions in (1, 7):
+            root = str(tmp_path / f"{parallelism}-{partitions}")
+            sink = SnapshotLakeSink(root, num_buckets=3, mode=mode)
+            heads = [{}]
+
+            def one_file_per_touched_bucket():
+                m = sink._manifest(TID)
+                before, heads[0] = heads[0], m
+                kind = "deltas" if mode == "mor" else "buckets"
+                old, new = before.get(kind) or {}, m.get(kind) or {}
+                for b, files in new.items():
+                    if files == old.get(b):
+                        continue
+                    added = set(files) - set(old.get(b) or [])
+                    assert len(added) == 1, (parallelism, partitions, b,
+                                             files)
+            spark.conf.set(key, str(partitions))
+            try:
+                exe = _composed(
+                    spark, sink, SCHEMA,
+                    f"pipeline: {{parallelism: {parallelism}}}\n"
+                    if parallelism else "")
+                _drive_composed(spark, exe, batches, replay_at,
+                                after_write=one_file_per_touched_bucket)
+            finally:
+                spark.conf.set(key, prior)
+            assert _state_read(sink, spark) == expected, (parallelism,
+                                                          partitions)
+
+
+@pytest.mark.parametrize("sink_name", ["lake_mor", "lake_cow",
+                                       "lake_cow_nopk"])
+def test_filtered_out_batch_commits_no_snapshot(spark, tmp_path, sink_name):
+    """A batch whose every row fails the transform filter adds no file and
+    changes no bucket, so it commits no snapshot (its replay marker is
+    still written): ``snapshots()`` stays as it was, and a replay of the
+    batch still no-ops."""
+    nopk = sink_name == "lake_cow_nopk"
+    schema = NOPK_SCHEMA if nopk else SCHEMA
+    sink = SnapshotLakeSink(str(tmp_path / sink_name), num_buckets=3,
+                            mode="mor" if sink_name == "lake_mor" else "cow")
+    exe = _composed(spark, sink, schema,
+                    "transform:\n  - source-table: diff.db.t\n"
+                    "    filter: id < 100\n")
+    kept = [DataChangeEvent.insert(TID, (k, f"k{k}", k)) for k in range(4)]
+    dropped = [DataChangeEvent.insert(TID, (100 + k, "x", k))
+               for k in range(4)]
+    _drive_composed(spark, exe, [("data", kept)], None, schema)
+    snaps = sink.snapshots(TID)
+    assert snaps
+    _drive_composed(spark, exe, [("data", dropped)], 1, schema, first_bid=1)
+    assert sink.snapshots(TID) == snaps
+    # the empty write still leaves its replay marker
+    assert len([f for f in os.listdir(sink._table_dir(TID))
+                if f.startswith("_batch_")]) == 2
+    assert sorted(_rows_read(sink, spark)) == sorted(e.after for e in kept)

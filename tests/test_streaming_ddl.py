@@ -223,3 +223,66 @@ def test_micro_batch_single_pass_enrichment(spark, serialization):
         assert "get_json_object" not in above_cache, slice_plan
     finally:
         enriched.unpersist()
+
+
+def _routing_records(env):
+    """A well-formed record for ``env`` and adversarial twists of it: a
+    missing or non-object parent of the coordinates, non-string
+    coordinates, null / object / text ``ddl``, and malformed JSON."""
+    def put(rec, path, value):
+        *parents, leaf = path[2:].split(".")
+        for part in parents:
+            rec = rec.setdefault(part, {})
+        rec[leaf] = value
+
+    def record(**coords):
+        rec = {}
+        for path, value in coords.items():
+            put(rec, path, value)
+        return rec
+
+    paths = [p for p in (env.db, env.schema, env.table) if p]
+    good = {p: v for p, v in zip(paths, ("d", "s", "t"))}
+    top = env.db[2:].split(".")[0]
+    out = [record(**good)]
+    out.append({k: v for k, v in record(**good).items() if k != top})
+    for bad in (5, "str", [1, 2], None):
+        out.append({**record(**good), top: bad})
+    for odd in (7, 1.50, True, None, {"x": [1, {"y": 2}]}, [3, "a"]):
+        out.append(record(**{**good, env.db: odd}))
+        out.append(record(**{**good, env.table: odd}))
+    for ddl in (None, {"stmt": "ALTER TABLE t ADD c INT"}, "ALTER TABLE t",
+                "", 0, False):
+        out.append({**record(**good), "ddl": ddl})
+    texts = [json.dumps(r) for r in out]
+    texts += [texts[0][:-1], "not json", "", "[1, 2]", "null", "7",
+              texts[0] + " trailing", None]
+    return texts
+
+
+@pytest.mark.parametrize("serialization", sorted(ENVELOPES))
+def test_routing_columns_equal_the_json_probes(spark, serialization):
+    """The one-parse routing struct gives, record for record, the values
+    the per-coordinate ``get_json_object`` probes gave: ``__is_ddl`` is
+    "$.ddl" is set, and ``__src_db``/``__src_schema``/``__src_tbl`` are
+    the raw text at the envelope's paths (null where a path is missing,
+    crosses a non-object, or the record is not JSON)."""
+    from pyspark.sql import functions as F
+
+    env = ENVELOPES[serialization]
+    raw = spark.createDataFrame([(t,) for t in _routing_records(env)],
+                                "value string")
+
+    def probe(path):
+        return (F.get_json_object("value", path) if path
+                else F.lit(None).cast("string"))
+    got = StreamingPipeline.enrich_batch(raw, "value", serialization).select(
+        "value", "__is_ddl", "__src_db", "__src_schema", "__src_tbl",
+        probe("$.ddl").isNotNull().alias("o_ddl"), probe(env.db).alias("o_db"),
+        probe(env.schema).alias("o_schema"), probe(env.table).alias("o_tbl"))
+    rows = got.collect()
+    assert len(rows) > 30
+    for r in rows:
+        assert (r["__is_ddl"], r["__src_db"], r["__src_schema"],
+                r["__src_tbl"]) == (r["o_ddl"], r["o_db"], r["o_schema"],
+                                    r["o_tbl"]), r["value"]
