@@ -37,10 +37,6 @@ class Column:
     metadata_key: str | None = None
     zoned: bool = False
 
-    @property
-    def is_physical(self) -> bool:
-        return self.metadata_key is None
-
     def to_struct_field(self) -> T.StructField:
         md = {}
         if self.comment:
@@ -120,12 +116,6 @@ class Schema:
 
     def options_dict(self) -> dict[str, str]:
         return dict(self.options)
-
-    def index_of(self, name: str) -> int:
-        for i, c in enumerate(self.columns):
-            if c.name == name:
-                return i
-        raise KeyError(name)
 
     # -- rewriting ------------------------------------------------------
     def with_columns(self, columns: list[Column] | tuple[Column, ...]) -> "Schema":

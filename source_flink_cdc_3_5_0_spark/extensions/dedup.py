@@ -15,19 +15,20 @@ Design note for 1000-executor scale: every operator here avoids all-pairs
 comparisons; candidate generation is always a hash-bucket equi-join so the
 shuffle is O(n·bands), and verification touches only bucket-mates.
 
-Python-UDF cost: a pandas-UDF task has a fixed Python-worker cost that
-dwarfs the UDF bodies at small inputs. Measured on a 4-core host (Python
-3.11, pyspark 4.1): an identity UDF costs 0.19-0.26 s of worker CPU per
-task at 1, 4 or 16 tasks, whatever its rows. Most of it is pyspark's
-per-task ``setup_spark_files`` → ``importlib.invalidate_caches()``, which
-re-reads the ``pyspark.zip`` directory (1,328 entries) once per
-zipimporter on ``sys.path``. So a UDF task's fixed cost, not the core
-count, sets how many tasks a UDF stage gets: ``_spread`` sizes the stage
-from the input's estimated bytes (see ``_UDF_TASK_BYTES``) and uses the
-cores only as the ceiling. And each LSH band self-join here evaluates its
-UDF once: the band table is hash-partitioned on the join key above the
-UDF, and AQE serves both join sides from that one exchange (a
-ShuffleQueryStage plus a ReusedExchange).
+Python-UDF cost: a pandas-UDF task has a fixed Python-worker cost before
+its first row. Stock pyspark's per-task ``setup_spark_files`` →
+``importlib.invalidate_caches()`` re-reads the ``pyspark.zip`` directory
+(1,328 entries) once per zipimporter on ``sys.path``; the engine's worker
+module (``pyspark_engine_worker``, set in ``common/session.py``) re-reads
+an archive only when it changed. Measured on a 4-core host (Python 3.11,
+pyspark 4.1, identity UDF, 64 tasks, warm session): 87 ms of worker CPU
+per task without the module, 28-35 ms with it. The fixed cost still
+exceeds a small UDF body, so the input's estimated bytes, not the core
+count, set how many tasks a UDF stage gets: ``_spread`` sizes the stage
+(see ``_UDF_TASK_BYTES``) and uses the cores only as the ceiling. And
+each LSH band self-join here evaluates its UDF once: the band table is
+hash-partitioned on the join key above the UDF, and AQE serves both join
+sides from that one exchange (a ShuffleQueryStage plus a ReusedExchange).
 """
 
 from __future__ import annotations
@@ -145,28 +146,32 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-# Input bytes (the Catalyst size estimate of a UDF stage's input) whose
-# pandas-UDF body costs as much CPU as one UDF task's fixed cost. Measured
-# on a 4-core host over the benchmark's 3,300-document / 3,300-vector
-# corpus (parquet, ~0.63 MB estimated each): a task costs ~0.23 s of
-# Python-worker CPU before its first row (identity UDF, 1/4/16 tasks);
-# the MinHash body takes 0.185 s per 0.63 MB (0.29 s/MB), the SRP body
-# 0.054 s (0.09 s/MB). The break-even is 0.23/0.29 ≈ 0.8 MB for MinHash
-# and 0.23/0.09 ≈ 2.6 MB for SRP; the constant is the costlier body's,
-# rounded to 1 MiB. Bytes are a proxy: MinHash costs 0.61 s/MB over the
-# sf0.1 documents table (better-compressed text), and the SimHash body
-# 1.9 s/MB (break-even ~0.12 MB), so a sub-MiB SimHash stage runs in one
-# task, trading wall time for CPU (sf0.1 on 4 cores: ~1.3 → ~2.1 s wall,
-# ~4.0 → ~3.4 s CPU).
+# Input bytes (the Catalyst size estimate of a UDF stage's input) per
+# pandas-UDF task. Set on a 4-core host over the benchmark's 3,300-document
+# / 3,300-vector corpus (parquet, ~0.63 MB estimated each), when a task
+# cost ~0.23 s of Python-worker CPU before its first row: the MinHash body
+# takes 0.185 s per 0.63 MB (0.29 s/MB), the SRP body 0.054 s (0.09 s/MB),
+# so the break-even was 0.23/0.29 ≈ 0.8 MB, rounded to 1 MiB. With the
+# engine's worker module a task costs ~30 ms (identity UDF; ~87 ms on
+# stock pyspark on the same host), which would put the break-even near
+# 0.1 MB, but fewer tasks still measure cheaper: one task per core
+# (``repartition(defaultParallelism)``) instead of this sizing gave
+# ``neardup_corpus`` ``cpu_ms_per_krecord`` 344 → 382 (1 of 5 pairs
+# lower) and ``peak_rss_mb`` 1692 → 1893 (0 of 5), though the set-up's
+# wall time fell 0.334 → 0.295 s. So the constant stays until a ≥10-pair
+# measurement says otherwise. Bytes are a proxy:
+# MinHash costs 0.61 s/MB over the sf0.1 documents table
+# (better-compressed text), and the SimHash body 1.9 s/MB, so a sub-MiB
+# SimHash stage runs in one task, trading wall time for CPU.
 _UDF_TASK_BYTES = 1 << 20
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition ahead of a pandas-UDF stage into
     ``clamp(ceil(estimated_bytes / _UDF_TASK_BYTES), 1, defaultParallelism)``
-    partitions. A UDF task's fixed Python-worker cost, not the core count,
-    sets the count: a task is worth adding only when its share of the UDF
-    body costs at least that fixed cost, so a small input runs in one task
+    partitions. A UDF task's fixed cost, not the core count, sets the
+    count: a task is worth adding only when its share of the UDF body
+    outweighs what the task adds, so a small input runs in one task
     and a large one (or one whose size is unknown) spreads over every core,
     as a single-file scan (ONE partition) would otherwise serialize it.
     The estimate is the input plan's Catalyst statistics, computed on the

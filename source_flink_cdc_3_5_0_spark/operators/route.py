@@ -50,13 +50,3 @@ class TableIdRouter:
         result = tuple(outs) if outs else (table_id,)
         self._cache[table_id] = result
         return result
-
-    def merge_groups(self, source_tables: list[TableId]) -> dict[TableId, list[TableId]]:
-        """sink table -> ordered list of source tables feeding it (parity
-        :110-127 groupSourcesByRouteRule); groups with >1 source are N:1
-        merges requiring common-schema derivation."""
-        groups: dict[TableId, list[TableId]] = {}
-        for src in source_tables:
-            for sink in self.route(src):
-                groups.setdefault(sink, []).append(src)
-        return groups

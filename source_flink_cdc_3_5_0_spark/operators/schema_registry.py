@@ -62,9 +62,6 @@ class SchemaRegistry:
         self.evolved.put(table_id, new)
         return new
 
-    def register_create(self, event: CreateTableEvent) -> None:
-        self.apply_original(event)
-
     # -- queries --------------------------------------------------------
     def original_schema(self, table_id: TableId) -> Schema | None:
         return self.original.latest(table_id)

@@ -939,9 +939,9 @@ class PipelineComposer:
                 # (the kv view) — exactly the merge-on-read lake table,
                 # so fluss maps there rather than to the copy-on-write
                 # stand-in: write() appends delta files (the log),
-                # read() is the kv view, stream_changes() is log
-                # subscription (FlussDataSink's log tables; bucket
-                # hashing parity via the shared portable bucket fn)
+                # read() is the kv view, read_changes() reads the log
+                # (FlussDataSink's log tables; bucket hashing parity via
+                # the shared portable bucket fn)
                 from ..sinks.lakehouse import SnapshotLakeSink
 
                 return SnapshotLakeSink(path, mode="mor")

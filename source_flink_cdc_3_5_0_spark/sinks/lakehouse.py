@@ -1271,44 +1271,6 @@ class SnapshotLakeSink(DataSink):
                 .select(*picked, op.alias(OP_COL),
                         F.lit(m1["seq"]).cast("bigint").alias(_COMMIT_SEQ)))
 
-    def merge(self, table_id: TableId, df: DataFrame, schema: Schema,
-              batch_id, delete_where=None) -> None:
-        """MERGE-style sugar over :meth:`write` for callers without a
-        changelog envelope: every ``df`` row upserts by primary key
-        (+U); rows matching ``delete_where`` (a Column) are keyed
-        deletes instead — Delta/Iceberg ``MERGE INTO`` reduced to the
-        sink's changelog contract."""
-        clash = [c for c in (OP_COL, SEQ_COL) if c in df.columns]
-        if clash:
-            raise ValueError(
-                f"merge() is for envelope-free DataFrames but {clash} "
-                "already present — pass changelog rows to write() instead")
-        op = (F.when(delete_where, F.lit("-D")).otherwise(F.lit("+U"))
-              if delete_where is not None else F.lit("+U"))
-        self.write(table_id,
-                   df.select("*", op.alias(OP_COL),
-                             F.lit(0).cast("bigint").alias(SEQ_COL)),
-                   schema, batch_id)
-
-    def maintenance(self, spark: SparkSession, table_id: TableId,
-                    max_files_per_bucket: int = 8,
-                    max_delta_files: int = 16, **compact_kwargs) -> bool:
-        """Threshold-triggered compaction (the auto-maintenance loop a
-        streaming ingestion job calls after each commit): compacts when
-        any bucket holds more than ``max_files_per_bucket`` base files
-        or the table has more than ``max_delta_files`` MoR delta files.
-        Returns True iff a compaction ran.  Extra kwargs (``order_by``,
-        ``zorder``, ``files_per_bucket``) pass through to
-        :meth:`compact` so the maintenance rewrite can cluster."""
-        m = self._manifest(table_id)
-        n_deltas = sum(len(fs) for fs in (m.get("deltas") or {}).values())
-        fat_bucket = any(len(fs) > max_files_per_bucket
-                         for fs in m["buckets"].values())
-        if n_deltas <= max_delta_files and not fat_bucket:
-            return False
-        self.compact(spark, table_id, **compact_kwargs)
-        return True
-
     # -- refs: rollback + tags (Iceberg table refs) ------------------------
     def rollback(self, table_id: TableId, to_snapshot: int) -> int:
         """Roll the table back to an earlier snapshot by COMMITTING a new
@@ -1322,42 +1284,13 @@ class SnapshotLakeSink(DataSink):
                             deltas={k: list(v) for k, v in
                                     (m.get("deltas") or {}).items()} or None)
 
-    def snapshot_as_of(self, table_id: TableId, ts: float) -> int:
-        """The snapshot current AT wall-clock ``ts`` (epoch seconds or a
-        datetime) — Iceberg's ``FOR SYSTEM_TIME AS OF``.  Resolves to the
-        last snapshot whose ``committed_at`` ≤ ts; raises if the table
-        had no snapshot yet at that time (or the manifests predate the
-        committed_at field and were since vacuumed)."""
-        import datetime as _dt
-
-        if isinstance(ts, _dt.datetime):
-            ts = ts.timestamp()
-        best = None
-        snap_dir = self._snap_dir(table_id)
-        # raw docs, listed once: committed_at lives in the snapshot doc
-        # itself, so the lookup must not materialize any sharded file
-        # listing (and must not re-list the snapshot dir per snapshot)
-        for s in self.snapshots(table_id):
-            try:
-                with open(os.path.join(snap_dir, f"{s}.json")) as f:
-                    at = json.load(f).get("committed_at")
-            except (OSError, ValueError):
-                continue
-            if at is not None and at <= ts:
-                best = s
-        if best is None:
-            raise ValueError(
-                f"{table_id}: no snapshot existed at {ts} "
-                f"(have {self.snapshots(table_id)})")
-        return best
-
     def _tags_path(self, tid: TableId) -> str:
         return os.path.join(self._table_dir(tid), "_tags.json")
 
     def tag(self, table_id: TableId, name: str,
             snapshot: int | None = None) -> int:
         """Name a snapshot (Iceberg tag): ``read(..., snapshot=sink.
-        tag_seq(tid, name))`` pins it forever; vacuum REFUSES to expire
+        tags(tid)[name])`` pins it forever; vacuum REFUSES to expire
         tagged snapshots.  Defaults to the latest snapshot."""
         seqs = self.snapshots(table_id)
         seq = seqs[-1] if snapshot is None else snapshot
@@ -1375,41 +1308,6 @@ class SnapshotLakeSink(DataSink):
         with open(p) as f:
             return {k: int(v) for k, v in json.load(f).items()}
 
-    def tag_seq(self, table_id: TableId, name: str) -> int:
-        tags = self.tags(table_id)
-        if name not in tags:
-            raise ValueError(f"unknown tag {name!r}; have {sorted(tags)}")
-        return tags[name]
-
-    # -- the table as a STREAM (changelog source) --------------------------
-    def stream_changes(self, spark: SparkSession,
-                       table_id: TableId) -> DataFrame:
-        """The MoR table's changelog as a REAL Structured Streaming
-        source: delta commits are append-only parquet files, so Spark's
-        file stream source over ``delta/`` IS the change stream — each
-        delta file processed exactly once per checkpoint, rows carrying
-        ``__op`` + ``__commit_seq``.  Pair with ``foreachBatch`` to feed
-        downstream incremental jobs (e.g. the signature-store dedup).
-        Compaction never re-emits (it writes base files, not deltas).
-        RETENTION: vacuum expires delta files with their snapshots — a
-        consumer lagging more than ``vacuum(keep_last=N)`` commits
-        behind loses those changes permanently (the Kafka-retention
-        contract; see :meth:`vacuum`), so size keep_last to the slowest
-        consumer or pin a tag it has not passed.  Batch analog:
-        :meth:`read_changes`."""
-        self._ensure_meta(table_id, create=False)
-        if self.mode != "mor":
-            raise ValueError(
-                "stream_changes needs mode='mor' (copy-on-write commits "
-                "rewrite buckets in place; use read_changes' state diff)")
-        declared = self._declared(spark, self._table_schema(table_id),
-                                    changelog=True)
-        return (spark.readStream.schema(declared)
-                .option("basePath", self._delta_dir(table_id))
-                .parquet(os.path.join(self._delta_dir(table_id),
-                                      f"{_BUCKET_COL}=*"))
-                .drop(_BUCKET_COL))
-
     # -- maintenance -------------------------------------------------------
     def vacuum(self, table_id: TableId, keep_last: int = 1) -> int:
         """Delete data files referenced by NO retained snapshot and drop
@@ -1418,7 +1316,7 @@ class SnapshotLakeSink(DataSink):
         of files removed.
 
         RETENTION CONTRACT for changelog consumers: ``keep_last`` is the
-        delta-retention window — a ``stream_changes`` consumer lagging
+        delta-retention window — a ``read_changes`` consumer lagging
         more than keep_last commits behind the head loses the vacuumed
         deltas permanently (the same contract as Kafka retention); size
         keep_last to the slowest consumer's worst-case lag, or tag a

@@ -63,12 +63,6 @@ class DataSource(abc.ABC):
         Batch boundaries are the schema-evolution barriers (§3.3 analog)."""
         ...
 
-    def is_parallel_metadata_source(self) -> bool:
-        """Parity: ``DataSource.isParallelMetadataSource`` — True for sources
-        (Kafka) whose table metadata arrives spread across partitions."""
-        return False
-
-
 def attach_envelope(df: DataFrame, op: str = "+I", seq: int = 0) -> DataFrame:
     """Stamp snapshot rows with envelope columns (constant op + seq)."""
     out = df

@@ -441,6 +441,3 @@ class JdbcPipelineSource:
             df = inner.read(spark, mn, mx, cnt)
             out.append(ChangeBatch(self._table_id(t), [], attach_envelope(df)))
         yield out
-
-    def is_parallel_metadata_source(self) -> bool:
-        return False

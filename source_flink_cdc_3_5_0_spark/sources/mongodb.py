@@ -170,34 +170,6 @@ def decode_mongo_changestream(raw: DataFrame, payload_schema: T.StructType,
 # ---------------------------------------------------------------------------
 
 
-def decode_resume_token_timestamp(token) -> int:
-    """Resume token -> the BsonTimestamp long it encodes.
-
-    A change-stream resume token's ``_data`` is a hex KeyString whose
-    first byte is the timestamp kind marker (130) followed by the 8-byte
-    big-endian BsonTimestamp value ``(seconds << 32) | increment`` — the
-    public layout `ResumeTokens.decodeTimestamp` reads (mongo driver /
-    mongo-kafka, Apache-2.0 docs). Accepts the token document
-    ``{"_data": "hex"}`` or the bare hex string.
-    """
-    data = token
-    if isinstance(data, dict):
-        data = data.get("_id", data)
-    if isinstance(data, dict):  # {"_data": ...} (possibly nested in _id)
-        data = data.get("_data")
-    if not isinstance(data, str):
-        raise ValueError("not a change-stream resume token shape: %r"
-                         % type(token).__name__)
-    try:
-        raw = bytes.fromhex(data)
-    except ValueError:
-        raise ValueError("resume token _data is not hex: %r" % data[:40])
-    if len(raw) < 9 or raw[0] != 130:
-        raise ValueError("not a change-stream resume token (lead byte "
-                         "0x%02x)" % (raw[0] if raw else 0xFF))
-    return int.from_bytes(raw[1:9], "big")
-
-
 class ChangeStreamOffset:
     """`ChangeStreamOffset.java` parity: offset map {timestamp,
     resumeToken}, ordered by the BsonTimestamp; NO_STOPPING carries the
@@ -208,13 +180,6 @@ class ChangeStreamOffset:
     def __init__(self, timestamp: int, resume_token_json: str | None = None):
         self.timestamp = timestamp
         self.resume_token_json = resume_token_json
-
-    @classmethod
-    def of_resume_token(cls, token: dict) -> "ChangeStreamOffset":
-        import json
-
-        return cls(decode_resume_token_timestamp(token),
-                   json.dumps(token, separators=(",", ":")))
 
     @classmethod
     def no_stopping(cls) -> "ChangeStreamOffset":

@@ -1881,11 +1881,7 @@ def _gtid_set_str(running: dict[str, list[tuple[int, int]]]) -> str:
 # BinlogOffset (source/offset/BinlogOffset.java parity)
 # ---------------------------------------------------------------------------
 
-_KIND_EARLIEST = "EARLIEST"
-_KIND_LATEST = "LATEST"
-_KIND_TIMESTAMP = "TIMESTAMP"
 _KIND_NON_STOPPING = "NON_STOPPING"
-_KIND_SPECIFIC = "SPECIFIC"
 
 
 @dataclass(frozen=True)
@@ -1906,28 +1902,8 @@ class BinlogOffset:
                                 if v is not None)))
 
     @classmethod
-    def of_file_position(cls, filename: str, position: int) -> "BinlogOffset":
-        return cls.of(file=filename, pos=position)
-
-    @classmethod
     def of_gtid_set(cls, gtid_set: str) -> "BinlogOffset":
         return cls.of(file="", pos=0, gtids=gtid_set)
-
-    @classmethod
-    def of_earliest(cls) -> "BinlogOffset":
-        return cls.of(kind=_KIND_EARLIEST)
-
-    @classmethod
-    def of_latest(cls) -> "BinlogOffset":
-        return cls.of(kind=_KIND_LATEST)
-
-    @classmethod
-    def of_timestamp_sec(cls, ts: int) -> "BinlogOffset":
-        return cls.of(kind=_KIND_TIMESTAMP, ts_sec=ts)
-
-    @classmethod
-    def of_non_stopping(cls) -> "BinlogOffset":
-        return cls.of(kind=_KIND_NON_STOPPING)
 
     def _map(self) -> dict:
         # cached: compare()/_keep_record() call the accessors on the
@@ -2010,12 +1986,6 @@ class BinlogOffset:
         if self._long("event") != that._long("event"):
             return _cmp(self._long("event"), that._long("event"))
         return _cmp(self._long("row"), that._long("row"))
-
-    def is_at_or_before(self, that: "BinlogOffset") -> bool:
-        return self.compare(that) <= 0
-
-    def is_before(self, that: "BinlogOffset") -> bool:
-        return self.compare(that) < 0
 
     def to_json(self) -> str:
         return json.dumps(self._map(), sort_keys=True)

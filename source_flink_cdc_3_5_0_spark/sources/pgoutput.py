@@ -1068,11 +1068,6 @@ class PostgresOffset:
     def compare(self, other: "PostgresOffset") -> int:
         return (self.lsn > other.lsn) - (self.lsn < other.lsn)
 
-    @property
-    def lsn_text(self) -> str:
-        """The X/Y spelling (pg_lsn)."""
-        return "%X/%X" % (self.lsn >> 32, self.lsn & 0xFFFFFFFF)
-
     def to_json(self) -> str:
         d = {"lsn": str(self.lsn)}
         if self.tx_id is not None:

@@ -68,13 +68,6 @@ class ShardRange:
             return "-"
         return "%s-%s" % (self.start.hex(), self.end.hex())
 
-    def contains(self, keyspace_id: bytes) -> bool:
-        if self.start and keyspace_id < self.start:
-            return False
-        if self.end and keyspace_id >= self.end:
-            return False
-        return True
-
     def covers(self, other: "ShardRange") -> bool:
         lo_ok = not self.start or (other.start and other.start >= self.start)
         hi_ok = not self.end or (other.end and other.end <= self.end)
@@ -199,27 +192,6 @@ class Vgtid:
             self.position(g.shard, g.keyspace) is not None
             and gtid_covers(self.position(g.shard, g.keyspace), g.gtid)
             for g in other.shard_gtids)
-
-    def reshard(self, mapping: dict[str, list[str]],
-                keyspace: str | None = None) -> "Vgtid":
-        """Apply a parent->children reshard: children start at their
-        parent's position (Vitess copies the GTID through the split).
-        ``keyspace`` scopes the mapping — shard names repeat across
-        keyspaces, so a multi-keyspace VGTID must always pass it; a child
-        that already has its own entry keeps it (never clobbered by the
-        parent copy)."""
-        existing = {(g.keyspace, g.shard) for g in self.shard_gtids}
-        out = []
-        for g in self.shard_gtids:
-            if g.shard in mapping and (keyspace is None
-                                       or g.keyspace == keyspace):
-                out += [ShardGtid(g.keyspace, c, g.gtid)
-                        for c in mapping[g.shard]
-                        if (g.keyspace, c) not in existing]
-            else:
-                out.append(g)
-        return Vgtid(tuple(sorted(out, key=lambda g: (g.keyspace, g.shard))))
-
 
 # ---------------------------------------------------------------------------
 # VStream envelope decode (Debezium vitess layout)

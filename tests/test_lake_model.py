@@ -334,7 +334,10 @@ def test_reads_start_no_planning_job(spark, tmp_path):
             self.session = session
 
         def config(self, k, v):
-            self.session.conf.set(k, v)
+            # the Python-worker confs belong to the SparkContext, fixed
+            # when it starts; only the SQL confs apply to a live session
+            if k.startswith("spark.sql."):
+                self.session.conf.set(k, v)
             return self
 
     sink = SnapshotLakeSink(str(tmp_path / "mor"), num_buckets=8, mode="mor")

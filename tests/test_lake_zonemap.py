@@ -786,18 +786,17 @@ class TestRollbackAndTags:
                        F.lit(1).cast("bigint").alias(SEQ_COL)))
         sink.write(tid, upd, schema, batch_id=1)
         sink.compact(spark, tid)
-        assert sink.tag_seq(tid, "v1.0") == s0
+        assert sink.tags(tid)["v1.0"] == s0
         sink.vacuum(tid, keep_last=1)
         # tagged snapshot survived expiration and still reads
         assert s0 in sink.snapshots(tid)
         assert sink.read(spark, tid,
-                         snapshot=sink.tag_seq(tid, "v1.0")).count() == \
+                         snapshot=sink.tags(tid)["v1.0"]).count() == \
             ev.count()
 
     def test_unknown_tag_and_snapshot_raise(self, spark, tmp_path):
         sink, tid, _, _ = _mk(spark, tmp_path, num_buckets=2)
-        with pytest.raises(ValueError, match="unknown tag"):
-            sink.tag_seq(tid, "nope")
+        assert "nope" not in sink.tags(tid)
         with pytest.raises(ValueError, match="unknown snapshot"):
             sink.tag(tid, "x", snapshot=999)
 
@@ -910,81 +909,6 @@ class TestFileExcludedProperty:
         check()
 
 
-class TestMergeAndMaintenance:
-    def test_merge_upserts_and_conditional_deletes(self, spark, tmp_path):
-        sink, tid, schema, ev = _mk(spark, tmp_path, num_buckets=2)
-        patch = (ev.limit(20)
-                 .withColumn("value", F.lit(5.0)))
-        sink.merge(tid, patch, schema, batch_id="m1",
-                   delete_where=F.col("user_id") == 3)
-        out = sink.read(spark, tid)
-        n_del = patch.where(F.col("user_id") == 3).count()
-        assert out.count() == ev.count() - n_del
-        assert out.where(F.col("value") == 5.0).count() == 20 - n_del
-
-    def test_maintenance_triggers_on_delta_pileup(self, spark, tmp_path):
-        sink, tid, schema, ev = _mk(spark, tmp_path, mode="mor",
-                                    num_buckets=2)
-        for i in range(4):
-            churn = (ev.limit(5)
-                     .withColumn("value", F.lit(float(i)))
-                     .select("*", F.lit("+U").alias(OP_COL),
-                             F.lit(i + 1).cast("bigint").alias(SEQ_COL)))
-            sink.write(tid, churn, schema, batch_id=i + 1)
-        m = sink._manifest(tid)
-        n_deltas = sum(len(fs) for fs in (m.get("deltas") or {}).values())
-        assert n_deltas > 3
-        assert sink.maintenance(spark, tid, max_delta_files=3) is True
-        m2 = sink._manifest(tid)
-        assert not m2.get("deltas")
-        assert sink.read(spark, tid).count() == ev.count()
-        # under thresholds: no-op
-        assert sink.maintenance(spark, tid, max_delta_files=3) is False
-
-
-class TestStreamChanges:
-    def test_delta_dir_streams_exactly_once(self, spark, tmp_path):
-        """The MoR changelog consumed as a Structured Streaming file
-        source: first run drains the existing deltas, a second run on the
-        same checkpoint emits ONLY the new commit, compaction re-emits
-        nothing."""
-        sink, tid, schema, ev = _mk(spark, tmp_path, mode="mor",
-                                    num_buckets=2)
-        ckpt = str(tmp_path / "ckpt")
-        seen: list[tuple] = []
-
-        def drain():
-            def collect(bdf, _bid):
-                seen.extend((r["event_id"], r[OP_COL])
-                            for r in bdf.collect())
-
-            q = (sink.stream_changes(spark, tid)
-                 .writeStream.foreachBatch(collect)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        drain()
-        n0 = len(seen)
-        assert n0 == ev.count()  # the initial snapshot commit
-        churn = (ev.limit(7)
-                 .withColumn("value", F.lit(9.0))
-                 .select("*", F.lit("+U").alias(OP_COL),
-                         F.lit(1).cast("bigint").alias(SEQ_COL)))
-        sink.write(tid, churn, schema, batch_id=1)
-        drain()
-        assert len(seen) == n0 + 7
-        assert sum(1 for _, op in seen if op == "+U") == 7
-        sink.compact(spark, tid)
-        drain()
-        assert len(seen) == n0 + 7  # compaction re-emits nothing
-
-    def test_cow_mode_refused(self, spark, tmp_path):
-        sink, tid, _, _ = _mk(spark, tmp_path, mode="cow")
-        with pytest.raises(ValueError, match="mor"):
-            sink.stream_changes(spark, tid)
-
-
 class TestReadChangesMixedRange:
     def test_deltas_plus_compaction_in_range_falls_back_to_diff(
             self, spark, tmp_path):
@@ -1039,12 +963,6 @@ class TestLayoutAuthority:
         with pytest.raises(ValueError, match="mode"):
             SnapshotLakeSink.for_table(sink.root, tid, mode="cow")
 
-    def test_merge_refuses_envelope_columns(self, spark, tmp_path):
-        sink, tid, schema, ev = _mk(spark, tmp_path, num_buckets=2)
-        bad = ev.limit(3).withColumn(OP_COL, F.lit("+I"))
-        with pytest.raises(ValueError, match="envelope-free"):
-            sink.merge(tid, bad, schema, batch_id="m9")
-
     def test_point_lookup_survives_mistyped_batch(self, spark, tmp_path):
         """Bucket placement derives from the TABLE SCHEMA, not a batch's
         incidental dtypes: a batch arriving with a string-typed PK still
@@ -1066,7 +984,7 @@ class TestFlussRouting:
         """YAML type=fluss routes to the MoR lake table — fluss PK tables
         ARE a log (append-only changelog) + kv (merged-by-key) pair: the
         pipeline's commits land as delta files only, read() is the kv
-        view, stream_changes() subscribes to the log."""
+        view."""
         from source_flink_cdc_3_5_0_spark.pipeline import (PipelineComposer,
                                                            parse_yaml_pipeline)
         from source_flink_cdc_3_5_0_spark.sinks.lakehouse import \
@@ -1095,36 +1013,3 @@ route:
         kv = sink.read(spark, tid)  # kv: merged view
         want = spark.read.parquet(f"{SF}/nation.parquet")
         assert kv.count() == want.count()
-        assert sink.stream_changes(spark, tid) is not None  # log subscribe
-
-
-class TestAsOfTimestamp:
-    def test_as_of_resolves_the_snapshot_current_at_time(self, spark,
-                                                         tmp_path):
-        """FOR SYSTEM_TIME AS OF: wall-clock between two commits resolves
-        to the earlier snapshot; before the first commit raises."""
-        import time
-
-        sink, tid, schema, ev = _mk(spark, tmp_path, num_buckets=2)
-        s0 = sink.snapshots(tid)[-1]
-        t_before = sink._manifest(tid, s0)["committed_at"] - 1.0
-        time.sleep(0.05)
-        t_mid = time.time()
-        time.sleep(0.05)
-        upd = (ev.limit(5)
-               .withColumn("value", F.lit(1.0))
-               .select("*", F.lit("+U").alias(OP_COL),
-                       F.lit(1).cast("bigint").alias(SEQ_COL)))
-        sink.write(tid, upd, schema, batch_id=1)
-        s1 = sink.snapshots(tid)[-1]
-        assert sink.snapshot_as_of(tid, t_mid) == s0
-        assert sink.snapshot_as_of(tid, time.time()) == s1
-        import datetime as dt2
-        assert sink.snapshot_as_of(
-            tid, dt2.datetime.fromtimestamp(t_mid)) == s0
-        with pytest.raises(ValueError, match="no snapshot existed"):
-            sink.snapshot_as_of(tid, t_before)
-        # reads through the resolved seq see the pre-update state
-        old = sink.read(spark, tid,
-                        snapshot=sink.snapshot_as_of(tid, t_mid))
-        assert old.where(F.col("value") == 1.0).count() == 0

@@ -310,8 +310,8 @@ def test_rows_fuzz_roundtrip(script):
 
 
 def test_offset_non_stopping_is_max():
-    ns, fp = BinlogOffset.of_non_stopping(), \
-        BinlogOffset.of_file_position("mysql-bin.000009", 10 ** 9)
+    ns, fp = BinlogOffset.of(kind="NON_STOPPING"), \
+        BinlogOffset.of(file="mysql-bin.000009", pos=10 ** 9)
     assert ns.compare(ns) == 0
     assert ns.compare(fp) == 1
     assert fp.compare(ns) == -1
@@ -326,14 +326,14 @@ def test_offset_gtid_comparison():
     a3 = BinlogOffset.of(file="", pos=0, gtids=f"{UUID}:1-5", event=7)
     assert a2.compare(a3) == -1
     # this has gtids, target does not -> this is AFTER (reference semantics)
-    fp = BinlogOffset.of_file_position("mysql-bin.000001", 4)
+    fp = BinlogOffset.of(file="mysql-bin.000001", pos=4)
     assert a.compare(fp) == 1 and fp.compare(a) == -1
 
 
 def test_offset_file_position_comparison():
-    a = BinlogOffset.of_file_position("mysql-bin.000001", 100)
-    b = BinlogOffset.of_file_position("MYSQL-BIN.000001", 200)  # case-insensitive
-    c = BinlogOffset.of_file_position("mysql-bin.000002", 4)
+    a = BinlogOffset.of(file="mysql-bin.000001", pos=100)
+    b = BinlogOffset.of(file="MYSQL-BIN.000001", pos=200)  # case-insensitive
+    c = BinlogOffset.of(file="mysql-bin.000002", pos=4)
     assert a.compare(b) == -1 and b.compare(c) == -1 and a.compare(a) == 0
     # different server ids with both timestamps -> timestamp decides
     x = BinlogOffset.of(file="a.1", pos=500, server_id=1, ts_sec=100)
@@ -342,7 +342,7 @@ def test_offset_file_position_comparison():
     # row/event tie-breaks
     e1 = BinlogOffset.of(file="a.1", pos=10, event=1, row=2)
     e2 = BinlogOffset.of(file="a.1", pos=10, event=1, row=5)
-    assert e1.compare(e2) == -1 and e1.is_before(e2) and e1.is_at_or_before(e1)
+    assert e1.compare(e2) == -1 and e1.compare(e1) == 0
 
 
 def test_offset_json_roundtrip():
@@ -381,8 +381,8 @@ def test_offset_filename_ordinal_rollover():
     """mysql-bin.1000000 follows mysql-bin.999999 (numeric-suffix-aware
     comparison — pure lexical order inverts here and would freeze the
     persisted offset's monotone clamp)."""
-    a = BinlogOffset.of_file_position("mysql-bin.999999", 500)
-    b = BinlogOffset.of_file_position("mysql-bin.1000000", 4)
+    a = BinlogOffset.of(file="mysql-bin.999999", pos=500)
+    b = BinlogOffset.of(file="mysql-bin.1000000", pos=4)
     assert a.compare(b) == -1 and b.compare(a) == 1
 
 

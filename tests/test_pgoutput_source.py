@@ -324,7 +324,6 @@ def test_postgres_offset_parity():
     assert a.compare(b) == -1 and b.compare(a) == 1
     assert a.compare(PostgresOffset(100, 99)) == 0  # LSN alone orders
     assert PostgresOffset.no_stopping().compare(b) == 1
-    assert PostgresOffset((0xAB << 32) | 0xCD).lsn_text == "AB/CD"
     o = PostgresOffset(77, 12, 1_700_000_000_000_000)
     assert PostgresOffset.from_json(o.to_json()) == o
 

@@ -138,14 +138,6 @@ class TestSelectorsAndRoutes:
             TableId.parse("a.a.t1"), TableId.parse("a.a.all"))
         assert r.route(TableId.parse("other.db.t")) == (TableId.parse("other.db.t"),)
 
-    def test_merge_groups(self):
-        r = TableIdRouter([RouteRule("ns.db.TABLE\\.*", "ns.db.merged")])
-        groups = r.merge_groups([TableId.parse("ns.db.TABLEA"), TableId.parse("ns.db.TABLEB")])
-        assert groups == {
-            TableId.parse("ns.db.merged"): [TableId.parse("ns.db.TABLEA"),
-                                            TableId.parse("ns.db.TABLEB")]
-        }
-
 
 class TestRegistry:
     def test_versioning_and_checkpoint(self, tmp_path):
